@@ -1,5 +1,5 @@
 """SCD2 batch pipeline: validate → intervalize → two-phase merge into a
-versioned Parquet table.
+versioned Parquet table, committed atomically.
 
 Re-derives the reference's E1/E2 lifecycles (SURVEY.md §3:
 extract → validate(+quarantine) → transform(window) → 2-phase merge →
@@ -11,10 +11,19 @@ stale-event guard that keeps the single-current invariant under
 superset re-runs (the reference's Phase A/B split can double-open a
 key there; see tests/test_scd2_pipeline.py).
 
+One commit per batch: Phase A (close the current rows of changed keys)
+and Phase B (insert the new version rows) both stage their files
+against one pinned table snapshot and land together in a single
+``SCD2_MERGE`` commit. Every committed version is a consistent SCD2
+state, and a failure anywhere before the commit leaves the previous
+version. (The reference ran Phase A and Phase B as two Delta MERGEs,
+so its history holds a version between them in which every updated key
+has no current row — a documented divergence.)
+
 Scale story (the levers that matter at 100 TB):
   * Phase A touches only the partitions holding the current rows of
     *changed* keys — partition-scoped CoW, cost ∝ changed data.
-  * Phase B is append-only (no rewrite at all).
+  * Phase B only adds files (no rewrite at all).
   * Change detection joins staged×current on the key — broadcast when
     the batch is small, AQE-planned shuffle otherwise.
   * The idempotency anti-join reads only (key, valid_from) columns —
@@ -24,6 +33,8 @@ Scale story (the levers that matter at 100 TB):
 from __future__ import annotations
 
 import time
+import uuid
+import warnings
 from collections.abc import Sequence
 from dataclasses import dataclass, field
 
@@ -32,7 +43,10 @@ from pyspark.sql import functions as F
 
 from delta_lake_pyspark_scd2_spark.functions import partition_cols_from
 from delta_lake_pyspark_scd2_spark.operators import scd2, validation
-from delta_lake_pyspark_scd2_spark.sources.vtable import VersionedParquetTable
+from delta_lake_pyspark_scd2_spark.sources.vtable import (
+    StagedWrite,
+    VersionedParquetTable,
+)
 
 
 @dataclass(frozen=True)
@@ -215,10 +229,16 @@ def _observed_long(obs: Observation, key: str) -> int | None:
     empty-relation propagation elided the CollectMetrics node — the
     round-10 rejected-variant failure mode) so the caller can fall back
     to an explicit action. ``Observation.get`` would BLOCK forever in
-    the elided case; the JVM-side ``getRowOrEmpty`` does not."""
+    the elided case; the JVM-side ``getRowOrEmpty`` does not.
+
+    The read goes through private pyspark APIs (pinned 4.1.2); when it
+    fails for any reason other than an empty metrics row, the fallback
+    costs every merge an extra job, so it warns; the default warning
+    filter shows that once per call site and failure type."""
     try:
         jopt = obs._jo.getRowOrEmpty()
-        if not jopt.isDefined():
+        # an elided node completes with no row, or with an EMPTY one
+        if not jopt.isDefined() or jopt.get().length() == 0:
             return None
         from pyspark.serializers import CPickleSerializer
 
@@ -226,12 +246,15 @@ def _observed_long(obs: Observation, key: str) -> int | None:
             obs._jvm, "org.apache.spark.sql.api.python.PythonSQLUtils"
         )
         row = CPickleSerializer().loads(utils.toPyRow(jopt.get()))
-        d = row.asDict(recursive=False)
-        if key not in d:
-            return None
-        v = d[key]
+        v = row.asDict(recursive=False)[key]
         return 0 if v is None else int(v)
-    except Exception:
+    except Exception as e:  # noqa: BLE001 — any pyspark-internals drift
+        warnings.warn(
+            f"Observation read failed ({type(e).__name__}); falling back "
+            "to an explicit count job",
+            RuntimeWarning,
+            stacklevel=2,
+        )
         return None
 
 
@@ -305,103 +328,106 @@ def run_scd2_batch(
             ).otherwise(F.col(validation.DISCARD_COL)),
         )
     tagged = tagged.persist()
-    kept, discarded = validation.split_valid(tagged)
+    try:
+        kept, discarded = validation.split_valid(tagged)
 
-    # With skew profiling on, the DQ tallies and the merge's key-count
-    # profile fold out of ONE per-key aggregation instead of a flat DQ
-    # agg plus a dedicated profile job (round-9 directive #5) — the
-    # pre-flight becomes free relative to the validation pass.
-    def _dq_compute() -> tuple[dict, dict | None]:
-        if spec.skew_policy != "off":
-            return validation.dq_metrics_with_key_profile(
-                tagged, list(spec.key_cols)
+        # With skew profiling on, the DQ tallies and the merge's key-count
+        # profile fold out of ONE per-key aggregation instead of a flat DQ
+        # agg plus a dedicated profile job (round-9 directive #5) — the
+        # pre-flight becomes free relative to the validation pass.
+        def _dq_compute() -> tuple[dict, dict | None]:
+            if spec.skew_policy != "off":
+                return validation.dq_metrics_with_key_profile(
+                    tagged, list(spec.key_cols)
+                )
+            return validation.dq_metrics(tagged), None
+
+        def _write_quarantine(dq: dict) -> None:
+            if quarantine_path is not None and dq["n_total"] > dq["n_kept"]:
+                discarded.write.mode("overwrite").parquet(
+                    f"{quarantine_path}/batch={batch_id}"
+                )
+
+        creating = not VersionedParquetTable.is_table(table_path)
+        key_profile: dict | None = None
+        dq: dict = {}
+        if not creating:
+            # the merge needs the key-count profile BEFORE planning the
+            # batch×current join (skew pre-flight), so DQ stays inline here
+            dq, key_profile = _dq_compute()
+            _write_quarantine(dq)
+        metrics_val_s = round(time.time() - t0, 3)
+
+        # -- merge ----------------------------------------------------------
+        t1 = time.time()
+        if spec.late_policy == "rebuild":
+            _append_event_log(spec, kept, table_path, batch_id)
+        if creating:
+            # Initial load: the DQ aggregation and the table write are
+            # independent consumers of the tagged cache — overlap them
+            # (guide §2.6) instead of paying the validation aggregation as
+            # a serial prefix of the load. The quarantine write (gated on
+            # the DQ counts) lands after the create commit — i.e. on the
+            # CREATE path quarantine durability is guaranteed only after a
+            # successful create (round-10 ADVICE, documented contract: a
+            # failed create aborts the whole load and the batch is
+            # re-submitted, so nothing is lost, merely not yet
+            # quarantined); the merge path keeps DQ (and quarantine)
+            # strictly before any table mutation.
+            from concurrent.futures import ThreadPoolExecutor
+
+            pool = ThreadPoolExecutor(max_workers=1)
+            dq_fut = pool.submit(_dq_compute)
+            try:
+                versions = _prepare_versions(spec, kept)
+                # count rides the initial write job (observe) — recomputing
+                # the whole versions plan for a count would double the cost
+                obs = Observation("scd2_create")
+                versions = versions.observe(
+                    obs, F.count(F.lit(1)).alias("n_inserted")
+                )
+                VersionedParquetTable.create(
+                    spark,
+                    versions,
+                    table_path,
+                    partition_cols=spec.partition_cols,
+                    metrics={"batch_id": batch_id},
+                    # partition layout as GENERATED columns: the table
+                    # itself re-derives/validates y/m/d from valid_from on
+                    # every write path, so no future writer can land a
+                    # version row in the wrong partition (the pruning in
+                    # Phases A/B relies on it)
+                    generated_cols={
+                        f"{spec.partition_prefix}_year": "year(valid_from)",
+                        f"{spec.partition_prefix}_month": "month(valid_from)",
+                        f"{spec.partition_prefix}_day": "dayofmonth(valid_from)",
+                    },
+                )
+            finally:
+                pool.shutdown(wait=True)
+            dq, _ = dq_fut.result()
+            _write_quarantine(dq)
+            merge_part: dict = {
+                "n_inserted": int(obs.get["n_inserted"] or 0),
+                "n_closed": 0,
+                "n_stale": 0,
+            }
+        else:
+            table = VersionedParquetTable(spark, table_path)
+            merge_part = _merge_batch(
+                spec, table, kept, batch_id, key_profile=key_profile
             )
-        return validation.dq_metrics(tagged), None
-
-    def _write_quarantine(dq: dict) -> None:
-        if quarantine_path is not None and dq["n_total"] > dq["n_kept"]:
-            discarded.write.mode("overwrite").parquet(
-                f"{quarantine_path}/batch={batch_id}"
-            )
-
-    creating = not VersionedParquetTable.is_table(table_path)
-    key_profile: dict | None = None
-    dq: dict = {}
-    if not creating:
-        # the merge needs the key-count profile BEFORE planning the
-        # batch×current join (skew pre-flight), so DQ stays inline here
-        dq, key_profile = _dq_compute()
-        _write_quarantine(dq)
-    metrics_val_s = round(time.time() - t0, 3)
-
-    # -- merge --------------------------------------------------------------
-    t1 = time.time()
-    if spec.late_policy == "rebuild":
-        _append_event_log(spec, kept, table_path, batch_id)
-    if creating:
-        # Initial load: the DQ aggregation and the table write are
-        # independent consumers of the tagged cache — overlap them
-        # (guide §2.6) instead of paying the validation aggregation as
-        # a serial prefix of the load. The quarantine write (gated on
-        # the DQ counts) lands after the create commit — i.e. on the
-        # CREATE path quarantine durability is guaranteed only after a
-        # successful create (round-10 ADVICE, documented contract: a
-        # failed create aborts the whole load and the batch is
-        # re-submitted, so nothing is lost, merely not yet
-        # quarantined); the merge path keeps DQ (and quarantine)
-        # strictly before any table mutation.
-        from concurrent.futures import ThreadPoolExecutor
-
-        pool = ThreadPoolExecutor(max_workers=1)
-        dq_fut = pool.submit(_dq_compute)
-        try:
-            versions = _prepare_versions(spec, kept)
-            # count rides the initial write job (observe) — recomputing
-            # the whole versions plan for a count would double the cost
-            obs = Observation("scd2_create")
-            versions = versions.observe(
-                obs, F.count(F.lit(1)).alias("n_inserted")
-            )
-            VersionedParquetTable.create(
-                spark,
-                versions,
-                table_path,
-                partition_cols=spec.partition_cols,
-                metrics={"batch_id": batch_id},
-                # partition layout as GENERATED columns: the table
-                # itself re-derives/validates y/m/d from valid_from on
-                # every write path, so no future writer can land a
-                # version row in the wrong partition (the pruning in
-                # Phases A/B relies on it)
-                generated_cols={
-                    f"{spec.partition_prefix}_year": "year(valid_from)",
-                    f"{spec.partition_prefix}_month": "month(valid_from)",
-                    f"{spec.partition_prefix}_day": "dayofmonth(valid_from)",
-                },
-            )
-        finally:
-            pool.shutdown(wait=True)
-        dq, _ = dq_fut.result()
-        _write_quarantine(dq)
-        merge_part: dict = {
-            "n_inserted": int(obs.get["n_inserted"] or 0),
-            "n_closed": 0,
-            "n_stale": 0,
-        }
-    else:
-        table = VersionedParquetTable(spark, table_path)
-        merge_part = _merge_batch(
-            spec, table, kept, batch_id, key_profile=key_profile
-        )
-    # canonical key order (dq before durations, merge keys after) so
-    # the metrics CSV header is identical whichever path ran and
-    # whenever the DQ future resolved
-    metrics.update(dq)
-    metrics["duration_s_validation"] = metrics_val_s
-    metrics.update(merge_part)
-    metrics["duration_s_merge"] = round(time.time() - t1, 3)
-    metrics["duration_s_total"] = round(time.time() - t0, 3)
-    tagged.unpersist()
+        # canonical key order (dq before durations, merge keys after) so
+        # the metrics CSV header is identical whichever path ran and
+        # whenever the DQ future resolved
+        metrics.update(dq)
+        metrics["duration_s_validation"] = metrics_val_s
+        metrics.update(merge_part)
+        metrics["duration_s_merge"] = round(time.time() - t1, 3)
+        metrics["duration_s_total"] = round(time.time() - t0, 3)
+    finally:
+        # released on every path, a failed merge included
+        tagged.unpersist()
     return metrics
 
 
@@ -413,8 +439,16 @@ def _merge_batch(
     *,
     key_profile: dict | None = None,
 ) -> dict:
-    """Two-phase SCD2 merge (reference Phase A/B,
-    src/header_etl.py:144-280) on the versioned table.
+    """SCD2 merge (reference Phase A/B, src/header_etl.py:144-280) on the
+    versioned table, committed ONCE.
+
+    Phase A closes the current rows of changed keys; Phase B inserts the
+    new version rows. Both read one pinned snapshot, stage their files,
+    and land in a single ``SCD2_MERGE`` commit — so no reader, time
+    travel or crash ever sees a version in which an updated key has no
+    current row. (The reference ran two Delta MERGEs; documented
+    divergence.) Any failure before that commit leaves the table at its
+    previous version and releases every persisted frame.
 
     Correctness refinements over the reference (documented divergences):
       * events at or before the key's current ``valid_from`` are *stale*
@@ -427,29 +461,31 @@ def _merge_batch(
     """
     keys = list(spec.key_cols)
     ts = spec.event_ts_col
+    # the snapshot every read below pins and the commit rebases from
+    base = table._current()
 
     # Phases A and B derive touched partitions *arithmetically* from
     # valid_from under THIS spec's partition scheme; that is only sound
     # if the table on disk was partitioned the same way. Fail fast on a
     # spec/manifest mismatch instead of silently pruning to the wrong
     # partitions and missing closes.
-    table_pc = table.partition_columns()
-    if table_pc != list(spec.partition_cols):
+    if list(base["partition_cols"]) != list(spec.partition_cols):
         raise ValueError(
             f"SCD2 spec partition_cols {list(spec.partition_cols)} do not "
-            f"match table manifest partition_cols {table_pc} at {table.path}; "
-            "merge's partition pruning would be unsound under a different "
-            "scheme. Recreate the table or align spec.partition_prefix."
+            f"match table manifest partition_cols {base['partition_cols']} "
+            f"at {table.path}; merge's partition pruning would be unsound "
+            "under a different scheme. Recreate the table or align "
+            "spec.partition_prefix."
         )
 
     tracked = spec.effective_tracked
     # Current rows via manifest data skipping: files whose footer says
     # max(is_current)=false (fully-closed histories) never enter the
-    # scan. Phase-B appends are all-current and Phase-A rewrites mix,
-    # so over time old day-partitions go all-closed and drop out — the
-    # per-batch current-row scan tracks the LIVE key count, not the
-    # total version-row count.
-    cur_src = table.read_where([("is_current", "=", True)])
+    # scan. Inserts are all-current and closes mix, so over time old
+    # day-partitions go all-closed and drop out — the per-batch
+    # current-row scan tracks the LIVE key count, not the total
+    # version-row count.
+    cur_src = table.read_where([("is_current", "=", True)], base["version"])
     if spec.evolve_schema:
         cur_src = _pad_columns(cur_src, kept)
     # ONE batch×current join per merge (round-10 optimization, guide
@@ -486,320 +522,225 @@ def _merge_batch(
         hot_split_join,
     )
 
-    # profile normally piggybacked on the validation pass's per-key
-    # aggregation (run_scd2_batch, round-9 directive #5); the
-    # dedicated job inside decide_hot_keys is the fallback for direct
-    # _merge_batch callers
-    hot_df, _, n_hot_keys = decide_hot_keys(
-        kept,
-        keys,
-        policy=spec.skew_policy,
-        hot_rows=spec.skew_hot_rows,
-        ratio=spec.skew_ratio,
-        profile=key_profile,
-    )
-
-    def _left_join_current(left: DataFrame, right: DataFrame) -> DataFrame:
-        if hot_df is None:
-            return left.join(right, on=keys, how="left")
-        return hot_split_join(left, right, keys, hot=hot_df, how="left")
-
-    prior_events: DataFrame | None = None
-    if spec.late_policy == "rebuild":
-        spark = kept.sparkSession
-        # classification reads only the compact watermark files (∝
-        # distinct keys per batch); the full event log is touched on
-        # the rebuild path alone
-        seen = _read_key_watermarks(spark, spec, table.path, exclude_batch=batch_id)
-        prior_events = _read_event_log(spark, table.path, exclude_batch=batch_id)
-        if prior_events is None:  # pre-log table: version rows as events
-            existing = table.read()
-            if spec.evolve_schema:
-                existing = _pad_columns(existing, kept)
-            prior_events = existing.select(*kept.columns)
-        if seen is None:
-            seen = prior_events.groupBy(*keys).agg(F.max(ts).alias("__max_seen"))
-        staged = _left_join_current(_left_join_current(kept, current), seen)
-        is_new_key = F.col("__cur_from").isNull()
-        is_fresh = F.col("__max_seen").isNull() | (F.col(ts) > F.col("__max_seen"))
-    else:
-        staged = _left_join_current(kept, current)
-        is_new_key = F.col("__cur_from").isNull()
-        is_fresh = F.col(ts) > F.col("__cur_from")
-    # The stale count rides the staged cache's materialization as an
-    # Observation INSIDE the persisted plan (round-11, guide §5 "the
-    # driver is a single process"): it fires exactly once, on the
-    # first action that fills the cache (the `touched` collect below),
-    # so the dedicated `late.count()` job — previously a full serial
-    # prefix of Phase A — disappears. when/otherwise (not a bare
-    # cast) so NULL predicates count as 0, exactly like filter().
-    import uuid as _uuid
-
-    stale_obs = Observation(f"scd2_stale_{_uuid.uuid4().hex[:8]}")
-    staged = staged.observe(
-        stale_obs,
-        F.sum(
-            F.when(~is_new_key & ~is_fresh, F.lit(1)).otherwise(F.lit(0))
-        ).alias("n_stale"),
-    ).persist()
-    t_a = time.time()
-    helper_cols = [
-        c
-        for c in staged.columns
-        if c in ("__cur_from", "__max_seen") or c.startswith("__curv_")
-    ]
-    late = staged.filter(~is_new_key & ~is_fresh).drop(*helper_cols)
-    usable = staged.filter(is_new_key | is_fresh).drop(*helper_cols)
-
-    # Null-safe change detection + first changing event per key
-    # (J1 + P6 + A1) as a pure filter+aggregate over staged: a usable
-    # existing-key event row changes iff any tracked value differs
-    # null-safely from the carried current value (same predicate
-    # scd2.detect_changes applies after its join — here the join
-    # already happened once, in staged). One row per changed key with
-    # the first changing event's ts; the current row's valid_from
-    # rides along so Phase A's touched partitions derive from
-    # `changed` alone — no table re-scan, no second join.
-    any_change = F.lit(False)
-    for c in tracked:
-        any_change = any_change | scd2.null_safe_neq(
-            F.col(c), F.col(f"__curv_{c}")
+    # every frame persisted below; the finally releases them whatever
+    # happens, on the Phase-B thread too
+    cached: list[DataFrame] = []
+    try:
+        # profile normally piggybacked on the validation pass's per-key
+        # aggregation (run_scd2_batch, round-9 directive #5); the
+        # dedicated job inside decide_hot_keys is the fallback for
+        # direct _merge_batch callers
+        hot_df, _, n_hot_keys = decide_hot_keys(
+            kept,
+            keys,
+            policy=spec.skew_policy,
+            hot_rows=spec.skew_hot_rows,
+            ratio=spec.skew_ratio,
+            profile=key_profile,
         )
-    changed = (
-        staged.filter(~is_new_key & is_fresh & any_change)
-        .groupBy(*keys)
-        .agg(
-            F.min(ts).alias("first_change_ts"),
-            F.min("__cur_from").alias("__cur_from"),
+        if hot_df is not None:
+            cached.append(hot_df)
+
+        def _left_join_current(left: DataFrame, right: DataFrame) -> DataFrame:
+            if hot_df is None:
+                return left.join(right, on=keys, how="left")
+            return hot_split_join(left, right, keys, hot=hot_df, how="left")
+
+        prior_events: DataFrame | None = None
+        if spec.late_policy == "rebuild":
+            spark = kept.sparkSession
+            # classification reads only the compact watermark files (∝
+            # distinct keys per batch); the full event log is touched
+            # on the rebuild path alone
+            seen = _read_key_watermarks(spark, spec, table.path, exclude_batch=batch_id)
+            prior_events = _read_event_log(spark, table.path, exclude_batch=batch_id)
+            if prior_events is None:  # pre-log table: version rows as events
+                existing = table.read(base["version"])
+                if spec.evolve_schema:
+                    existing = _pad_columns(existing, kept)
+                prior_events = existing.select(*kept.columns)
+            if seen is None:
+                seen = prior_events.groupBy(*keys).agg(F.max(ts).alias("__max_seen"))
+            staged = _left_join_current(_left_join_current(kept, current), seen)
+            is_new_key = F.col("__cur_from").isNull()
+            is_fresh = F.col("__max_seen").isNull() | (F.col(ts) > F.col("__max_seen"))
+        else:
+            staged = _left_join_current(kept, current)
+            is_new_key = F.col("__cur_from").isNull()
+            is_fresh = F.col(ts) > F.col("__cur_from")
+        # The stale count rides the staged cache's materialization as an
+        # Observation INSIDE the persisted plan (round-11, guide §5 "the
+        # driver is a single process"): it fires exactly once, on the
+        # first action that fills the cache (the `touched` collect
+        # below), so no dedicated `late.count()` job runs.
+        # when/otherwise (not a bare cast) so NULL predicates count as
+        # 0, exactly like filter().
+        stale_obs = Observation(f"scd2_stale_{uuid.uuid4().hex[:8]}")
+        staged = staged.observe(
+            stale_obs,
+            F.sum(
+                F.when(~is_new_key & ~is_fresh, F.lit(1)).otherwise(F.lit(0))
+            ).alias("n_stale"),
+        ).persist()
+        cached.append(staged)
+        t_a = time.time()
+        helper_cols = [
+            c
+            for c in staged.columns
+            if c in ("__cur_from", "__max_seen") or c.startswith("__curv_")
+        ]
+        late = staged.filter(~is_new_key & ~is_fresh).drop(*helper_cols)
+        usable = staged.filter(is_new_key | is_fresh).drop(*helper_cols)
+
+        # Null-safe change detection + first changing event per key
+        # (J1 + P6 + A1) as a pure filter+aggregate over staged: a
+        # usable existing-key event row changes iff any tracked value
+        # differs null-safely from the carried current value (same
+        # predicate scd2.detect_changes applies after its join — here
+        # the join already happened once, in staged). One row per
+        # changed key with the first changing event's ts; the current
+        # row's valid_from rides along so Phase A's touched partitions
+        # derive from `changed` alone — no table re-scan, no second
+        # join.
+        any_change = F.lit(False)
+        for c in tracked:
+            any_change = any_change | scd2.null_safe_neq(
+                F.col(c), F.col(f"__curv_{c}")
+            )
+        changed = (
+            staged.filter(~is_new_key & is_fresh & any_change)
+            .groupBy(*keys)
+            .agg(
+                F.min(ts).alias("first_change_ts"),
+                F.min("__cur_from").alias("__cur_from"),
+            )
+            .persist()
         )
-        .persist()
-    )
+        cached.append(changed)
 
-    # Phase A — close current rows of changed keys at first_change_ts,
-    # rewriting only the partitions those rows live in. Touched
-    # partitions come from the carried current-row valid_from by pure
-    # date arithmetic over the (small, persisted) changed set. No forced
-    # broadcast of `changed`: its size is data-dependent (≤ all keys in
-    # the batch) — AQE picks broadcast when it is actually small and
-    # falls back to a shuffle join when it is not.
-    closed = 0
-    close_parts = partition_cols_from(
-        changed.filter(F.col("first_change_ts") > F.col("__cur_from")).select(
-            F.col("__cur_from").alias("valid_from")
-        ),
-        "valid_from",
-        spec.partition_prefix,
-    )
-    # this collect materializes the `staged` AND `changed` caches (its
-    # plan scans every staged partition), fires the stale Observation,
-    # and pins every staged row before any table mutation below — the
-    # single serial prefix of Phase A
-    touched = [
-        {k: str(r[k]) for k in spec.partition_cols}
-        for r in close_parts.select(*spec.partition_cols).distinct().collect()
-    ]
-    # Guarded read (round-10's rejected variant showed AQE's
-    # empty-relation propagation can complete a query without its
-    # CollectMetrics row): non-blocking getRowOrEmpty, falling back to
-    # an explicit count — cheap now, the cache is materialized.
-    n_stale = _observed_long(stale_obs, "n_stale")
-    if n_stale is None:
-        n_stale = late.count()
-
-    # Phase B's COMPUTE overlapped with Phase A's write (guide §2.6:
-    # actions are only sequential because the driver calls them
-    # sequentially). Safe because Phase A never changes any
-    # (key, valid_from) pair — "rewrite" flips valid_to/is_current/
-    # closed_by_batch in place, "dv" kills rows while appending closed
-    # copies with the SAME (key, valid_from) — so the idempotency
-    # anti-join is invariant under A's commit and is planned against
-    # the explicitly pinned pre-A manifest version (read_partitions
-    # resolves its file list eagerly). Only the append COMMIT orders
-    # after A: committing B first would let A's partition rewrite
-    # (planned over pre-B files) drop B's freshly appended rows.
-    v_pre = table.latest_version()
-
-    def _phase_b_compute() -> tuple[DataFrame, DataFrame, int]:
-        # insert version rows from the first change onward for changed
-        # keys plus everything for new keys; idempotency key =
-        # (key, valid_from) anti-join (reference src/header_etl.py:
-        # 247-280). New keys read straight off the staged frame (null
-        # __cur_from ⇔ the left join found no current row).
-        new_key_events = staged.filter(is_new_key).drop(*helper_cols)
-        changed_events = (
-            usable.join(changed, on=keys, how="inner")
-            .filter(F.col(ts) >= F.col("first_change_ts"))
-            .drop("first_change_ts", "__cur_from")
+        # Phase A scope: the partitions holding the current rows of
+        # changed keys, by pure date arithmetic over the (small,
+        # persisted) changed set. No forced broadcast of `changed`: its
+        # size is data-dependent (≤ all keys in the batch) — AQE picks
+        # broadcast when it is actually small and falls back to a
+        # shuffle join when it is not.
+        close_parts = partition_cols_from(
+            changed.filter(F.col("first_change_ts") > F.col("__cur_from")).select(
+                F.col("__cur_from").alias("valid_from")
+            ),
+            "valid_from",
+            spec.partition_prefix,
         )
-        to_version = new_key_events.unionByName(changed_events)
-        # Persisted: feeds the partition-scope collect AND the
-        # anti-join — without it the collapse+intervalize windows run
-        # twice.
-        versions = _prepare_versions(spec, to_version).persist()
-        # Idempotency conflicts share (key, valid_from), and the
-        # partition columns are a pure function of valid_from — so a
-        # conflicting existing row can only live in a partition some
-        # incoming version also maps to. Scope the anti-join's right
-        # side to exactly those partitions (manifest-pruned scan)
-        # instead of the whole table: per-batch cost stays ∝ batch
-        # footprint as the table grows 100×.
-        inserts: DataFrame | None = None
-        try:
+        # this collect materializes the `staged` AND `changed` caches
+        # (its plan scans every staged partition) and fires the stale
+        # Observation — the single serial prefix of the merge
+        touched = [
+            {k: str(r[k]) for k in spec.partition_cols}
+            for r in close_parts.select(*spec.partition_cols).distinct().collect()
+        ]
+        # Guarded read (round-10's rejected variant showed AQE's
+        # empty-relation propagation can complete a query without its
+        # CollectMetrics row): non-blocking getRowOrEmpty, falling back
+        # to an explicit count — cheap now, the cache is materialized.
+        n_stale = _observed_long(stale_obs, "n_stale")
+        if n_stale is None:
+            n_stale = late.count()
+
+        def _phase_b() -> tuple[StagedWrite | None, int]:
+            # insert version rows from the first change onward for
+            # changed keys plus everything for new keys; idempotency
+            # key = (key, valid_from) anti-join (reference
+            # src/header_etl.py:247-280). New keys read straight off the
+            # staged frame (null __cur_from ⇔ the left join found no
+            # current row).
+            new_key_events = staged.filter(is_new_key).drop(*helper_cols)
+            changed_events = (
+                usable.join(changed, on=keys, how="inner")
+                .filter(F.col(ts) >= F.col("first_change_ts"))
+                .drop("first_change_ts", "__cur_from")
+            )
+            # Persisted: feeds the partition-scope collect AND the
+            # anti-join — without it the collapse+intervalize windows
+            # run twice.
+            versions = _prepare_versions(
+                spec, new_key_events.unionByName(changed_events)
+            ).persist()
+            cached.append(versions)
+            # Idempotency conflicts share (key, valid_from), and the
+            # partition columns are a pure function of valid_from — so
+            # a conflicting existing row can only live in a partition
+            # some incoming version also maps to. Scope the anti-join's
+            # right side to exactly those partitions (manifest-pruned
+            # scan) instead of the whole table: per-batch cost stays ∝
+            # batch footprint as the table grows 100×.
             ins_touched = [
                 {k: str(r[k]) for k in spec.partition_cols}
-                for r in versions.select(*spec.partition_cols)
-                .distinct()
-                .collect()
+                for r in versions.select(*spec.partition_cols).distinct().collect()
             ]
             existing_keys = table.read_partitions(
-                ins_touched, version=v_pre
+                ins_touched, base["version"]
             ).select(*keys, "valid_from")
             inserts = versions.join(
                 existing_keys, on=[*keys, "valid_from"], how="left_anti"
             ).persist()
-            # the count materializes the cache (the append replays it)
-            # and is the exact insert count — the append no longer
-            # needs an Observation riding its write
-            return versions, inserts, inserts.count()
-        except BaseException:
-            # release this thread's persists on ANY failure so an
-            # aborted merge leaves no cache entries behind
-            versions.unpersist()
-            if inserts is not None:
-                inserts.unpersist()
-            raise
+            cached.append(inserts)
+            # the count materializes the cache the write replays, and is
+            # the exact insert count
+            n_inserted = inserts.count()
+            if not n_inserted:
+                return None, 0
+            insert = table.stage_write(
+                inserts, base=base, merge_schema=spec.evolve_schema
+            )
+            # not a blind append: the anti-join read these partitions
+            insert.reads = ins_touched
+            return insert, n_inserted
 
-    from concurrent.futures import ThreadPoolExecutor
+        # Phase B (compute AND staging) overlaps Phase A's staging
+        # (guide §2.6: actions are only sequential because the driver
+        # calls them sequentially). Both read the pinned snapshot and
+        # stage uncommitted files, so neither can see the other's
+        # output; the single commit below orders nothing.
+        from concurrent.futures import ThreadPoolExecutor
 
-    pool = ThreadPoolExecutor(max_workers=1)
-    fut = pool.submit(_phase_b_compute)
-    try:
-        if touched and spec.close_mode == "dv":
-            # Deletion-vector close: mark the (few) current rows of
-            # changed keys dead at their (file, position) and append
-            # their closed copies — no partition rewrite at all. The
-            # positional read applies existing DVs, so an
-            # already-closed row can't close twice. Write
-            # amplification: O(closed rows), not O(partition).
-            to_close = changed.drop("__cur_from")
-            part_df = table.read_partitions(touched, with_position=True)
-            closing = (
-                part_df.join(to_close, on=keys, how="inner")
-                .filter(
-                    F.col("is_current")
-                    & F.col("first_change_ts").isNotNull()
-                    & (F.col("first_change_ts") > F.col("valid_from"))
-                )
-                .persist()
+        pool = ThreadPoolExecutor(max_workers=1)
+        try:
+            fut = pool.submit(_phase_b)
+            closed, close = _phase_a(
+                spec, table, base, changed, touched, batch_id, cached
             )
-            dead = closing.select("__file", "__pos")
-            closed = dead.count()
-            if closed:
-                closed_copies = (
-                    closing.withColumn("valid_to", F.col("first_change_ts"))
-                    .withColumn("is_current", F.lit(False))
-                    .withColumn("closed_by_batch", F.lit(batch_id))
-                    .drop("first_change_ts", "__file", "__pos")
-                )
-                table.remove_rows(
-                    dead,
-                    adds=closed_copies,
-                    operation="SCD2_CLOSE_DV",
-                    metrics={"batch_id": batch_id, "n_closed": closed},
-                )
-            closing.unpersist()
-        elif touched:
-            to_close = changed.drop("__cur_from")
-            part_df = table.read_partitions(touched)
-            updated = (
-                part_df.alias("t")
-                .join(to_close.alias("c"), on=keys, how="left")
-                .withColumn(
-                    "__close",
-                    F.col("is_current")
-                    & F.col("first_change_ts").isNotNull()
-                    & (F.col("first_change_ts") > F.col("valid_from")),
-                )
-                .withColumn(
-                    "valid_to",
-                    F.when(F.col("__close"), F.col("first_change_ts")).otherwise(
-                        F.col("valid_to")
-                    ),
-                )
-                .withColumn(
-                    "is_current",
-                    F.when(F.col("__close"), F.lit(False)).otherwise(
-                        F.col("is_current")
-                    ),
-                )
-                .withColumn(
-                    "closed_by_batch",
-                    F.when(F.col("__close"), F.lit(batch_id)).otherwise(
-                        F.col("closed_by_batch")
-                    ),
-                )
-            )
-            # count piggybacks on the write job (observe) — no
-            # separate scan
-            obs = Observation("scd2_close")
-            updated = updated.observe(
-                obs, F.sum(F.col("__close").cast("long")).alias("n_closed")
-            )
-            table.replace_partitions(
-                updated.drop("first_change_ts", "__close"),
-                touched,
-                operation="SCD2_CLOSE",
-                # evaluated at commit time, after the write job
-                # resolves the observation — count rides the write,
-                # no extra scan
-                metrics=lambda: {
+            t_b = time.time()
+            insert, n_inserted = fut.result()
+        finally:
+            # a failed Phase A waits out Phase B, so the finally below
+            # also releases the frames Phase B persisted
+            pool.shutdown(wait=True)
+        staged = [w for w in (close, insert) if w is not None]
+        if staged:
+            table.commit_staged(
+                "SCD2_MERGE",
+                *staged,
+                merge_schema=spec.evolve_schema,
+                metrics={
                     "batch_id": batch_id,
-                    "n_closed": int(obs.get["n_closed"] or 0),
+                    "n_closed": closed,
+                    "n_inserted": n_inserted,
                 },
             )
-            closed = int(obs.get["n_closed"] or 0)
-    except BaseException:
-        # Phase A failed: wait out the in-flight Phase-B jobs (no
-        # dangling actions against a table whose merge aborted), then
-        # DRAIN the future — fut.result() below is never reached, so a
-        # completed Phase B's persisted frames must be released here
-        # or they leak for the life of the session (round-10 ADVICE).
-        # Phase A's exception propagates; a Phase-B failure in this
-        # path cleaned up after itself inside _phase_b_compute.
-        pool.shutdown(wait=True)
-        if fut.done() and not fut.cancelled() and fut.exception() is None:
-            v_b, ins_b, _ = fut.result()
-            ins_b.unpersist()
-            v_b.unpersist()
-        raise
+
+        # Phase C (optional) — late-arriving interval rebuild, its own
+        # commit. Runs after the merge so rebuilt histories include this
+        # batch's fresh versions. Event source = full log (prior batches
+        # ∪ this batch), so versions collapsed away by earlier
+        # change-only loads are recoverable.
+        t_c = time.time()
+        n_rebuilt = 0
+        if spec.late_policy == "rebuild" and n_stale:
+            all_events = prior_events.unionByName(kept, allowMissingColumns=True)
+            n_rebuilt = _rebuild_late(spec, table, late, all_events, batch_id)
     finally:
-        pool.shutdown(wait=True)
-
-    t_b = time.time()
-    # Phase B — commit: append the (already computed, cached) inserts
-    # strictly after Phase A's commit.
-    versions, inserts, n_inserted = fut.result()
-    if n_inserted:
-        table.append(
-            inserts,
-            merge_schema=spec.evolve_schema,
-            metrics={"batch_id": batch_id, "n_inserted": n_inserted},
-        )
-
-    # Phase C (optional) — late-arriving interval rebuild. Runs after
-    # A/B so rebuilt histories include this batch's fresh versions.
-    # Event source = full log (prior batches ∪ this batch), so versions
-    # collapsed away by earlier change-only loads are recoverable.
-    t_c = time.time()
-    n_rebuilt = 0
-    if spec.late_policy == "rebuild" and n_stale:
-        all_events = prior_events.unionByName(kept, allowMissingColumns=True)
-        n_rebuilt = _rebuild_late(spec, table, late, all_events, batch_id)
-
-    for df in (inserts, versions, changed, staged):
-        df.unpersist()
-    if hot_df is not None:
-        hot_df.unpersist()
+        for df in cached:
+            df.unpersist()
     out = {
         "n_closed": closed,
         "n_hot_keys": n_hot_keys,
@@ -811,8 +752,9 @@ def _merge_batch(
         "n_parts_closed": len(touched),
         # phase breakdown (reference tracks per-phase durations,
         # src/header_etl.py:319-331; these localize merge cost the
-        # same way at any scale: close = partition rewrite, insert =
-        # append, rebuild = late-history reconstruction)
+        # same way at any scale: close = Phase A's staging, insert =
+        # the rest of Phase B's compute and staging plus the commit,
+        # rebuild = late-history reconstruction)
         "duration_s_close": round(t_b - t_a, 3),
         "duration_s_insert": round(t_c - t_b, 3),
     }
@@ -820,6 +762,79 @@ def _merge_batch(
         out["n_rebuilt"] = n_rebuilt
         out["duration_s_rebuild"] = round(time.time() - t_c, 3)
     return out
+
+
+def _phase_a(
+    spec: SCD2Spec,
+    table: VersionedParquetTable,
+    base: dict,
+    changed: DataFrame,
+    touched: list[dict[str, str]],
+    batch_id: str,
+    cached: list[DataFrame],
+) -> tuple[int, StagedWrite | None]:
+    """Stage Phase A against snapshot ``base``: close the current rows
+    of ``changed`` keys in the ``touched`` partitions at their first
+    change. Returns ``(n_closed, staged close or None)``."""
+    if not touched:
+        return 0, None
+    keys = list(spec.key_cols)
+    to_close = changed.drop("__cur_from")
+    closing = (
+        F.col("is_current")
+        & F.col("first_change_ts").isNotNull()
+        & (F.col("first_change_ts") > F.col("valid_from"))
+    )
+    if spec.close_mode == "dv":
+        # Deletion-vector close: mark the (few) current rows of changed
+        # keys dead at their (file, position) and add their closed
+        # copies — no partition rewrite at all. The positional read
+        # applies existing DVs, so an already-closed row can't close
+        # twice. Write amplification: O(closed rows), not O(partition).
+        rows = (
+            table.read_partitions(touched, base["version"], with_position=True)
+            .join(to_close, on=keys, how="inner")
+            .filter(closing)
+            .persist()
+        )
+        cached.append(rows)
+        dead = rows.select("__file", "__pos")
+        n_closed = dead.count()
+        if not n_closed:
+            return 0, None
+        copies = (
+            rows.withColumn("valid_to", F.col("first_change_ts"))
+            .withColumn("is_current", F.lit(False))
+            .withColumn("closed_by_batch", F.lit(batch_id))
+            .drop("first_change_ts", "__file", "__pos")
+        )
+        return n_closed, table.stage_remove_rows(dead, adds=copies, base=base)
+    # copy-on-write: rewrite the touched partitions with the closes
+    # applied; the count piggybacks on the write job (observe)
+    updated = (
+        table.read_partitions(touched, base["version"])
+        .join(to_close, on=keys, how="left")
+        .withColumn("__close", closing)
+        .withColumns(
+            {
+                "valid_to": F.when(
+                    F.col("__close"), F.col("first_change_ts")
+                ).otherwise(F.col("valid_to")),
+                "is_current": F.when(F.col("__close"), F.lit(False)).otherwise(
+                    F.col("is_current")
+                ),
+                "closed_by_batch": F.when(
+                    F.col("__close"), F.lit(batch_id)
+                ).otherwise(F.col("closed_by_batch")),
+            }
+        )
+    )
+    obs = Observation(f"scd2_close_{uuid.uuid4().hex[:8]}")
+    updated = updated.observe(
+        obs, F.sum(F.col("__close").cast("long")).alias("n_closed")
+    ).drop("first_change_ts", "__close")
+    close = table.stage_write(updated, touched, base=base)  # fills obs
+    return int(obs.get["n_closed"] or 0), close
 
 
 def _pad_columns(df: DataFrame, reference: DataFrame) -> DataFrame:

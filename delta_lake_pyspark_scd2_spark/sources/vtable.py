@@ -18,11 +18,19 @@ environment, so this module supplies the same *capabilities* natively:
 
 Concurrency: manifest commit is an atomic ``os.link`` (hard-link fails
 EEXIST atomically — unlike ``os.rename``, which silently overwrites),
-so a version collision is detected, never silently overwritten. Blind
-appends resolve collisions optimistically (rebase onto the new head —
-files AND, under mergeSchema, the schema union — and retry: Delta's
-append semantics); rewriting commits and metadata changes stay
-single-writer and surface collisions as errors.
+so a version collision is detected, never silently overwritten. Every
+writer stages its data files first and then commits through ONE
+primitive, ``_transact``, which resolves a lost version race
+optimistically (Delta's logical conflict rules at partition
+granularity): it rebases its adds/removes onto the new head and
+retries when the winner changed no table metadata (or only widened the
+schema under ``merge_schema``), touched none of the partitions this
+operation read, and this operation assigned no identity values;
+anything else is a hard conflict raised to the caller. A blind append
+reads no partition, so it only ever conflicts on metadata. Writes can
+also be staged (``stage_write``, ``stage_remove_rows``) and committed
+together as one version (``commit_staged``), which is how the SCD2
+merge lands its close and its inserts atomically.
 
 Log layout (Delta's checkpoint + incremental-log split): each commit
 ``v{N}.json`` is a DELTA record — ``add`` (new file entries) and
@@ -58,8 +66,8 @@ import shutil
 import time
 import uuid
 import warnings
-from collections.abc import Callable, Sequence
-from dataclasses import dataclass
+from collections.abc import Callable, Iterable, Sequence
+from dataclasses import asdict, dataclass, field
 
 from pyspark.sql import DataFrame, Observation, SparkSession, Window
 from pyspark.sql import functions as F
@@ -79,6 +87,16 @@ CDC_TYPES = ("insert", "delete", "update_preimage", "update_postimage")
 #: Full-snapshot checkpoint cadence: reconstruction replays at most
 #: this many delta commits. Delta Lake's default is 10 as well.
 CHECKPOINT_INTERVAL = 10
+#: Table metadata every commit carries forward. A concurrent change to
+#: any of it is a hard conflict for every other writer (``_transact``).
+META_KEYS = (
+    "schema", "partition_cols", "constraints", "column_mapping",
+    "retired_physical", "generated_cols", "properties",
+)
+
+
+class _VersionTaken(RuntimeError):
+    """``_commit`` lost the race for its version number."""
 
 
 @dataclass(frozen=True)
@@ -101,6 +119,29 @@ class ManifestEntry:
     stats: dict | None = None
     rows: int | None = None
     dv: dict | None = None
+
+
+@dataclass
+class StagedWrite:
+    """A write staged against snapshot ``base`` but not committed yet:
+    its data files and DV sidecars are on disk, unreferenced, and these
+    fields are what its commit must record. Each public writer commits
+    one; :meth:`VersionedParquetTable.commit_staged` lands several
+    staged against the same snapshot as ONE version (the SCD2 merge's
+    close and insert). ``schema`` None keeps the base's, ``reads`` is
+    :meth:`VersionedParquetTable._transact`'s, ``metrics`` the writer's
+    default commit metrics, and ``compact`` marks appended files whose
+    partitions auto-compaction checks once they are committed."""
+
+    base: dict
+    adds: list[ManifestEntry] = field(default_factory=list)
+    removes: list[str] = field(default_factory=list)
+    reads: "list[dict[str, str]] | None" = field(default_factory=list)
+    schema: T.StructType | None = None
+    assigned_identity: bool = False
+    cdc_files: list[str] | None = None
+    metrics: dict = field(default_factory=dict)
+    compact: bool = False
 
 
 def _stat_key(v):
@@ -203,6 +244,70 @@ def _entry(f: dict) -> ManifestEntry:
     )
 
 
+def _pkey(partition: dict[str, str]) -> tuple:
+    """Hashable partition identity (``()`` for unpartitioned tables)."""
+    return tuple(sorted(partition.items()))
+
+
+def _schema(m: dict) -> T.StructType:
+    return T.StructType.fromJson(json.loads(m["schema"]))
+
+
+def _txn_applied(m: dict, txn: tuple[str, int] | None) -> bool:
+    """True when ``m`` already records writer transaction ``txn`` (or a
+    later one of the same app) — the exactly-once replay check."""
+    if txn is None:
+        return False
+    applied = (m.get("txns") or {}).get(txn[0])
+    return applied is not None and applied >= txn[1]
+
+
+def _meta(m: dict) -> dict:
+    """The commit's table metadata, empty values normalized to None."""
+    return {k: m.get(k) or None for k in META_KEYS}
+
+
+def _widened_only(old: dict, new: dict) -> bool:
+    """True when ``new``'s metadata equals ``old``'s except for schema
+    fields added to it (a concurrent ``merge_schema`` write)."""
+    if {**_meta(old), "schema": None} != {**_meta(new), "schema": None}:
+        return False
+    kept = {f.name: f for f in _schema(new).fields}
+    return all(kept.get(f.name) == f for f in _schema(old).fields)
+
+
+def _conflict(
+    old: dict, new: dict, scope: "set[tuple] | None", merge_schema: bool,
+    assigned_identity: bool,
+) -> str | None:
+    """Why a commit planned on snapshot ``old`` cannot rebase onto the
+    newer head ``new`` (None when it can). ``scope`` is the set of
+    partitions the commit read, None for the whole table."""
+    if assigned_identity:
+        return "lost a commit race while assigning identity values"
+    if _meta(new) != _meta(old) and not (
+        merge_schema and _widened_only(old, new)
+    ):
+        return "conflicts with a concurrent schema/constraint/metadata change"
+    if scope is not None and not scope:
+        return None  # blind: reads no partition
+    before = {f["path"]: f for f in old["files"]}
+    after = {f["path"]: f for f in new["files"]}
+    hit = {
+        _pkey(f["partition"])
+        for p, f in after.items()
+        if p not in before or not _same_record(f, before[p])
+    } | {_pkey(f["partition"]) for p, f in before.items() if p not in after}
+    if scope is not None:
+        hit &= scope
+    if hit:
+        return (
+            "conflicts with a concurrent commit touching the same "
+            f"partition(s) {[dict(k) for k in sorted(hit)][:3]}"
+        )
+    return None
+
+
 class VersionedParquetTable:
     def __init__(self, spark: SparkSession, path: str):
         self.spark = spark
@@ -270,6 +375,7 @@ class VersionedParquetTable:
                     if "num_files" in m
                     else len(m["files"]),
                     "metrics": m.get("metrics", {}),
+                    "operation_metrics": m.get("operation_metrics", {}),
                 }
             )
         return out
@@ -422,34 +528,13 @@ class VersionedParquetTable:
         identity_cols: dict[str, dict] | None = None,
         cdc_files: list[str] | None = None,
         data_change: bool = True,
+        started: float | None = None,
     ) -> None:
+        """Write manifest ``version`` with exactly the given file set and
+        metadata — the atomic step under :meth:`_transact`, its only
+        caller. Raises :class:`_VersionTaken` when another writer
+        already holds ``version``."""
         os.makedirs(os.path.join(self.path, MANIFEST_DIR), exist_ok=True)
-        parent = (
-            self._load_commit(version - 1) if version > 0 else {}
-        )
-        if constraints is None:
-            # inherit like every other metadata field — a commit that
-            # doesn't mention constraints must not silently drop them
-            # (callers that CLEAR constraints pass the reduced dict)
-            constraints = parent.get("constraints", {})
-        if generated_cols is None:
-            generated_cols = parent.get("generated_cols", {})
-        if identity_cols is None:
-            identity_cols = parent.get("identity_cols", {})
-        if properties is None:
-            properties = parent.get("properties", {})
-        if column_mapping is None:
-            # Inherit the logical→physical column mapping (Delta column
-            # mapping analogue); only RENAME_COLUMN commits change it.
-            column_mapping = parent.get("column_mapping", {})
-        if retired_physical is None:
-            retired_physical = parent.get("retired_physical", [])
-        if txns is None:
-            # Inherit the writer-transaction watermarks (Delta ``txn``
-            # actions): every commit carries the full app→version map so
-            # a reader needs one commit record, not a log scan. The map
-            # is bounded by the number of distinct writer apps — small.
-            txns = parent.get("txns", {})
         # Delta record: diff the desired file set against the parent
         # snapshot — commit size ∝ files this operation touched. Data
         # files are written-once, but an entry's METADATA can change
@@ -463,6 +548,12 @@ class VersionedParquetTable:
             for e in files
         ]
         new_paths = {r["path"] for r in new_records}
+        add = [
+            r
+            for r in new_records
+            if r["path"] not in prev or not _same_record(r, prev[r["path"]])
+        ]
+        remove = sorted(p for p in prev if p not in new_paths)
         manifest = {
             "version": version,
             "timestamp": time.time(),
@@ -470,12 +561,8 @@ class VersionedParquetTable:
             "schema": schema.json(),
             "partition_cols": partition_cols,
             "constraints": constraints or {},
-            "add": [
-                r
-                for r in new_records
-                if r["path"] not in prev or not _same_record(r, prev[r["path"]])
-            ],
-            "remove": sorted(p for p in prev if p not in new_paths),
+            "add": add,
+            "remove": remove,
             "num_files": len(new_records),
             # Row-level change records for this commit (paths under
             # _cdc/) and Delta's dataChange flag: data_change=False
@@ -484,12 +571,15 @@ class VersionedParquetTable:
             "cdc_files": cdc_files or [],
             "data_change": data_change,
             "metrics": (metrics() if callable(metrics) else metrics) or {},
-            "txns": txns,
-            "column_mapping": column_mapping,
-            "retired_physical": retired_physical,
-            "generated_cols": generated_cols,
-            "properties": properties,
-            "identity_cols": identity_cols,
+            "operation_metrics": self._operation_metrics(
+                prev, add, remove, started
+            ),
+            "txns": txns or {},
+            "column_mapping": column_mapping or {},
+            "retired_physical": retired_physical or [],
+            "generated_cols": generated_cols or {},
+            "properties": properties or {},
+            "identity_cols": identity_cols or {},
         }
         tmp = self._manifest_path(version) + f".tmp-{uuid.uuid4().hex}"
         with open(tmp, "w") as fh:
@@ -504,7 +594,7 @@ class VersionedParquetTable:
         try:
             os.link(tmp, target)
         except FileExistsError:
-            raise RuntimeError(
+            raise _VersionTaken(
                 f"version {version} already committed (concurrent writer?)"
             ) from None
         finally:
@@ -514,6 +604,41 @@ class VersionedParquetTable:
         self._snap_cache[version] = new_records
         if version > 0 and version % CHECKPOINT_INTERVAL == 0:
             self._write_checkpoint(version, new_records)
+
+    def _operation_metrics(
+        self, prev: dict, add: list[dict], remove: list[str],
+        started: float | None,
+    ) -> dict:
+        """What a commit did, stamped on its record apart from the
+        caller's ``metrics``: files and rows added and removed (newly
+        dead deletion-vector rows count as removed), bytes of the data
+        files and DV sidecars it adds, and its wall time in ms."""
+
+        def dead(f: dict) -> int:
+            return (f.get("dv") or {}).get("count", 0)
+
+        def sidecars(fs) -> set[str]:
+            return {p for f in fs for p in (f.get("dv") or {}).get("paths", [])}
+
+        new = [a for a in add if a["path"] not in prev]
+        n_bytes = sum(
+            os.path.getsize(os.path.join(self.path, DATA_DIR, a["path"]))
+            for a in new
+        )
+        for p in sidecars(add) - sidecars(prev.values()):
+            for root, _dirs, fnames in os.walk(os.path.join(self.path, DV_DIR, p)):
+                n_bytes += sum(os.path.getsize(os.path.join(root, f)) for f in fnames)
+        return {
+            "files_added": len(new),
+            "files_removed": len(remove),
+            "rows_added": sum(a.get("rows") or 0 for a in new),
+            "rows_removed": sum(
+                (prev[p].get("rows") or 0) - dead(prev[p]) for p in remove
+            )
+            + sum(dead(a) - dead(prev[a["path"]]) for a in add if a["path"] in prev),
+            "bytes_added": n_bytes,
+            "commit_ms": round(1000 * (time.time() - (started or time.time())), 1),
+        }
 
     # -- change-data files (CDF) ---------------------------------------------
 
@@ -546,6 +671,47 @@ class VersionedParquetTable:
             for f in sorted(os.listdir(out_dir))
             if f.endswith(".parquet")
         ]
+
+    def _write_changes(
+        self, s: StagedWrite, dead: DataFrame | None = None
+    ) -> list[str]:
+        """Stage the change records of a write that brings none of its
+        own: its new files as inserts, its removed files and the
+        ``dead`` positions of the files it deletion-vectors as deletes
+        (what the change feed would otherwise read off the file diff)."""
+        m = s.base
+        schema = s.schema or _schema(m)
+        mapping = m.get("column_mapping")
+        have = {f["path"] for f in m["files"]}
+        gone = set(s.removes)
+        parts = []
+        if dead is not None:
+            hit = {e.path for e in s.adds if e.path in have}
+            parts.append(
+                self._scan(
+                    [f for f in m["files"] if f["path"] in hit], schema,
+                    with_position=True, mapping=mapping,
+                )
+                .join(dead.select("__file", "__pos"), on=["__file", "__pos"],
+                      how="left_semi")
+                .drop("__file", "__pos")
+                .withColumn("_change_type", F.lit("delete"))
+            )
+        for files, kind in (
+            ([asdict(e) for e in s.adds if e.path not in have], "insert"),
+            ([f for f in m["files"] if f["path"] in gone], "delete"),
+        ):
+            if files:
+                parts.append(
+                    self._scan(files, schema, mapping=mapping)
+                    .withColumn("_change_type", F.lit(kind))
+                )
+        if not parts:
+            return []
+        change = parts[0]
+        for p in parts[1:]:
+            change = change.unionByName(p)
+        return self._write_cdc(change)
 
     # -- data-file staging ---------------------------------------------------
 
@@ -662,6 +828,307 @@ class VersionedParquetTable:
         shutil.rmtree(staging)
         return entries
 
+    def _stage(
+        self,
+        m: dict,
+        df: DataFrame,
+        schema: T.StructType | None = None,
+        *,
+        partitions: "list[dict[str, str]] | None" = None,
+        layout_ready: bool = False,
+    ) -> tuple[list[ManifestEntry], T.StructType, bool]:
+        """Every writer's staging sequence against base snapshot ``m``:
+        derive absent generated columns, assign absent identity values,
+        align to ``schema`` (None keeps the frame's own columns, for
+        writers that replace the schema), then write and CHECK-validate
+        the files. ``partitions`` bounds where rows may land. Returns
+        the uncommitted entries, the schema they were written under,
+        and whether identity values were assigned."""
+        ident = m.get("identity_cols") or {}
+        assigned = any(c not in df.columns for c in ident)
+        gen = m.get("generated_cols") or {}
+        df = self._apply_identity(self._apply_generated(df, gen), ident)
+        if schema is not None:
+            df = _align(df, schema)
+        files = self._write_files(
+            df,
+            list(m.get("partition_cols") or []),
+            m.get("constraints"),
+            generated=gen,
+            mapping=m.get("column_mapping") or {},
+            layout_ready=layout_ready,
+        )
+        if partitions is not None:
+            allowed = {_pkey(p) for p in partitions}
+            stray = [e for e in files if _pkey(e.partition) not in allowed]
+            if stray:
+                raise ValueError(
+                    "replacement data writes outside the declared "
+                    f"partitions: {stray[:3]}"
+                )
+        return files, df.schema, assigned
+
+    @staticmethod
+    def _widen(m: dict, schema: T.StructType) -> T.StructType:
+        """``merge_schema`` union: ``m``'s schema plus ``schema``'s new
+        fields as nullable columns (old files read them as NULL)."""
+        out = _schema(m)
+        have = set(out.fieldNames())
+        # blocked names: dropped-column tombstones AND the live
+        # physical slots of renamed columns — a new logical column
+        # with either name would collide with on-disk data
+        blocked = set(m.get("retired_physical") or []) | set(
+            (m.get("column_mapping") or {}).values()
+        )
+        for f in schema.fields:
+            if f.name not in have:
+                if f.name in blocked:
+                    raise ValueError(
+                        f"cannot add column {f.name}: live files hold "
+                        "data under that physical name (dropped or "
+                        "renamed-away column) — rewrite the table first"
+                    )
+                out = out.add(f.name, f.dataType, True)
+        return out
+
+    def stage_write(
+        self,
+        df: DataFrame,
+        partitions: "list[dict[str, str]] | None" = None,
+        *,
+        base: dict | None = None,
+        merge_schema: bool = False,
+        layout_ready: bool = False,
+    ) -> StagedWrite:
+        """Stage ``df``'s files against snapshot ``base`` (the latest by
+        default) without committing them: an :meth:`append`, or with
+        ``partitions`` a :meth:`replace_partitions` of exactly those."""
+        m = base or self._current()
+        schema = self._widen(m, df.schema) if merge_schema else _schema(m)
+        files, _, assigned = self._stage(
+            m, df, schema, partitions=partitions, layout_ready=layout_ready
+        )
+        if partitions is None:
+            return StagedWrite(
+                m, files, schema=schema, assigned_identity=assigned, compact=True
+            )
+        touched = {_pkey(p) for p in partitions}
+        return StagedWrite(
+            m,
+            files,
+            [f["path"] for f in m["files"] if _pkey(f["partition"]) in touched],
+            reads=list(partitions),
+            schema=schema,
+            assigned_identity=assigned,
+        )
+
+    def stage_remove_rows(
+        self,
+        dead: DataFrame,
+        *,
+        adds: DataFrame | None = None,
+        base: dict | None = None,
+        cdc_files: list[str] | None = None,
+    ) -> StagedWrite:
+        """Stage :meth:`remove_rows`' deletion vector and added files
+        against snapshot ``base`` (the latest by default) without
+        committing them. On a change-feed table without ``cdc_files``
+        the newly dead rows are recorded as deletes, the adds as
+        inserts (the dv-mode upsert passes its richer pre/post-image
+        records instead)."""
+        m = base or self._current()
+        # per-file dead counts: bounded by files touched, driver-safe
+        per_file = {
+            r["__file"]: r["n"]
+            for r in dead.groupBy("__file")
+            .agg(F.count(F.lit(1)).alias("n"))
+            .collect()
+        }
+        unknown = sorted(set(per_file) - {f["path"] for f in m["files"]})
+        if unknown:
+            raise ValueError(
+                f"deletion vector targets unknown files: {unknown[:3]}"
+            )
+        dv_files = []
+        if per_file:
+            # distributed sidecar write (no driver collect of positions)
+            dv_rel = f"dv-{uuid.uuid4().hex}"
+            dead.select("__file", "__pos").write.parquet(
+                os.path.join(self.path, DV_DIR, dv_rel)
+            )
+            for f in m["files"]:
+                if f["path"] in per_file:
+                    old = f.get("dv") or {"paths": [], "count": 0}
+                    dv_files.append(
+                        ManifestEntry(
+                            f["path"], f["partition"], f.get("stats"), f.get("rows"),
+                            {
+                                "paths": old["paths"] + [dv_rel],
+                                "count": old["count"] + per_file[f["path"]],
+                            },
+                        )
+                    )
+        new_files, assigned = [], False
+        if adds is not None:
+            new_files, _, assigned = self._stage(m, adds, _schema(m))
+        s = StagedWrite(
+            m,
+            dv_files + new_files,
+            reads=[e.partition for e in dv_files],
+            assigned_identity=assigned,
+            cdc_files=cdc_files,
+            metrics={"n_deleted": sum(per_file.values()), "n_files_dv": len(per_file)},
+        )
+        if cdc_files is None and self._cdc_enabled(m) and (
+            per_file or adds is not None
+        ):
+            s.cdc_files = self._write_changes(s, dead if per_file else None)
+        return s
+
+    # -- the commit primitive ------------------------------------------------
+
+    def _transact(
+        self,
+        base: dict,
+        operation: str,
+        *,
+        adds: "Sequence[ManifestEntry]" = (),
+        removes: "Iterable[str]" = (),
+        reads: "Iterable[dict[str, str]] | None" = (),
+        meta: dict | None = None,
+        merge_schema: bool = False,
+        assigned_identity: bool = False,
+        txn: tuple[str, int] | None = None,
+        metrics: "dict | Callable[[], dict] | None" = None,
+        cdc_files: list[str] | None = None,
+        data_change: bool = True,
+    ) -> int:
+        """Commit one operation: the only path to a new table version.
+
+        ``base`` is the snapshot the operation read; ``removes`` are the
+        paths it drops and ``adds`` the entries it adds (new files and
+        deletion-vector updates of live ones alike). ``reads`` names
+        the partitions its result depends on: ``()`` for a blind
+        append, ``None`` for a whole-table read. ``meta`` overrides
+        table metadata (``META_KEYS``) on top of the base's.
+
+        A lost version race rebases — the removes and adds re-applied
+        to the new head, the watermarks re-derived — only when the
+        winner changed no metadata (or only widened the schema under
+        ``merge_schema``), touched none of ``reads``, and this
+        operation assigned no identity values (they were allocated
+        against the lost head's watermark). Anything else raises. When
+        the winner already applied ``txn`` the batch has landed once:
+        the head version is returned."""
+        started = time.time()
+        over = dict(meta or {})
+        gone = set(removes) | {e.path for e in adds}
+        scope = None if reads is None else {_pkey(p) for p in reads}
+        head = base
+        for _attempt in range(10):
+            md = {**_meta(head), "identity_cols": head.get("identity_cols"), **over}
+            # outside the try: a missing-footer-stats RuntimeError must
+            # surface as itself, not read as a lost race
+            ident = self._identity_bump(md, adds)
+            # every commit carries the full app→version map of writer
+            # transactions (Delta ``txn`` actions), so a reader needs
+            # one commit record, not a log scan
+            txns = dict(head.get("txns") or {})
+            if txn is not None:
+                txns[txn[0]] = txn[1]
+            v = head["version"] + 1
+            try:
+                self._commit(
+                    v,
+                    [_entry(f) for f in head["files"] if f["path"] not in gone]
+                    + list(adds),
+                    _schema(md),
+                    list(md["partition_cols"] or []),
+                    operation,
+                    metrics,
+                    md["constraints"],
+                    txns,
+                    column_mapping=md["column_mapping"],
+                    retired_physical=md["retired_physical"],
+                    generated_cols=md["generated_cols"],
+                    properties=md["properties"],
+                    identity_cols=ident,
+                    cdc_files=cdc_files,
+                    data_change=data_change,
+                    started=started,
+                )
+                return v
+            except _VersionTaken:
+                new = self._current()
+            if _txn_applied(new, txn):
+                # the winner WAS this logical transaction (a replica's
+                # replay): our staged files stay unreferenced for
+                # vacuum to sweep
+                return new["version"]
+            why = _conflict(head, new, scope, merge_schema, assigned_identity)
+            if why:
+                raise RuntimeError(
+                    f"{operation} on {self.path} {why} — re-read and retry"
+                ) from None
+            if merge_schema:
+                # keep the winner's new columns: head ∪ ours
+                over["schema"] = self._widen(new, _schema(md)).json()
+            head = new
+        raise RuntimeError(
+            f"{operation} on {self.path} lost 10 optimistic commit races"
+        )
+
+    def commit_staged(
+        self,
+        operation: str,
+        *staged: StagedWrite,
+        merge_schema: bool = False,
+        txn: tuple[str, int] | None = None,
+        metrics: "dict | Callable[[], dict] | None" = None,
+        data_change: bool = True,
+    ) -> int:
+        """Commit writes staged against one snapshot as ONE version,
+        through :meth:`_transact`: their adds, removes and reads
+        combined, the schema widened to all of theirs. When one of them
+        carries change records, the others' are derived from their
+        files, so the commit's change feed stays complete. Appended
+        files then go through auto-compaction."""
+        base = staged[0].base
+        if any(s.base["version"] != base["version"] for s in staged):
+            raise ValueError(f"{operation}: writes staged on different snapshots")
+        schema = _schema(base)
+        for s in staged:
+            if s.schema is not None:
+                schema = self._widen({**base, "schema": schema.json()}, s.schema)
+        cdc = None
+        if any(s.cdc_files is not None for s in staged):
+            cdc = [
+                p
+                for s in staged
+                for p in (
+                    s.cdc_files if s.cdc_files is not None else self._write_changes(s)
+                )
+            ]
+        reads = [p for s in staged if s.reads is not None for p in s.reads]
+        v = self._transact(
+            base,
+            operation,
+            adds=[e for s in staged for e in s.adds],
+            removes=[p for s in staged for p in s.removes],
+            reads=None if any(s.reads is None for s in staged) else reads,
+            meta={"schema": schema.json()},
+            merge_schema=merge_schema,
+            assigned_identity=any(s.assigned_identity for s in staged),
+            txn=txn,
+            metrics=metrics or {k: x for s in staged for k, x in s.metrics.items()},
+            cdc_files=cdc,
+            data_change=data_change,
+        )
+        appended = [e for s in staged if s.compact for e in s.adds]
+        if appended:
+            self._maybe_auto_compact(appended)
+        return v
+
     # -- public write API ----------------------------------------------------
 
     @classmethod
@@ -692,25 +1159,25 @@ class VersionedParquetTable:
         t = cls(spark, path)
         if cls.is_table(path):
             raise FileExistsError(path)
-        pc = partition_cols or []
-        gen = generated_cols or {}
-        ident = {
-            c: {
-                "start": int(s.get("start", 1)),
-                "step": int(s.get("step", 1)),
-                "next": int(s.get("start", 1)),
-            }
-            for c, s in (identity_cols or {}).items()
+        base = {
+            "version": -1,
+            "files": [],
+            "partition_cols": partition_cols or [],
+            "generated_cols": generated_cols or {},
+            "identity_cols": {
+                c: {
+                    "start": int(s.get("start", 1)),
+                    "step": int(s.get("step", 1)),
+                    "next": int(s.get("start", 1)),
+                }
+                for c, s in (identity_cols or {}).items()
+            },
+            "properties": {k: str(v) for k, v in (properties or {}).items()},
         }
-        df = t._apply_identity(t._apply_generated(df, gen), ident)
-        files = t._write_files(df, pc, generated=gen, layout_ready=layout_ready)
-        t._commit(
-            0, files, df.schema, pc, "CREATE", metrics,
-            txns={txn[0]: txn[1]} if txn else {},
-            generated_cols=gen,
-            identity_cols=t._identity_bump({"identity_cols": ident}, files)
-            or {},
-            properties={k: str(v) for k, v in (properties or {}).items()},
+        files, schema, _ = t._stage(base, df, layout_ready=layout_ready)
+        t._transact(
+            base, "CREATE", adds=files, meta={"schema": schema.json()},
+            txn=txn, metrics=metrics,
         )
         return t
 
@@ -743,7 +1210,8 @@ class VersionedParquetTable:
     def properties(self, version: int | None = None) -> dict[str, str]:
         """Table properties (``TBLPROPERTIES`` analogue), carried per
         commit. Recognized keys: ``autoCompact`` (``"true"`` → every
-        append checks its touched partitions and compacts any that
+        append, also one committed inside a larger commit such as the
+        SCD2 merge, checks its touched partitions and compacts any that
         crossed ``autoCompact.minFiles``, default 16 — Delta's
         auto-compaction trade: small steady write tax for never letting
         streaming appends accumulate a small-file problem)."""
@@ -752,20 +1220,11 @@ class VersionedParquetTable:
 
     def set_property(self, key: str, value: str) -> int:
         m = self._current()
-        props = dict(m.get("properties") or {})
-        props[key] = str(value)
-        v = m["version"] + 1
-        self._commit(
-            v,
-            [_entry(f) for f in m["files"]],
-            T.StructType.fromJson(json.loads(m["schema"])),
-            list(m["partition_cols"]),
-            "SET_PROPERTY",
-            {"key": key, "value": str(value)},
-            m.get("constraints") or {},
-            properties=props,
+        props = {**(m.get("properties") or {}), key: str(value)}
+        return self._transact(
+            m, "SET_PROPERTY", meta={"properties": props},
+            metrics={"key": key, "value": str(value)},
         )
-        return v
 
     def unset_property(self, key: str) -> int:
         m = self._current()
@@ -773,18 +1232,10 @@ class VersionedParquetTable:
         if key not in props:
             raise KeyError(key)
         props.pop(key)
-        v = m["version"] + 1
-        self._commit(
-            v,
-            [_entry(f) for f in m["files"]],
-            T.StructType.fromJson(json.loads(m["schema"])),
-            list(m["partition_cols"]),
-            "UNSET_PROPERTY",
-            {"key": key},
-            m.get("constraints") or {},
-            properties=props,
+        return self._transact(
+            m, "UNSET_PROPERTY", meta={"properties": props},
+            metrics={"key": key},
         )
-        return v
 
     def generated_columns(self, version: int | None = None) -> dict[str, str]:
         """col → SQL expression for ``GENERATED ALWAYS AS`` columns
@@ -856,18 +1307,13 @@ class VersionedParquetTable:
                 )
         return ident
 
-    def _apply_generated(
-        self, df: DataFrame, gen: dict[str, str] | None = None
-    ) -> DataFrame:
+    @staticmethod
+    def _apply_generated(df: DataFrame, gen: dict[str, str] | None) -> DataFrame:
         """Derive any generated column ABSENT from ``df`` (writers may
         omit them, like Delta); columns the writer did supply are
         validated against their expression at write time instead
         (see ``_write_files``)."""
-        if gen is None:
-            gen = (
-                self.generated_columns() if self.is_table(self.path) else {}
-            )
-        for c, e in gen.items():
+        for c, e in (gen or {}).items():
             if c not in df.columns:
                 df = df.withColumn(c, F.expr(e))
         return df
@@ -893,7 +1339,7 @@ class VersionedParquetTable:
         SQL text would silently stop binding)."""
         m = self._current()
         pc = list(m["partition_cols"])
-        schema = T.StructType.fromJson(json.loads(m["schema"]))
+        schema = _schema(m)
         names = [f.name for f in schema.fields]
         if old not in names:
             raise ValueError(f"no such column: {old}")
@@ -936,18 +1382,11 @@ class VersionedParquetTable:
                 for f in schema.fields
             ]
         )
-        v = m["version"] + 1
-        self._commit(
-            v,
-            [_entry(f) for f in m["files"]],
-            new_schema,
-            pc,
-            "RENAME_COLUMN",
-            {"renamed": f"{old} -> {new}"},
-            cons,
-            column_mapping=mapping,
+        return self._transact(
+            m, "RENAME_COLUMN",
+            meta={"schema": new_schema.json(), "column_mapping": mapping},
+            metrics={"renamed": f"{old} -> {new}"},
         )
-        return v
 
     def drop_column(self, name: str) -> int:
         """``ALTER TABLE DROP COLUMN`` without rewriting data files
@@ -959,7 +1398,7 @@ class VersionedParquetTable:
         last column is refused."""
         m = self._current()
         pc = list(m["partition_cols"])
-        schema = T.StructType.fromJson(json.loads(m["schema"]))
+        schema = _schema(m)
         names = [f.name for f in schema.fields]
         if name not in names:
             raise ValueError(f"no such column: {name}")
@@ -994,25 +1433,22 @@ class VersionedParquetTable:
         new_schema = T.StructType(
             [f for f in schema.fields if f.name != name]
         )
-        v = m["version"] + 1
-        self._commit(
-            v,
-            [_entry(f) for f in m["files"]],
-            new_schema,
-            pc,
+        return self._transact(
+            m,
             "DROP_COLUMN",
-            {"dropped": name},
-            cons,
-            column_mapping=mapping,
-            # tombstone the physical name: live files still hold its
-            # data, so a later schema-evolving add of the same name
-            # would silently resurrect old values — refused instead
-            # (Delta avoids this with GUID physical names)
-            retired_physical=sorted(
-                set(m.get("retired_physical", [])) | {physical}
-            ),
+            meta={
+                "schema": new_schema.json(),
+                "column_mapping": mapping,
+                # tombstone the physical name: live files still hold its
+                # data, so a later schema-evolving add of the same name
+                # would silently resurrect old values — refused instead
+                # (Delta avoids this with GUID physical names)
+                "retired_physical": sorted(
+                    set(m.get("retired_physical") or []) | {physical}
+                ),
+            },
+            metrics={"dropped": name},
         )
-        return v
 
     def append(self, df: DataFrame, *, merge_schema: bool = False,
                metrics: "dict | Callable[[], dict] | None" = None,
@@ -1024,10 +1460,10 @@ class VersionedParquetTable:
         With ``merge_schema`` the committed schema is the union; old
         files simply lack the new columns (read as NULL).
 
-        Concurrency: appends conflict with nothing (they only add
-        files), so a version collision with another writer is resolved
-        optimistically — re-read the head manifest, merge the new files
-        on top, retry (Delta's blind-append semantics). The data files
+        Concurrency: an append reads no partition, so a version
+        collision rebases the new files onto the winner's head and
+        retries unless the winner changed table metadata (Delta's
+        blind-append semantics, see :meth:`_transact`). The data files
         are written once; only the manifest commit retries.
 
         ``txn=(app_id, txn_version)`` makes the append **idempotent**
@@ -1043,109 +1479,14 @@ class VersionedParquetTable:
         layout themselves (e.g. range-sorted batches for data
         skipping) and accept the small-file trade."""
         m = self._current()
-        if txn is not None:
-            applied = m.get("txns", {}).get(txn[0])
-            if applied is not None and applied >= txn[1]:
-                return m["version"]
-        pc = list(m["partition_cols"])
-        schema = T.StructType.fromJson(json.loads(m["schema"]))
-        if merge_schema:
-            new_fields = {f.name for f in schema.fields}
-            # blocked names: dropped-column tombstones AND the live
-            # physical slots of renamed columns — a new logical column
-            # with either name would collide with on-disk data
-            retired = set(m.get("retired_physical", [])) | set(
-                (m.get("column_mapping") or {}).values()
-            )
-            for f in df.schema.fields:
-                if f.name not in new_fields:
-                    if f.name in retired:
-                        raise ValueError(
-                            f"cannot add column {f.name}: live files hold "
-                            "data under that physical name (dropped or "
-                            "renamed-away column) — rewrite the table first"
-                        )
-                    schema = schema.add(f.name, f.dataType, True)
-        ident_assigned = any(
-            c not in df.columns for c in (m.get("identity_cols") or {})
+        if _txn_applied(m, txn):
+            return m["version"]
+        s = self.stage_write(
+            df, base=m, merge_schema=merge_schema, layout_ready=layout_ready
         )
-        df = self._apply_identity(
-            self._apply_generated(df, m.get("generated_cols")),
-            m.get("identity_cols"),
-        )
-        df = _align(df, schema)
-        cons = m.get("constraints") or {}
-        new_files = self._write_files(
-            df, pc, cons,
-            generated=m.get("generated_cols"),
-            mapping=m.get("column_mapping"),
-            layout_ready=layout_ready,
-        )
-        ident = self._identity_bump(m, new_files)
-        base_schema_json, base_cons = m["schema"], cons
-        for attempt in range(10):
-            files = [_entry(f) for f in m["files"]] + new_files
-            v = m["version"] + 1
-            txns = None
-            if txn is not None:
-                txns = {**m.get("txns", {}), txn[0]: txn[1]}
-            try:
-                self._commit(
-                    v, files, schema, pc, "APPEND", metrics, cons, txns,
-                    identity_cols=ident, cdc_files=cdc_files,
-                )
-                self._maybe_auto_compact(new_files)
-                return v
-            except RuntimeError:  # version collision: rebase on new head
-                m = self._current()
-                if ident_assigned:
-                    # identity values were allocated against the LOST
-                    # head's watermark — the rival may hold overlapping
-                    # ids. Hard conflict; a retry re-derives fresh ids.
-                    raise RuntimeError(
-                        f"append to {self.path} lost a commit race while "
-                        "assigning identity values — retry the operation"
-                    ) from None
-                # caller-supplied identity values: rebase the watermark
-                # on the NEW head so the retried commit never regresses
-                # a rival's advance
-                ident = self._identity_bump(m, new_files)
-                if txn is not None:
-                    applied = m.get("txns", {}).get(txn[0])
-                    if applied is not None and applied >= txn[1]:
-                        # the racing writer WAS this same logical
-                        # transaction (replica replay): our staged files
-                        # stay unreferenced (vacuum sweeps them) and the
-                        # batch still lands exactly once.
-                        return m["version"]
-                # a blind append rebases only onto metadata-identical
-                # heads: if the winner changed the schema or the
-                # constraint set, this append's files were written and
-                # validated against stale metadata — real conflict.
-                if (
-                    m["schema"] != base_schema_json and not merge_schema
-                ) or (m.get("constraints") or {}) != base_cons:
-                    raise RuntimeError(
-                        f"append to {self.path} conflicts with a concurrent "
-                        "schema/constraint change — retry the operation"
-                    ) from None
-                if merge_schema and m["schema"] != base_schema_json:
-                    # The winning commit changed the schema. The stale
-                    # locally-computed union (base head ∪ df) would
-                    # silently DROP the winner's new columns from the
-                    # table schema (its files would read as absent).
-                    # Rebase the schema too: new head ∪ df's fields.
-                    # Our already-written files lack the winner's
-                    # columns and read them as NULL — standard
-                    # mergeSchema semantics.
-                    schema = T.StructType.fromJson(json.loads(m["schema"]))
-                    have = {f.name for f in schema.fields}
-                    for f in df.schema.fields:
-                        if f.name not in have:
-                            schema = schema.add(f.name, f.dataType, True)
-                    base_schema_json = m["schema"]
-        raise RuntimeError(
-            f"append to {self.path} lost {attempt + 1} optimistic commit races"
+        s.cdc_files = cdc_files
+        return self.commit_staged(
+            "APPEND", s, merge_schema=merge_schema, txn=txn, metrics=metrics
         )
 
     def _maybe_auto_compact(self, new_files: list[ManifestEntry]) -> None:
@@ -1166,10 +1507,10 @@ class VersionedParquetTable:
                 thr = max(2, int(props.get("autoCompact.minFiles", "16")))
             except ValueError:
                 thr = 16  # malformed property: fall back, don't fail
-            touched = {tuple(sorted(e.partition.items())) for e in new_files}
+            touched = {_pkey(e.partition) for e in new_files}
             per: dict[tuple, int] = {}
             for f in self._current()["files"]:
-                k = tuple(sorted(f["partition"].items()))
+                k = _pkey(f["partition"])
                 if k in touched:
                     per[k] = per.get(k, 0) + 1
             crowded = [dict(k) for k, n in per.items() if n >= thr]
@@ -1196,29 +1537,14 @@ class VersionedParquetTable:
         micro-batch that REPLACES state (e.g. a streaming model table)
         must not re-apply its update on top of its own result."""
         m = self._current()
-        if txn is not None:
-            applied = m.get("txns", {}).get(txn[0])
-            if applied is not None and applied >= txn[1]:
-                return m["version"]
-        pc = list(m["partition_cols"])
-        cons = m.get("constraints") or {}
-        df = self._apply_identity(
-            self._apply_generated(df, m.get("generated_cols")),
-            m.get("identity_cols"),
+        if _txn_applied(m, txn):
+            return m["version"]
+        files, schema, assigned = self._stage(m, df, layout_ready=layout_ready)
+        return self._transact(
+            m, "OVERWRITE", adds=files, removes=[f["path"] for f in m["files"]],
+            reads=None, meta={"schema": schema.json()},
+            assigned_identity=assigned, txn=txn, metrics=metrics,
         )
-        files = self._write_files(
-            df, pc, cons,
-            generated=m.get("generated_cols"),
-            mapping=m.get("column_mapping"),
-            layout_ready=layout_ready,
-        )
-        v = m["version"] + 1
-        self._commit(
-            v, files, df.schema, pc, "OVERWRITE", metrics, cons,
-            txns={**m.get("txns", {}), txn[0]: txn[1]} if txn else None,
-            identity_cols=self._identity_bump(m, files),
-        )
-        return v
 
     def replace_partitions(
         self,
@@ -1249,138 +1575,22 @@ class VersionedParquetTable:
         exactly those partitions).
         """
         m = self._current()
-        if txn is not None:
-            applied = m.get("txns", {}).get(txn[0])
-            if applied is not None and applied >= txn[1]:
-                return m["version"]
-        pc = list(m["partition_cols"])
-        schema = T.StructType.fromJson(json.loads(m["schema"]))
-        if merge_schema:
-            have = {f.name for f in schema.fields}
-            retired = set(m.get("retired_physical", [])) | set(
-                (m.get("column_mapping") or {}).values()
-            )
-            for f in df.schema.fields:
-                if f.name not in have:
-                    if f.name in retired:
-                        raise ValueError(
-                            f"cannot add column {f.name}: live files hold "
-                            "data under that physical name (dropped or "
-                            "renamed-away column) — rewrite the table first"
-                        )
-                    schema = schema.add(f.name, f.dataType, True)
-        touched = {tuple(sorted(p.items())) for p in partitions}
-        cons = m.get("constraints") or {}
-        ident_assigned = any(
-            c not in df.columns for c in (m.get("identity_cols") or {})
-        )
-        new_files = self._write_files(
-            _align(
-                self._apply_identity(
-                    self._apply_generated(df, m.get("generated_cols")),
-                    m.get("identity_cols"),
-                ),
-                schema,
-            ),
-            pc,
-            cons,
-            generated=m.get("generated_cols"),
-            mapping=m.get("column_mapping"),
+        if _txn_applied(m, txn):
+            return m["version"]
+        s = self.stage_write(
+            df, partitions, base=m, merge_schema=merge_schema,
             layout_ready=layout_ready,
         )
-        stray = [
-            e for e in new_files if tuple(sorted(e.partition.items())) not in touched
-        ]
-        if stray:
-            raise ValueError(
-                f"replacement data writes outside the declared partitions: {stray[:3]}"
-            )
-
-        def _meta_key(man: dict) -> tuple:
-            return (
-                man["schema"],
-                man.get("constraints") or {},
-                man.get("column_mapping") or {},
-                man.get("generated_cols") or {},
-                man.get("properties") or {},
-                sorted(man.get("retired_physical") or []),
-            )
-
-        for _attempt in range(10):
-            kept = [
-                _entry(f)
-                for f in m["files"]
-                if tuple(sorted(f["partition"].items())) not in touched
-            ]
-            v = m["version"] + 1
-            # computed OUTSIDE the try: its own RuntimeError (missing
-            # identity footer stats) must surface as itself, not be
-            # misread as a lost commit race
-            ident_state = self._identity_bump(m, new_files)
-            txns = None
-            if txn is not None:
-                txns = {**m.get("txns", {}), txn[0]: txn[1]}
-            try:
-                self._commit(
-                    v, kept + new_files, schema, pc, operation, metrics, cons,
-                    txns,
-                    identity_cols=ident_state, cdc_files=cdc_files,
-                    # pure re-layout commits rewrite the same visible
-                    # rows — Delta's dataChange=false; the change feed
-                    # skips them
-                    data_change=operation not in ("COMPACT", "ZORDER"),
-                )
-                return v
-            except RuntimeError:  # lost the version race — try to rebase
-                m2 = self._current()
-                if txn is not None:
-                    applied = m2.get("txns", {}).get(txn[0])
-                    if applied is not None and applied >= txn[1]:
-                        # the racing writer WAS this logical transaction
-                        # (replica replay): land-once; staged files stay
-                        # unreferenced for vacuum to sweep
-                        return m2["version"]
-                if ident_assigned:
-                    raise RuntimeError(
-                        f"partition rewrite of {self.path} lost a commit "
-                        "race while assigning identity values — retry the "
-                        "operation"
-                    ) from None
-                if _meta_key(m2) != _meta_key(m) and not (
-                    merge_schema and _meta_key(m2)[1:] == _meta_key(m)[1:]
-                ):
-                    raise RuntimeError(
-                        f"partition rewrite of {self.path} conflicts with a "
-                        "concurrent metadata change — retry the operation"
-                    ) from None
-                base_files = {f["path"]: f for f in m["files"]}
-                head_files = {f["path"]: f for f in m2["files"]}
-                winner_parts = {
-                    tuple(sorted(f["partition"].items()))
-                    for p, f in head_files.items()
-                    if p not in base_files or not _same_record(f, base_files[p])
-                } | {
-                    tuple(sorted(f["partition"].items()))
-                    for p, f in base_files.items()
-                    if p not in head_files
-                }
-                if winner_parts & touched:
-                    raise RuntimeError(
-                        f"partition rewrite of {self.path} conflicts with a "
-                        "concurrent commit touching the same partition(s) "
-                        f"{[dict(t) for t in sorted(winner_parts & touched)][:3]}"
-                        " — re-read and retry"
-                    ) from None
-                if m2["schema"] != m["schema"]:
-                    # merge_schema rebase: re-union onto the winner's schema
-                    schema = T.StructType.fromJson(json.loads(m2["schema"]))
-                    have = {f.name for f in schema.fields}
-                    for f in df.schema.fields:
-                        if f.name not in have:
-                            schema = schema.add(f.name, f.dataType, True)
-                m = m2
-        raise RuntimeError(
-            f"partition rewrite of {self.path} lost 10 optimistic commit races"
+        s.cdc_files = cdc_files
+        return self.commit_staged(
+            operation,
+            s,
+            merge_schema=merge_schema,
+            txn=txn,
+            metrics=metrics,
+            # pure re-layout commits rewrite the same visible rows —
+            # Delta's dataChange=false; the change feed skips them
+            data_change=operation not in ("COMPACT", "ZORDER"),
         )
 
     def upsert(
@@ -1459,15 +1669,13 @@ class VersionedParquetTable:
                 "transactions yet)"
             )
         m = self._current()
-        if txn is not None:
-            applied = m.get("txns", {}).get(txn[0])
-            if applied is not None and applied >= txn[1]:
-                return {
-                    "n_updated": 0,
-                    "n_inserted": 0,
-                    "n_deleted": 0,
-                    "skipped_txn": True,
-                }
+        if _txn_applied(m, txn):
+            return {
+                "n_updated": 0,
+                "n_inserted": 0,
+                "n_deleted": 0,
+                "skipped_txn": True,
+            }
         pc = list(m["partition_cols"])
         cur = self.read()
         updates = self._apply_generated(updates, m.get("generated_cols"))
@@ -1652,27 +1860,17 @@ class VersionedParquetTable:
         matched simply vanish from the manifest.
         """
         m = self._current()
-        pc = list(m["partition_cols"])
-        schema = T.StructType.fromJson(json.loads(m["schema"]))
-        candidates = {e.path for e in self.files_for(filters)}
-        kept = [_entry(f) for f in m["files"] if f["path"] not in candidates]
+        candidates = {e.path for e in self.files_for(filters, m["version"])}
         if not candidates:
-            v = m["version"] + 1
-            self._commit(
-                v, kept, schema, pc, "DELETE",
-                metrics or {"n_deleted": 0}, m.get("constraints") or {},
-            )
+            self._transact(m, "DELETE", metrics=metrics or {"n_deleted": 0})
             return {"n_deleted": 0, "n_files_rewritten": 0}
         cand_df = self._read_paths(m, sorted(candidates))
-        keep_pred = None
-        for c, op, v_ in filters:
-            e_ = _filter_expr(c, op, v_)
-            keep_pred = e_ if keep_pred is None else (keep_pred & e_)
-        survivors = cand_df.filter(~F.coalesce(keep_pred, F.lit(False)))
+        hit = _matches(filters)
+        survivors = cand_df.filter(~hit)
         cdc_files = None
         if self._cdc_enabled(m):
             cdc_files = self._write_cdc(
-                cand_df.filter(F.coalesce(keep_pred, F.lit(False)))
+                cand_df.filter(hit)
                 .withColumn("_change_type", F.lit("delete"))
             )
         n_before = sum(
@@ -1680,25 +1878,19 @@ class VersionedParquetTable:
             for f in m["files"]
             if f["path"] in candidates
         )
-        cons = m.get("constraints") or {}
-        new_files = self._write_files(
-            _align(survivors, schema), pc,
-            mapping=m.get("column_mapping"),
-            # narrow per-file rewrite: survivors keep their source
-            # files' (possibly z-ordered) row order and tight stats;
-            # a rebalance here would merge-shuffle them and widen
-            # every rewritten file's min/max
-            layout_ready=True,
-        )
-        n_after = sum(e.rows or 0 for e in new_files)
-        v = m["version"] + 1
+        # narrow per-file rewrite: survivors keep their source files'
+        # (possibly z-ordered) row order and tight stats; a rebalance
+        # here would merge-shuffle them and widen every rewritten
+        # file's min/max
+        files, _, _ = self._stage(m, survivors, _schema(m), layout_ready=True)
         out = {
-            "n_deleted": n_before - n_after,
+            "n_deleted": n_before - sum(e.rows or 0 for e in files),
             "n_files_rewritten": len(candidates),
         }
-        self._commit(
-            v, kept + new_files, schema, pc, "DELETE", metrics or out, cons,
-            cdc_files=cdc_files,
+        self._transact(
+            m, "DELETE", adds=files, removes=candidates,
+            reads=[f["partition"] for f in m["files"] if f["path"] in candidates],
+            metrics=metrics or out, cdc_files=cdc_files,
         )
         return out
 
@@ -1782,11 +1974,7 @@ class VersionedParquetTable:
         schema = T.StructType.fromJson(json.loads(head_m["schema"]))
         mapping = head_m.get("column_mapping")
 
-        pred = None
-        for c, op, v_ in filters:
-            e_ = _filter_expr(c, op, v_)
-            pred = e_ if pred is None else (pred & e_)
-        hit = F.coalesce(pred, F.lit(False))
+        hit = _matches(filters)
         retained = self.versions()
 
         # rewrite candidate data files (None = every row matched)
@@ -2029,11 +2217,7 @@ class VersionedParquetTable:
                 df = self.spark.read.parquet(full)
                 if any(c not in df.columns for c, _, _ in filters):
                     continue  # pre-evolution file: cannot match
-                pred = None
-                for c, op, v_ in filters:
-                    e_ = _filter_expr(c, op, v_)
-                    pred = e_ if pred is None else (pred & e_)
-                survivors = df.filter(~F.coalesce(pred, F.lit(False)))
+                survivors = df.filter(~_matches(filters))
                 n_kept = survivors.count()
                 if n_kept == df.count():
                     continue
@@ -2090,23 +2274,12 @@ class VersionedParquetTable:
                                            json.loads(m["schema"])["fields"]})
         if unknown:
             raise ValueError(f"UPDATE sets unknown column(s): {unknown}")
-        pc = list(m["partition_cols"])
-        schema = T.StructType.fromJson(json.loads(m["schema"]))
-        candidates = {e.path for e in self.files_for(filters)}
-        kept = [_entry(f) for f in m["files"] if f["path"] not in candidates]
+        candidates = {e.path for e in self.files_for(filters, m["version"])}
         if not candidates:
-            v = m["version"] + 1
-            self._commit(
-                v, kept, schema, pc, "UPDATE",
-                metrics or {"n_updated": 0}, m.get("constraints") or {},
-            )
+            self._transact(m, "UPDATE", metrics=metrics or {"n_updated": 0})
             return {"n_updated": 0, "n_files_rewritten": 0}
         cand_df = self._read_paths(m, sorted(candidates))
-        pred = None
-        for c, op, v_ in filters:
-            e_ = _filter_expr(c, op, v_)
-            pred = e_ if pred is None else (pred & e_)
-        hit = F.coalesce(pred, F.lit(False))
+        hit = _matches(filters)
         matched = cand_df.filter(hit)
         updated = matched.withColumns(
             {c: F.expr(e) for c, e in set_exprs.items()}
@@ -2128,21 +2301,15 @@ class VersionedParquetTable:
             )
         # bounded extra scan: candidate files only, column-pruned
         n_updated = matched.count()
-        cons = m.get("constraints") or {}
-        new_files = self._write_files(
-            _align(merged, schema), pc, cons,
-            generated=gen,
-            mapping=m.get("column_mapping"),
-            layout_ready=True,
-        )
-        v = m["version"] + 1
+        files, _, _ = self._stage(m, merged, _schema(m), layout_ready=True)
         out = {
             "n_updated": n_updated,
             "n_files_rewritten": len(candidates),
         }
-        self._commit(
-            v, kept + new_files, schema, pc, "UPDATE", metrics or out, cons,
-            cdc_files=cdc_files,
+        self._transact(
+            m, "UPDATE", adds=files, removes=candidates,
+            reads=[f["partition"] for f in m["files"] if f["path"] in candidates],
+            metrics=metrics or out, cdc_files=cdc_files,
         )
         return out
 
@@ -2170,107 +2337,11 @@ class VersionedParquetTable:
         anti-join against the (tiny) sidecars; ``compact()`` rewrites
         DV'd partitions and clears them.
         """
-        m = self._current()
-        pc = list(m["partition_cols"])
-        schema = T.StructType.fromJson(json.loads(m["schema"]))
-        cons = m.get("constraints") or {}
-        # per-file dead counts: bounded by files touched, driver-safe
-        per_file = {
-            r["__file"]: r["n"]
-            for r in dead.groupBy("__file")
-            .agg(F.count(F.lit(1)).alias("n"))
-            .collect()
-        }
-        live = {f["path"] for f in m["files"]}
-        unknown = sorted(set(per_file) - live)
-        if unknown:
-            raise ValueError(
-                f"deletion vector targets unknown files: {unknown[:3]}"
-            )
-        dv_rel = None
-        if per_file:
-            # distributed sidecar write (no driver collect of positions)
-            dv_rel = f"dv-{uuid.uuid4().hex}"
-            dead.select("__file", "__pos").write.parquet(
-                os.path.join(self.path, DV_DIR, dv_rel)
-            )
-        entries: list[ManifestEntry] = []
-        for f in m["files"]:
-            e = _entry(f)
-            if e.path in per_file:
-                old = e.dv or {"paths": [], "count": 0}
-                e = ManifestEntry(
-                    e.path,
-                    e.partition,
-                    e.stats,
-                    e.rows,
-                    {
-                        "paths": old["paths"] + [dv_rel],
-                        "count": old["count"] + per_file[e.path],
-                    },
-                )
-            entries.append(e)
-        new_files: list[ManifestEntry] = []
-        if adds is not None:
-            adds = self._apply_identity(
-                self._apply_generated(adds, m.get("generated_cols")),
-                m.get("identity_cols"),
-            )
-            new_files = self._write_files(
-                _align(adds, schema), pc, cons,
-                generated=m.get("generated_cols"),
-                mapping=m.get("column_mapping"),
-            )
-            entries.extend(new_files)
-        if cdc_files is None and self._cdc_enabled(m) and (
-            per_file or adds is not None
-        ):
-            # Standalone CDF fallback (the dv-mode upsert passes its
-            # richer pre/post-image records instead): the newly-dead
-            # positions re-read as delete records, adds as inserts.
-            parts = []
-            if per_file:
-                affected = [f for f in m["files"] if f["path"] in per_file]
-                pre = (
-                    self._scan(
-                        affected, schema, with_position=True,
-                        mapping=m.get("column_mapping"),
-                    )
-                    .join(
-                        dead.select("__file", "__pos"),
-                        on=["__file", "__pos"],
-                        how="left_semi",
-                    )
-                    .drop("__file", "__pos")
-                )
-                parts.append(pre.withColumn("_change_type", F.lit("delete")))
-            if adds is not None:
-                parts.append(
-                    _align(adds, schema).withColumn(
-                        "_change_type", F.lit("insert")
-                    )
-                )
-            change = parts[0]
-            for p in parts[1:]:
-                change = change.unionByName(p)
-            cdc_files = self._write_cdc(change)
-        n_dead = sum(per_file.values())
-        v = m["version"] + 1
-        self._commit(
-            v,
-            entries,
-            schema,
-            pc,
+        return self.commit_staged(
             operation,
-            metrics or {"n_deleted": n_dead, "n_files_dv": len(per_file)},
-            cons,
-            cdc_files=cdc_files,
-            # the appended replacements may carry identity values
-            # (dv-mode upsert): advance the watermark past them, or a
-            # later assignment would reuse their ids
-            identity_cols=self._identity_bump(m, new_files),
+            self.stage_remove_rows(dead, adds=adds, cdc_files=cdc_files),
+            metrics=metrics,
         )
-        return v
 
     def compact(
         self,
@@ -2431,20 +2502,18 @@ class VersionedParquetTable:
                 f"removed by retention, e.g. {missing[0]!r}"
             )
         cur = self._current()
-        v = cur["version"] + 1
-        self._commit(
-            v,
-            [_entry(f) for f in m["files"]],
-            T.StructType.fromJson(json.loads(m["schema"])),
-            list(m["partition_cols"]),
+        return self._transact(
+            cur,
             "RESTORE",
-            {"restored_version": version},
-            m.get("constraints") or {},
-            column_mapping=m.get("column_mapping", {}),
-            retired_physical=m.get("retired_physical", []),
-            generated_cols=m.get("generated_cols", {}),
+            adds=[_entry(f) for f in m["files"]],
+            removes=[f["path"] for f in cur["files"]],
+            reads=None,
+            # table properties, identity watermarks and writer txns
+            # stay at head: rolling those back would re-issue ids and
+            # replay applied batches
+            meta={k: m.get(k) for k in META_KEYS if k != "properties"},
+            metrics={"restored_version": version},
         )
-        return v
 
     # -- CHECK constraints ---------------------------------------------------
 
@@ -2469,17 +2538,12 @@ class VersionedParquetTable:
                 f"{expr_sql!r}"
             )
         cons[name] = expr_sql
-        v = m["version"] + 1
-        self._commit(
-            v,
-            [_entry(f) for f in m["files"]],
-            T.StructType.fromJson(json.loads(m["schema"])),
-            list(m["partition_cols"]),
-            "ADD_CONSTRAINT",
-            {"name": name, "expr": expr_sql},
-            cons,
+        # reads=None: the validation scanned every row, so a concurrent
+        # data change must re-run it
+        return self._transact(
+            m, "ADD_CONSTRAINT", reads=None, meta={"constraints": cons},
+            metrics={"name": name, "expr": expr_sql},
         )
-        return v
 
     def drop_constraint(self, name: str) -> int:
         m = self._current()
@@ -2487,17 +2551,10 @@ class VersionedParquetTable:
         if name not in cons:
             raise ValueError(f"no constraint {name!r}")
         del cons[name]
-        v = m["version"] + 1
-        self._commit(
-            v,
-            [_entry(f) for f in m["files"]],
-            T.StructType.fromJson(json.loads(m["schema"])),
-            list(m["partition_cols"]),
-            "DROP_CONSTRAINT",
-            {"name": name},
-            cons,
+        return self._transact(
+            m, "DROP_CONSTRAINT", meta={"constraints": cons},
+            metrics={"name": name},
         )
-        return v
 
     def clone(self, dest_path: str) -> "VersionedParquetTable":
         """Shallow clone (Delta ``CREATE TABLE ... SHALLOW CLONE``
@@ -2532,14 +2589,14 @@ class VersionedParquetTable:
                 os.path.join(dest_path, DV_DIR, p),
             )
         t = VersionedParquetTable(self.spark, dest_path)
-        t._commit(
-            0,
-            [_entry(f) for f in m["files"]],
-            T.StructType.fromJson(json.loads(m["schema"])),
-            list(m["partition_cols"]),
+        # v0 takes every piece of table metadata from the source commit
+        # (schema, constraints, generated and identity columns, column
+        # mapping, properties); writer txns belong to the source
+        t._transact(
+            {**m, "version": -1, "files": [], "txns": {}},
             "CLONE",
-            {"source_path": self.path, "source_version": m["version"]},
-            m.get("constraints") or {},
+            adds=[_entry(f) for f in m["files"]],
+            metrics={"source_path": self.path, "source_version": m["version"]},
         )
         return t
 
@@ -2995,7 +3052,7 @@ class VersionedParquetTable:
         m = self._load_manifest(
             self.latest_version() if version is None else version
         )
-        schema = T.StructType.fromJson(json.loads(m["schema"]))
+        schema = _schema(m)
         return self._scan(
             m["files"], schema, mapping=m.get("column_mapping")
         )
@@ -3012,7 +3069,7 @@ class VersionedParquetTable:
         m = self._load_manifest(
             self.latest_version() if version is None else version
         )
-        schema = T.StructType.fromJson(json.loads(m["schema"]))
+        schema = _schema(m)
         wanted = {tuple(sorted(p.items())) for p in partitions}
         files = [
             f
@@ -3079,7 +3136,7 @@ class VersionedParquetTable:
         m = self._load_manifest(
             self.latest_version() if version is None else version
         )
-        schema = T.StructType.fromJson(json.loads(m["schema"]))
+        schema = _schema(m)
         keep = {e.path for e in self.files_for(filters, version)}
         df = self._scan(
             [f for f in m["files"] if f["path"] in keep],
@@ -3347,6 +3404,14 @@ def _file_may_match(
         return _range_may_match(st["min"], st["max"], op, v)
     except TypeError:  # predicate/stat type mismatch — don't prune
         return True
+
+
+def _matches(filters: "Sequence[tuple]"):
+    """Every ``(col, op, value)`` filter holds; NULL counts as false."""
+    pred = F.lit(True)
+    for c, op, v in filters:
+        pred = pred & _filter_expr(c, op, v)
+    return F.coalesce(pred, F.lit(False))
 
 
 def _filter_expr(col: str, op: str, value):

@@ -474,6 +474,7 @@ def test_reader_works_through_file_scheme_uri(spark, tmp_path):
     assert DeltaTableReader.is_delta_table("file:" + root)
 
 
+@needs_ref
 def test_import_reference_delta_table_as_vtable(spark, tmp_path):
     """End-to-end migration: the reference repo's own Delta-3.1.0 table
     imports into a VersionedParquetTable with identical rows and

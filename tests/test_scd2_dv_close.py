@@ -78,10 +78,12 @@ def test_dv_close_rewrites_no_data_files(spark, tmp_path):
     path = str(tmp_path / "t")
     spec = replace(SPEC, close_mode="dv")
     t = _run(spark, spec, path)
-    # every SCD2_CLOSE_DV commit re-emits dv metadata + appends closed
-    # copies, but never removes (rewrites) a file
-    ops = {h["version"]: h["operation"] for h in t.history()}
-    close_vs = [v for v, op in ops.items() if op == "SCD2_CLOSE_DV"]
+    # every merge commit that closes rows re-emits dv metadata + appends
+    # closed copies, but never removes (rewrites) a file
+    close_vs = [
+        h["version"] for h in t.history()
+        if h["operation"] == "SCD2_MERGE" and h["metrics"]["n_closed"]
+    ]
     assert close_vs, "no DV close commits happened"
     for v in close_vs:
         raw = t._load_commit(v)

@@ -168,7 +168,7 @@ def test_multi_key_and_partition_pruned_close(spark, table_path):
     b2 = spark.createDataFrame([ev("A", "2023-03-01T10:00:00", "Signed")], BATCH_SCHEMA)
     run_scd2_batch(spark, SPEC, b2, table_path, batch_id="b2")
     t = VersionedParquetTable(spark, table_path)
-    close_commit = [h for h in t.history() if h["operation"] == "SCD2_CLOSE"][0]
+    close_commit = [h for h in t.history() if h["operation"] == "SCD2_MERGE"][0]
     assert close_commit["metrics"]["n_closed"] == 1
     rows = {(r.contract, r.is_current) for r in t.read().collect()}
     assert (("A", False)) in rows and (("A", True)) in rows and (("B", True)) in rows
@@ -189,7 +189,7 @@ def test_vtable_time_travel_and_history(spark, table_path):
     assert t.read(0).count() == 1      # versionAsOf 0
     assert t.read().count() == 2
     ops = [h["operation"] for h in t.history()]
-    assert ops[-1] == "CREATE" and "SCD2_CLOSE" in ops and "APPEND" in ops
+    assert ops == ["SCD2_MERGE", "CREATE"]  # one atomic commit per merge
 
 
 REBUILD_SPEC = SCD2Spec(

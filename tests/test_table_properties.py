@@ -221,14 +221,14 @@ def test_concurrent_scd2_merges_different_days_both_land(spark, tmp_path):
     def rival():
         run_scd2_batch(spark, spec, day2, path, batch_id="feb")
 
-    # race the January merge's Phase-A close commit against the whole
-    # February merge; the rebase logic must let both land
+    # race the January merge's commit against the whole February
+    # merge; the rebase logic must let both land
     day1 = spark.createDataFrame([ev("A", "2023-01-22T09:00:00", "a2")], schema)
     raced = {"done": False}
     orig_commit = VersionedParquetTable._commit
 
     def racing(self, version, files, schema_, pc, op, *a, **kw):
-        if not raced["done"] and op in ("SCD2_CLOSE", "APPEND") and self.path == path:
+        if not raced["done"] and op == "SCD2_MERGE" and self.path == path:
             raced["done"] = True
             rival()
         return orig_commit(self, version, files, schema_, pc, op, *a, **kw)
