@@ -246,10 +246,6 @@ def asof_join(
     strict: bool = False,
     event_tiebreak_cols: Sequence[str] = (),
     direction: str = "backward",
-    skew_policy: str = "off",
-    skew_hot_rows: int = 100_000,
-    skew_ratio: float = 32.0,
-    skew_max_events_per_key: int = 100_000,
 ) -> DataFrame:
     """As-of join: for each probe row, the latest event with
     ``event_ts <= probe_ts`` (``<`` when ``strict``) for the same key —
@@ -261,69 +257,21 @@ def asof_join(
     union them, and carry the adjacent event value across with
     ``last(..., ignorenulls=True)`` over ``(key) ORDER BY (ts, side)``
     (``first`` over the following frame for forward). One shuffle on
-    the key; no range-join explosion; skew handled by AQE. (Spark has
-    no native as-of join; ``pd.merge_asof`` via ``applyInPandas``
-    would serialize every group through Python.)
+    the key; no range-join explosion. (Spark has no native as-of join;
+    ``pd.merge_asof`` via ``applyInPandas`` would serialize every group
+    through Python.)
+
+    Skew: AQE cannot split a window partition, so all probes and events
+    of one key run in one task. A hot probe key is therefore correct but
+    serial — a known limit (README).
 
     Tiebreak among equal-ts events: backward keeps the greatest
     ``event_tiebreak_cols`` value (latest wins), forward the smallest
     (earliest wins) — the natural "closest in its direction" reading.
-
-    ``skew_policy`` (round-9 directive #4, opt-in, default ``"off"``):
-    the window form's one weakness is a hot PROBE key — the whole
-    (key) window partition lands in one task, and AQE cannot split a
-    window partition the way it splits a join. With the pre-flight on
-    (``operators/skew.decide_hot_keys`` over the probe side), hot
-    keys' probes stay fully distributed: their events collapse to ONE
-    per-key timestamp-sorted array (bounded by
-    ``skew_max_events_per_key``, fail-loud above it), broadcast to
-    every probe task, and each probe picks its adjacent event with
-    array ``filter``+``get`` — map-side, no window, row-identical to
-    the window form (pytest-pinned). Cold keys keep the plain path.
-    The shape this serves is the classic one: millions of probes
-    against a dimension whose per-key history is modest.
     """
     if direction not in ("backward", "forward"):
         raise ValueError(f"direction must be backward|forward, got {direction!r}")
     keys = _keys(key_cols)
-    if skew_policy != "off":
-        from delta_lake_pyspark_scd2_spark.operators.skew import (
-            decide_hot_keys,
-        )
-
-        hot_df, _, n_hot = decide_hot_keys(
-            probes,
-            keys,
-            policy=skew_policy,
-            hot_rows=skew_hot_rows,
-            ratio=skew_ratio,
-            track=True,
-        )
-        if hot_df is not None:
-            cold = asof_join(
-                probes.join(F.broadcast(hot_df), keys, "left_anti"),
-                events.join(F.broadcast(hot_df), keys, "left_anti"),
-                keys,
-                probe_ts,
-                event_ts,
-                value_cols,
-                strict=strict,
-                event_tiebreak_cols=event_tiebreak_cols,
-                direction=direction,
-            )
-            hot = _asof_join_broadcast_arrays(
-                probes.join(F.broadcast(hot_df), keys, "left_semi"),
-                events.join(F.broadcast(hot_df), keys, "left_semi"),
-                keys,
-                probe_ts,
-                event_ts,
-                value_cols,
-                strict=strict,
-                event_tiebreak_cols=event_tiebreak_cols,
-                direction=direction,
-                max_events_per_key=skew_max_events_per_key,
-            )
-            return cold.unionByName(hot)
     # Window-order sides. Backward scans the preceding frame: events
     # sort before probes at equal ts => inclusive (<=); strict flips.
     # Forward scans the following frame: probes sort before events at
@@ -376,110 +324,6 @@ def asof_join(
         F.col(f"__state.{c}").alias(c) for c in value_cols
     ]
     return merged.filter(F.col("__is_probe")).select(*out_cols)
-
-
-def _asof_join_broadcast_arrays(
-    probes: DataFrame,
-    events: DataFrame,
-    keys: Sequence[str],
-    probe_ts: str,
-    event_ts: str,
-    value_cols: Sequence[str],
-    *,
-    strict: bool,
-    event_tiebreak_cols: Sequence[str],
-    direction: str,
-    max_events_per_key: int,
-) -> DataFrame:
-    """Hot-key arm of :func:`asof_join`'s skew split: per-key events
-    collapse to ONE timestamp-sorted array of ``(ts, tiebreaks,
-    state)`` structs, broadcast to the probe side, and every probe
-    picks its adjacent event with ``filter`` + ``get`` — pure column
-    expressions, so a hot key's probes process map-side across all
-    tasks instead of collapsing into one window partition.
-
-    Equivalence to the window form: the array is ``array_sort``-ed
-    ascending on ``(__ts, tiebreaks)`` — the window's event order —
-    so "last candidate at-or-before" == backward's
-    ``last(ignorenulls)`` carry and "first candidate at-or-after" ==
-    forward's ``first``. Bounds are enforced IN the plan, fail-loud:
-    a hot key with more than ``max_events_per_key`` events, or a null
-    probe/event timestamp on the hot path (whose window-order
-    placement the array filter cannot mirror), raises at execution.
-    """
-    tb = list(event_tiebreak_cols)
-    ev_ts = F.col(event_ts)
-    guarded_ev_ts = F.when(
-        ev_ts.isNull(),
-        F.raise_error(
-            F.lit(
-                "asof_join skew path requires non-null event timestamps "
-                "on hot keys"
-            )
-        ),
-    ).otherwise(ev_ts)
-    e_struct = F.struct(
-        guarded_ev_ts.alias("__ts"),
-        *[F.col(c).alias(f"__tb{i}") for i, c in enumerate(tb)],
-        F.struct(*[F.col(c) for c in value_cols]).alias("__state"),
-    )
-    ev_arr = (
-        events.select(*keys, e_struct.alias("__e"))
-        .groupBy(*keys)
-        .agg(F.array_sort(F.collect_list("__e")).alias("__evs"))
-        .select(
-            *keys,
-            F.when(
-                F.size("__evs") > max_events_per_key,
-                F.raise_error(
-                    F.lit(
-                        "asof_join hot key exceeds "
-                        f"skew_max_events_per_key={max_events_per_key} "
-                        "events; raise the cap or pre-collapse the "
-                        "event history"
-                    )
-                ),
-            )
-            .otherwise(F.col("__evs"))
-            .alias("__evs"),
-        )
-    )
-    pr_cols = list(probes.columns)
-    raw_pts = F.col(probe_ts)
-    # null guard evaluated ONCE per probe row as its own column — a
-    # raise_error branch inside the filter lambda would re-evaluate
-    # per array element and blocks codegen in the hot loop
-    guarded_pts = F.when(
-        raw_pts.isNull(),
-        F.raise_error(
-            F.lit(
-                "asof_join skew path requires non-null probe timestamps "
-                "on hot keys"
-            )
-        ),
-    ).otherwise(raw_pts)
-    pts = F.col("__pts")
-    if direction == "backward":
-        cond = (
-            (lambda e: e["__ts"] < pts) if strict else (lambda e: e["__ts"] <= pts)
-        )
-    else:
-        cond = (
-            (lambda e: e["__ts"] > pts) if strict else (lambda e: e["__ts"] >= pts)
-        )
-    joined = probes.withColumn("__pts", guarded_pts).join(
-        F.broadcast(ev_arr), list(keys), "left"
-    )
-    cand = F.filter(F.col("__evs"), cond)
-    picked = (
-        F.get(cand, F.size(cand) - 1)
-        if direction == "backward"
-        else F.get(cand, F.lit(0))
-    )
-    return joined.withColumn("__pick", picked).select(
-        *[F.col(c) for c in pr_cols],
-        *[F.col("__pick.__state").getField(c).alias(c) for c in value_cols],
-    )
 
 
 def check_invariants(

@@ -1,11 +1,22 @@
 """Skew-mitigation join helpers.
 
-AQE's skew-join (enabled in the session factory) splits oversized
-shuffle partitions at runtime and is the right default. Salting is the
-*planned* alternative for the cases AQE cannot fix: a single hot key
-whose rows exceed one task's memory even after splitting (AQE splits a
-partition's files/ranges, but one key's rows still co-locate on the
-build side), or a broadcast-too-big dimension joined on a power-law key.
+AQE's skew-join split (enabled in the session factory) is the engine's
+only skew handling; no join site profiles keys or routes hot keys on
+its own. That is enough for the engine's own joins:
+
+  * In the SCD2 merge and in ``upsert``, the other side of each join
+    is key-unique (current rows, ``upd_keys``, ``gone_keys``), so a
+    hot key buffers one row per sort-merge group, however many rows
+    the streamed side holds for it.
+  * AQE splits the streamed side's oversized partition by map ranges
+    for left-outer, left-semi and left-anti joins — the join types
+    those sites use.
+  * In ``asof_join``, one hot probe key's window runs in one task:
+    correct but serial (a known limit, see the README).
+
+Salting is the *planned* alternative for a join whose both sides
+repeat a hot key, or a broadcast-too-big dimension joined on a
+power-law key.
 """
 
 from __future__ import annotations
@@ -47,151 +58,3 @@ def salted_join(
         F.explode(F.array(*[F.lit(i) for i in range(salt_buckets)])),
     )
     return l_salted.join(r_salted, on=[*keys, "__salt"], how=how).drop("__salt")
-
-
-def key_count_profile(df: DataFrame, keys: Sequence[str]) -> dict:
-    """Pre-flight key-skew profile: one map-side-combined aggregation
-    over the (batch-sized) frame — ``max``/``avg`` rows per key and the
-    distinct-key count. This is the measurement half of
-    ``diag_key_skew``, packaged for pipelines that must DECIDE (salt /
-    split / plain join) before planning the join."""
-    row = (
-        df.groupBy(*keys)
-        .agg(F.count(F.lit(1)).alias("__n"))
-        .agg(
-            F.max("__n").alias("max_rows"),
-            F.avg("__n").alias("avg_rows"),
-            F.count(F.lit(1)).alias("n_keys"),
-        )
-        .collect()[0]
-    )
-    return {
-        "max_rows": int(row["max_rows"] or 0),
-        "avg_rows": float(row["avg_rows"] or 0.0),
-        "n_keys": int(row["n_keys"] or 0),
-    }
-
-
-def hot_keys(df: DataFrame, keys: Sequence[str], min_rows: int) -> DataFrame:
-    """Keys whose row count reaches ``min_rows`` — by construction at
-    most ``rows(df) / min_rows`` of them, so the result is always tiny
-    relative to the frame and safe to broadcast."""
-    return (
-        df.groupBy(*keys)
-        .agg(F.count(F.lit(1)).alias("__n"))
-        .filter(F.col("__n") >= min_rows)
-        .select(*keys)
-    )
-
-
-def decide_hot_keys(
-    df: DataFrame,
-    keys: Sequence[str],
-    *,
-    policy: str = "auto",
-    hot_rows: int = 100_000,
-    ratio: float = 32.0,
-    profile: dict | None = None,
-    track: bool = False,
-) -> tuple[DataFrame | None, dict, int]:
-    """The shared pre-flight decision rule used by every skew-aware
-    join site (SCD2 merge Phase A, the generic ``upsert`` target-side
-    joins, ``asof_join``'s probe side): measure the key distribution,
-    decide whether any key is hot enough to route around the shuffle,
-    and if so materialize the (broadcast-sized) hot-key set.
-
-    ``policy``: ``"off"`` → never split; ``"auto"`` → split when the
-    max key reaches ``hot_rows`` AND ``ratio``× the mean; ``"force"``
-    → split whatever the thresholds say (known-skewed feeds / tests).
-    ``profile`` lets a caller hand in a key-count profile it already
-    computed (e.g. piggybacked on a validation aggregation) so the
-    decision costs nothing extra.
-
-    Returns ``(hot_df, profile, n_hot_keys)``. ``hot_df`` is persisted
-    when engaged — the CALLER unpersists it after its joins run.
-    ``track=True`` registers the persist with
-    ``functions.caching.persist_tracked`` instead, for operators that
-    RETURN lazy plans and cannot know when the caller finishes
-    (``asof_join``); harness layers release it at query boundaries.
-    """
-    if policy not in {"auto", "force", "off"}:
-        raise ValueError(
-            f"skew policy must be one of 'auto'/'force'/'off', got {policy!r}"
-        )
-    if policy == "off":
-        return None, {}, 0
-    prof = profile if profile is not None else key_count_profile(df, keys)
-    if policy == "force":
-        # always engage (given any key with >= 2 rows): cap the ratio
-        # cut at the observed max so a single dominant key — which
-        # drags the MEAN up past itself — still routes hot
-        cut = max(2, min(int(ratio * prof["avg_rows"]), prof["max_rows"]))
-    elif prof["max_rows"] >= hot_rows and prof["max_rows"] >= ratio * max(
-        prof["avg_rows"], 1.0
-    ):
-        cut = max(hot_rows, int(ratio * prof["avg_rows"]))
-    else:
-        cut = 0
-    if cut and prof["max_rows"] >= cut:
-        hot = hot_keys(df, keys, cut)
-        if track:
-            from delta_lake_pyspark_scd2_spark.functions.caching import (
-                persist_tracked,
-            )
-
-            hot = persist_tracked(hot)
-        else:
-            hot = hot.persist()
-        n = hot.count()
-        if n:
-            return hot, prof, n
-        hot.unpersist()
-    return None, prof, 0
-
-
-def hot_split_join(
-    left: DataFrame,
-    right: DataFrame,
-    on: Sequence[str] | str,
-    *,
-    hot: DataFrame,
-    how: str = "left",
-) -> DataFrame:
-    """Equi-join with hot keys routed around the shuffle.
-
-    Rows of ``left`` whose key appears in ``hot`` join against a
-    BROADCAST of the matching ``right`` rows — map-side, so no single
-    task ever owns a hot key's full probe set (the failure AQE's
-    skew-join cannot fix when one key exceeds a task: AQE splits a
-    partition's ranges, but the build rows of one key still co-locate).
-    Everything else takes the ordinary shuffle join. When ``right`` is
-    key-unique (a dimension, or SCD2 current rows — ONE row per key),
-    the broadcast side is exactly |hot| rows: replication-free, cheaper
-    than salting, and the result equals the plain join row-for-row.
-
-    ``how`` supports the shapes a merge needs: ``left``, ``inner``,
-    ``left_semi``, ``left_anti``. Null-keyed left rows never match
-    ``hot`` (semi/anti null semantics), fall to the cold path, and keep
-    plain-join semantics there. ``left_anti`` is sound under the split
-    because routing partitions the LEFT side only and the anti
-    predicate factors through it: ``l_hot``'s keys are a subset of
-    ``hot``, so testing them against ``right ∩ hot`` (the broadcast
-    ``r_hot``) decides exactly membership in ``right``; ``l_cold``
-    tests against all of ``right`` unchanged. Right/full joins remain
-    REJECTED: unmatched right rows would duplicate across the hot and
-    cold branches.
-    """
-    if how not in {"left", "inner", "left_semi", "left_anti"}:
-        raise ValueError(
-            "hot_split_join supports how in "
-            f"{{'left','inner','left_semi','left_anti'}}, got {how!r} — "
-            "right/full would return wrong results under the hot/cold split"
-        )
-    keys = [on] if isinstance(on, str) else list(on)
-    hot = hot.select(*keys)
-    l_hot = left.join(F.broadcast(hot), keys, "left_semi")
-    l_cold = left.join(F.broadcast(hot), keys, "left_anti")
-    r_hot = right.join(F.broadcast(hot), keys, "left_semi")
-    joined_hot = l_hot.join(F.broadcast(r_hot), keys, how)
-    joined_cold = l_cold.join(right, keys, how)
-    return joined_hot.unionByName(joined_cold)

@@ -20,14 +20,23 @@ version. (The reference ran Phase A and Phase B as two Delta MERGEs,
 so its history holds a version between them in which every updated key
 has no current row — a documented divergence.)
 
-Scale story (the levers that matter at 100 TB):
+Cost:
   * Phase A touches only the partitions holding the current rows of
-    *changed* keys — partition-scoped CoW, cost ∝ changed data.
+    *changed* keys, but rewrites every file of each touched partition
+    (copy-on-write), so its cost follows the touched partitions' size,
+    not the rows closed: on the benchmark's daily merge it copies about
+    40 rows per row closed, and a deeper history makes it slower.
   * Phase B only adds files (no rewrite at all).
   * Change detection joins staged×current on the key — broadcast when
     the batch is small, AQE-planned shuffle otherwise.
   * The idempotency anti-join reads only (key, valid_from) columns —
     column-pruned parquet scan.
+
+Skew: AQE's skew-join split (``session.py``) is the only skew
+handling. The batch×current join is a left-outer join whose right side
+is key-unique (one current row per key), so a hot batch key buffers one
+row per sort-merge group, and AQE splits the batch side's oversized
+partition by map ranges.
 """
 
 from __future__ import annotations
@@ -85,28 +94,8 @@ class SCD2Spec:
     #: of keys inside a 1 TB day-partition is exactly the case "dv"
     #: exists for.
     close_mode: str = "rewrite"
-    #: Skew pre-flight for the Phase-A change-detection joins (merge is
-    #: ~75% of ETL wall time; a single hot key — one entity emitting
-    #: millions of events in a batch — is the input shape AQE's
-    #: skew-join cannot fix, because one key's build rows still
-    #: co-locate on one task). "auto": profile the batch's key counts
-    #: (one batch-sized aggregation) and, when max-rows-per-key >=
-    #: ``skew_hot_rows`` AND >= ``skew_ratio``× the mean, route hot
-    #: keys through a broadcast split join (operators/skew.py).
-    #: "force" always splits (tests / known-skewed feeds); "off"
-    #: disables the profile entirely.
-    skew_policy: str = "auto"
-    skew_hot_rows: int = 100_000
-    skew_ratio: float = 32.0
 
     def __post_init__(self) -> None:
-        # fail loud on typos ('Auto', 'none', …) instead of silently
-        # falling into the auto-threshold branch (round-9 advice)
-        if self.skew_policy not in {"auto", "force", "off"}:
-            raise ValueError(
-                f"skew_policy must be one of 'auto'/'force'/'off', "
-                f"got {self.skew_policy!r}"
-            )
         if self.dedup_mode not in {"keep_latest", "drop_all"}:
             raise ValueError(
                 f"dedup_mode must be 'keep_latest' or 'drop_all', "
@@ -331,17 +320,6 @@ def run_scd2_batch(
     try:
         kept, discarded = validation.split_valid(tagged)
 
-        # With skew profiling on, the DQ tallies and the merge's key-count
-        # profile fold out of ONE per-key aggregation instead of a flat DQ
-        # agg plus a dedicated profile job (round-9 directive #5) — the
-        # pre-flight becomes free relative to the validation pass.
-        def _dq_compute() -> tuple[dict, dict | None]:
-            if spec.skew_policy != "off":
-                return validation.dq_metrics_with_key_profile(
-                    tagged, list(spec.key_cols)
-                )
-            return validation.dq_metrics(tagged), None
-
         def _write_quarantine(dq: dict) -> None:
             if quarantine_path is not None and dq["n_total"] > dq["n_kept"]:
                 discarded.write.mode("overwrite").parquet(
@@ -349,12 +327,10 @@ def run_scd2_batch(
                 )
 
         creating = not VersionedParquetTable.is_table(table_path)
-        key_profile: dict | None = None
         dq: dict = {}
         if not creating:
-            # the merge needs the key-count profile BEFORE planning the
-            # batch×current join (skew pre-flight), so DQ stays inline here
-            dq, key_profile = _dq_compute()
+            # the merge path lands quarantine before any table mutation
+            dq = validation.dq_metrics(tagged)
             _write_quarantine(dq)
         metrics_val_s = round(time.time() - t0, 3)
 
@@ -377,7 +353,7 @@ def run_scd2_batch(
             from concurrent.futures import ThreadPoolExecutor
 
             pool = ThreadPoolExecutor(max_workers=1)
-            dq_fut = pool.submit(_dq_compute)
+            dq_fut = pool.submit(validation.dq_metrics, tagged)
             try:
                 versions = _prepare_versions(spec, kept)
                 # count rides the initial write job (observe) — recomputing
@@ -405,7 +381,7 @@ def run_scd2_batch(
                 )
             finally:
                 pool.shutdown(wait=True)
-            dq, _ = dq_fut.result()
+            dq = dq_fut.result()
             _write_quarantine(dq)
             merge_part: dict = {
                 "n_inserted": int(obs.get["n_inserted"] or 0),
@@ -414,9 +390,7 @@ def run_scd2_batch(
             }
         else:
             table = VersionedParquetTable(spark, table_path)
-            merge_part = _merge_batch(
-                spec, table, kept, batch_id, key_profile=key_profile
-            )
+            merge_part = _merge_batch(spec, table, kept, batch_id)
         # canonical key order (dq before durations, merge keys after) so
         # the metrics CSV header is identical whichever path ran and
         # whenever the DQ future resolved
@@ -436,8 +410,6 @@ def _merge_batch(
     table: VersionedParquetTable,
     kept: DataFrame,
     batch_id: str,
-    *,
-    key_profile: dict | None = None,
 ) -> dict:
     """SCD2 merge (reference Phase A/B, src/header_etl.py:144-280) on the
     versioned table, committed ONCE.
@@ -513,39 +485,11 @@ def _merge_batch(
     # an event may be later than valid_from yet still interleave with a
     # collapsed-away same-value event; only the full event log can see
     # that (convergence property, tests/test_scd2_properties.py).
-    # Skew pre-flight (round-8 directive #7): decide BEFORE planning
-    # the batch×current join whether a hot key needs the broadcast
-    # split path. The profile is one batch-sized aggregation; `hot_df`
-    # is ≤ rows/cut keys by construction, so always broadcastable.
-    from delta_lake_pyspark_scd2_spark.operators.skew import (
-        decide_hot_keys,
-        hot_split_join,
-    )
-
+    #
     # every frame persisted below; the finally releases them whatever
     # happens, on the Phase-B thread too
     cached: list[DataFrame] = []
     try:
-        # profile normally piggybacked on the validation pass's per-key
-        # aggregation (run_scd2_batch, round-9 directive #5); the
-        # dedicated job inside decide_hot_keys is the fallback for
-        # direct _merge_batch callers
-        hot_df, _, n_hot_keys = decide_hot_keys(
-            kept,
-            keys,
-            policy=spec.skew_policy,
-            hot_rows=spec.skew_hot_rows,
-            ratio=spec.skew_ratio,
-            profile=key_profile,
-        )
-        if hot_df is not None:
-            cached.append(hot_df)
-
-        def _left_join_current(left: DataFrame, right: DataFrame) -> DataFrame:
-            if hot_df is None:
-                return left.join(right, on=keys, how="left")
-            return hot_split_join(left, right, keys, hot=hot_df, how="left")
-
         prior_events: DataFrame | None = None
         if spec.late_policy == "rebuild":
             spark = kept.sparkSession
@@ -561,11 +505,13 @@ def _merge_batch(
                 prior_events = existing.select(*kept.columns)
             if seen is None:
                 seen = prior_events.groupBy(*keys).agg(F.max(ts).alias("__max_seen"))
-            staged = _left_join_current(_left_join_current(kept, current), seen)
+            staged = kept.join(current, on=keys, how="left").join(
+                seen, on=keys, how="left"
+            )
             is_new_key = F.col("__cur_from").isNull()
             is_fresh = F.col("__max_seen").isNull() | (F.col(ts) > F.col("__max_seen"))
         else:
-            staged = _left_join_current(kept, current)
+            staged = kept.join(current, on=keys, how="left")
             is_new_key = F.col("__cur_from").isNull()
             is_fresh = F.col(ts) > F.col("__cur_from")
         # The stale count rides the staged cache's materialization as an
@@ -643,6 +589,8 @@ def _merge_batch(
         # CollectMetrics row): non-blocking getRowOrEmpty, falling back
         # to an explicit count — cheap now, the cache is materialized.
         n_stale = _observed_long(stale_obs, "n_stale")
+        # the fallback leaves a count in the run metrics
+        n_observation_fallbacks = int(n_stale is None)
         if n_stale is None:
             n_stale = late.count()
 
@@ -743,9 +691,9 @@ def _merge_batch(
             df.unpersist()
     out = {
         "n_closed": closed,
-        "n_hot_keys": n_hot_keys,
         "n_inserted": n_inserted,
         "n_stale": n_stale,
+        "n_observation_fallbacks": n_observation_fallbacks,
         # Phase-A scope evidence: partitions actually rewritten (or
         # DV'd) this merge — the number that must track the BATCH's
         # date spread, not the table's, for cost ∝ changed data

@@ -183,43 +183,6 @@ def scd2_asof_join(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 @register(
-    "scd2_asof_join_skew_split",
-    oracle=REGISTRY["scd2_asof_join"].oracle,
-    doc="The SAME as-of join forced through the probe-side hot-key "
-    "split (round-9 directive #4): every user_id above the forced cut "
-    "routes its probes map-side against a broadcast sorted event "
-    "array (operators/scd2._asof_join_broadcast_arrays) while the "
-    "rest keep the union+window plan — and the result must value-hash "
-    "against the identical oracle as scd2_asof_join. This is the arm "
-    "AQE cannot provide: a window partition cannot be split at "
-    "runtime, a broadcast probe can.",
-)
-def scd2_asof_join_skew_split(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ev = load_table(spark, sf_dir, "events")
-    clicks = ev.filter(F.col("event_type") == "click").select(
-        "user_id",
-        "ts",
-        F.col("event_id").alias("click_event_id"),
-        F.col("value").alias("click_value"),
-    )
-    purchases = ev.filter(F.col("event_type") == "purchase").select(
-        "event_id", "user_id", "ts"
-    )
-    return scd2.asof_join(
-        probes=purchases,
-        events=clicks,
-        key_cols="user_id",
-        probe_ts="ts",
-        event_ts="ts",
-        value_cols=["click_event_id", "click_value"],
-        event_tiebreak_cols=["click_event_id"],
-        skew_policy="force",
-        skew_hot_rows=2,
-        skew_ratio=1.0,
-    )
-
-
-@register(
     "scd2_late_rebuild",
     oracle="""
     WITH flagged AS (
@@ -388,7 +351,7 @@ def dv_delete_update(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 @register(
-    "s8_upsert_skew_split",
+    "s8_upsert_multirow_target",
     oracle="""
     WITH base AS (
       SELECT l_orderkey, l_linenumber,
@@ -405,18 +368,13 @@ def dv_delete_update(spark: SparkSession, sf_dir: str) -> DataFrame:
     SELECT * FROM base
     WHERE l_orderkey NOT IN (SELECT l_orderkey FROM upd)
     """,
-    doc="Generic MERGE through the target-side hot-key split (round-9 "
-    "directive #4): the target holds MULTIPLE rows per key (lineitem "
-    "keyed by order), skew_policy='force' routes keys at/above the "
-    "per-key line count cut through broadcast semi/anti split joins "
-    "(operators/skew.hot_split_join, incl. the new left_anti mode on "
-    "the survivors join) while below-cut keys keep the ordinary "
-    "shuffle — and the merged table must value-hash against the same "
-    "replace-matched-keys oracle as a plain merge. Proves the split "
-    "is invisible to results through the driver gate, not just "
-    "pytest.",
+    doc="Generic MERGE on a target with SEVERAL rows per key "
+    "(lineitem keyed by order): every line of a matched order is "
+    "replaced by the one update row, through the target-side semi/anti "
+    "joins — the merged table must value-hash against the "
+    "replace-matched-keys oracle.",
 )
-def s8_upsert_skew_split(spark: SparkSession, sf_dir: str) -> DataFrame:
+def s8_upsert_multirow_target(spark: SparkSession, sf_dir: str) -> DataFrame:
     from delta_lake_pyspark_scd2_spark.plans.scratch import scratch_path
 
     li = load_table(spark, sf_dir, "lineitem")
@@ -435,15 +393,9 @@ def s8_upsert_skew_split(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.lit(-1).cast("long").alias("price"),
         )
     )
-    path = scratch_path("s8_upsert_skew_split")
+    path = scratch_path("s8_upsert_multirow_target")
     t = VersionedParquetTable.create(spark, base, path)
-    t.upsert(
-        updates,
-        ["l_orderkey"],
-        skew_policy="force",
-        skew_ratio=1.0,
-        skew_hot_rows=2,
-    )
+    t.upsert(updates, ["l_orderkey"])
     return t.read().select("l_orderkey", "l_linenumber", "price")
 
 

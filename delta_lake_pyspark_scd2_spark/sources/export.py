@@ -31,6 +31,7 @@ from typing import Any
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from delta_lake_pyspark_scd2_spark.operators.text import token_count_ws
 
@@ -392,13 +393,15 @@ def export_token_shards(
         # once; round-10 backlog #2 — text previously crossed both the
         # (source, chunk) prefix-sum window exchange AND the shard
         # repartition). The plan table is one (source, id, shard, tok)
-        # row per doc, so the attach is gated: broadcast only when it
-        # fits comfortably (rows ≤ autoBroadcastJoinThreshold / 64B)
-        # AND (source, id) is a unique non-null key (the broadcast join
-        # on the pair must be 1:1 with the window form; NULL keys take
-        # the window path, whose null-safe joins keep them). Oversized
-        # or degenerate inputs fall back to the full-frame prefix sum —
-        # the plan compute spent on the narrow frame is metadata-sized.
+        # row per doc, so the attach is gated: broadcast only when its
+        # measured size fits autoBroadcastJoinThreshold (a fixed 40 B
+        # per row — UnsafeRow null bits plus four 8-byte slots — plus
+        # the bytes of its string columns) AND (source, id) is a
+        # unique non-null key (the broadcast join on the pair must be
+        # 1:1 with the window form; NULL keys take the window path,
+        # whose null-safe joins keep them). Oversized or degenerate
+        # inputs fall back to the full-frame prefix sum — the plan
+        # compute spent on the narrow frame is metadata-sized.
         plan = persist_tracked(
             tokens_before(
                 df.select(
@@ -409,8 +412,16 @@ def export_token_shards(
                 id_col=id_col,
             ).withColumn("shard", shard_expr)
         )
+        str_cols = [
+            c
+            for c in (source_col, id_col, "shard")
+            if isinstance(plan.schema[c].dataType, T.StringType)
+        ]
         gate = plan.agg(
             F.count(F.lit(1)).alias("n"),
+            F.sum(
+                sum(F.coalesce(F.octet_length(c), F.lit(0)) for c in str_cols)
+            ).alias("str_bytes"),
             F.count_distinct(F.col(source_col), F.col(id_col)).alias("nk"),
             F.sum(
                 (
@@ -432,7 +443,7 @@ def export_token_shards(
             except ValueError:
                 bcast_bytes = 0
         plan_fits = (
-            gate["n"] * 64 <= max(bcast_bytes, 0)
+            gate["n"] * 40 + (gate["str_bytes"] or 0) <= max(bcast_bytes, 0)
             and gate["nk"] == gate["n"]
             and not gate["nulls"]
         )

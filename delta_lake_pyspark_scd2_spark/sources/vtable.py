@@ -13,8 +13,11 @@ environment, so this module supplies the same *capabilities* natively:
   * readers pin a manifest version → snapshot isolation + time travel;
   * partition-scoped copy-on-write: an update rewrites only the files
     of touched partitions and commits a manifest that swaps them —
-    untouched partitions are carried by reference. At 100 TB a merge
-    touching one day of data costs one day of data, not the table.
+    untouched partitions are carried by reference. A write costs the
+    whole of every partition it touches, not the rows it changes: the
+    SCD2 merge's close copies about 40 rows per row closed on the
+    benchmark's daily merge, where the current rows of a batch's
+    changed keys spread over most day partitions.
 
 Concurrency: manifest commit is an atomic ``os.link`` (hard-link fails
 EEXIST atomically — unlike ``os.rename``, which silently overwrites),
@@ -1604,9 +1607,6 @@ class VersionedParquetTable:
         operation: str = "UPSERT",
         metrics: "dict | Callable[[], dict] | None" = None,
         txn: tuple[str, int] | None = None,
-        skew_policy: str = "off",
-        skew_hot_rows: int = 100_000,
-        skew_ratio: float = 32.0,
     ) -> dict:
         """Generic MERGE (reference S8's ``whenMatchedUpdate`` +
         ``whenNotMatchedInsert``, src/header_etl.py:205-215 shape, made
@@ -1644,20 +1644,12 @@ class VersionedParquetTable:
         same logical transaction lands once — exactly-once foreachBatch
         MERGE sinks.
 
-        ``skew_policy`` (round-9 directive #4, opt-in, default
-        ``"off"``): pre-flight the TARGET's key distribution
-        (``operators/skew.decide_hot_keys`` — "auto" profiles +
-        thresholds, "force" always splits) and route hot keys' target
-        rows through broadcast split joins for every target-side
-        semi/anti probe (match counts, CDC pre-images, the DV dead-row
-        scan, the rewrite survivors anti-join). This is the planned
-        defense for the one shape AQE's skew-join cannot fix: a single
-        key whose target rows exceed a task even after partition
-        splitting. The probe sides (``upd_keys``/``gone_keys``) are
-        key-distinct, so the broadcast branch is replication-free. The
-        "auto" profile is one key-aggregation over the current
-        snapshot — that scan cost is why the default stays "off"; turn
-        it on for tables with power-law keys.
+        Skew: every target-side join (match counts, CDC pre-images,
+        the DV dead-row scan, the rewrite survivors) is a left-semi or
+        left-anti join against ``upd_keys`` or ``gone_keys``, which are
+        key-distinct, so a hot target key buffers one row per
+        sort-merge group and AQE's skew-join split divides its
+        oversized partition by map ranges.
         """
         keys = list(key_cols)
         if mode not in {"rewrite", "dv"}:
@@ -1709,41 +1701,18 @@ class VersionedParquetTable:
         gone_keys = (
             upd_keys if del_keys is None else upd_keys.unionByName(del_keys).distinct()
         )
-        from delta_lake_pyspark_scd2_spark.operators.skew import (
-            decide_hot_keys,
-            hot_split_join,
-        )
-
-        hot_df, _, n_hot_keys = decide_hot_keys(
-            cur,
-            keys,
-            policy=skew_policy,
-            hot_rows=skew_hot_rows,
-            ratio=skew_ratio,
-        )
-
-        def _semi(left: DataFrame, right: DataFrame) -> DataFrame:
-            if hot_df is None:
-                return left.join(right, on=keys, how="left_semi")
-            return hot_split_join(left, right, keys, hot=hot_df, how="left_semi")
-
-        def _anti(left: DataFrame, right: DataFrame) -> DataFrame:
-            if hot_df is None:
-                return left.join(right, on=keys, how="left_anti")
-            return hot_split_join(left, right, keys, hot=hot_df, how="left_anti")
-
-        n_matched = _semi(cur, upd_keys).count()
+        n_matched = cur.join(upd_keys, on=keys, how="left_semi").count()
         n_updates = updates.count()
         n_deleted = (
-            _semi(cur, del_keys).count() if del_keys is not None else 0
+            cur.join(del_keys, on=keys, how="left_semi").count()
+            if del_keys is not None
+            else 0
         )
         out = {
             "n_updated": n_matched,
             "n_inserted": n_updates - n_matched,
             "n_deleted": n_deleted,
         }
-        if skew_policy != "off":
-            out["n_hot_keys"] = n_hot_keys
         cdc_files = None
         if self._cdc_enabled(m):
             # Row-level change records, written WITH the commit (Delta
@@ -1753,7 +1722,7 @@ class VersionedParquetTable:
             upd = updates.select(*cur.columns)
             cur_keys = cur.select(*keys).distinct()
             change = (
-                _semi(cur, upd_keys)
+                cur.join(upd_keys, on=keys, how="left_semi")
                 .withColumn("_change_type", F.lit("update_preimage"))
                 .unionByName(
                     upd.join(cur_keys, on=keys, how="left_semi")
@@ -1768,22 +1737,22 @@ class VersionedParquetTable:
                 # a key in BOTH updates and deletes ends up present
                 # (updates win in the merged output), so it must not
                 # also emit a delete record
+                only_del = del_keys.join(upd_keys, on=keys, how="left_anti")
                 change = change.unionByName(
-                    _semi(
-                        cur, del_keys.join(upd_keys, on=keys, how="left_anti")
-                    ).withColumn("_change_type", F.lit("delete"))
+                    cur.join(only_del, on=keys, how="left_semi").withColumn(
+                        "_change_type", F.lit("delete")
+                    )
                 )
             cdc_files = self._write_cdc(change)
+        # partitions holding the old rows of matched/deleted keys
+        old_parts = (
+            cur.join(gone_keys, on=keys, how="left_semi").select(*pc).distinct()
+        )
         if mode == "dv":
             # merge-on-read: DV the old rows of every matched/deleted
             # key (positional read scoped to the partitions that hold
             # them), append the updates in the same commit
             if pc:
-                old_parts = (
-                    _semi(cur, gone_keys)
-                    .select(*pc)
-                    .distinct()
-                )
                 touched = [
                     {k: str(r[k]) for k in pc} for r in old_parts.collect()
                 ]
@@ -1795,10 +1764,8 @@ class VersionedParquetTable:
                 # emptiness gate, remove_rows' per-file counts, AND the
                 # sidecar write — without it the dominant I/O runs 3x
                 dead = (
-                    _semi(
-                        self.read_partitions(touched, with_position=True),
-                        gone_keys,
-                    )
+                    self.read_partitions(touched, with_position=True)
+                    .join(gone_keys, on=keys, how="left_semi")
                     .select("__file", "__pos")
                     .persist()
                 )
@@ -1819,29 +1786,20 @@ class VersionedParquetTable:
             finally:
                 if dead is not None:
                     dead.unpersist()
-                if hot_df is not None:
-                    hot_df.unpersist()
             return out
         if pc:
-            old_parts = (
-                _semi(cur, gone_keys).select(*pc).distinct()
-            )
             parts = old_parts.unionByName(updates.select(*pc).distinct()).distinct()
             touched = [{k: str(r[k]) for k in pc} for r in parts.collect()]
             base = self.read_partitions(touched)
         else:
             touched = [{}]
             base = cur
-        survivors = _anti(base, gone_keys)
+        survivors = base.join(gone_keys, on=keys, how="left_anti")
         merged = survivors.unionByName(updates.select(*base.columns))
-        try:
-            self.replace_partitions(
-                merged, touched, operation=operation, metrics=metrics or out,
-                cdc_files=cdc_files, txn=txn,
-            )
-        finally:
-            if hot_df is not None:
-                hot_df.unpersist()
+        self.replace_partitions(
+            merged, touched, operation=operation, metrics=metrics or out,
+            cdc_files=cdc_files, txn=txn,
+        )
         return out
 
     def delete(

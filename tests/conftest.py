@@ -67,9 +67,9 @@ _SLOW_TESTS = {
     "test_purge.py::test_purge_erases_through_deletion_vectors",
     "test_purge.py::test_purge_on_dv_upsert_table",
     "test_reference_parity.py::test_reference_items_full_batch_counts",
-    "test_scale_techniques.py::test_upsert_skew_policy_matches_plain_upsert",
+    "test_scale_techniques.py::test_upsert_hot_key_target_matches_dict_replay",
     "test_scd2_dv_close.py::test_dv_close_matches_rewrite_close",
-    "test_scd2_operators.py::test_asof_join_skew_split_matches_plain",
+    "test_scd2_operators.py::test_asof_join_hot_probe_key_matches_brute_force",
     "test_scd2_properties.py::test_any_batching_converges_to_ground_truth",
     "test_scd2_properties.py::test_upsert_sequence_equals_dict_replay",
     "test_semantic_stream.py::test_stream_pairs_equal_sequential_operator",
@@ -116,12 +116,10 @@ _SLOW_TESTS = {
     "test_purge.py::test_purge_scrubs_cdf_history",
     "test_ranking.py::test_matches_global_window_with_ties",
     "test_reference_parity.py::test_reference_golden_history_Y02103210",
-    "test_scale_techniques.py::test_upsert_dv_mode_skew_policy_matches_plain",
     "test_scd2_dv_close.py::test_dv_close_idempotent_rerun",
     "test_scd2_dv_close.py::test_dv_close_then_compact_clears",
     "test_scd2_pipeline.py::test_late_rerun_idempotent",
-    "test_scd2_pipeline.py::test_overlapped_phase_b_matches_serialized_merge",
-    "test_scd2_pipeline.py::test_skew_preflight_split_matches_plain_merge",
+    "test_scd2_pipeline.py::test_hot_key_merge_counts_and_invariants",
     "test_scd2_pipeline.py::test_vtable_check_constraints",
     "test_scd2_pipeline.py::test_vtable_generic_upsert",
     "test_scd2_pipeline.py::test_vtable_restore",

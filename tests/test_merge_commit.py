@@ -101,6 +101,7 @@ def test_stale_count_comes_from_the_observation(hist):
     # it from the Observation, not the late.count() fallback
     assert hist["metrics"][0]["n_stale"] == 1
     assert hist["observed"][0] == 1
+    assert [m["n_observation_fallbacks"] for m in hist["metrics"]] == [0, 0]
 
 
 def test_observation_fallback_warns_once():
@@ -145,8 +146,10 @@ def test_failed_merges_leave_previous_version(spark, hist, monkeypatch):
     """Each injected fault leaves the version, the content and the
     CacheManager exactly as they were, so one re-run after all three
     starts from the state each of them left; it must equal a clean run.
-    The table is a clone, so the re-run also shows that a clone merges
-    like its source and keeps all of its metadata."""
+    The re-run also loses its stale-count Observation, so it takes the
+    explicit-count fallback and must report that in its metrics. The
+    table is a clone, so the re-run also shows that a clone merges like
+    its source and keeps all of its metadata."""
     t = hist["seed"].clone(str(hist["root"] / "faults"))
     v_before, rows_before = t.latest_version(), _rows(t.read())
     batch = spark.createDataFrame(B2, SCHEMA)
@@ -159,7 +162,10 @@ def test_failed_merges_leave_previous_version(spark, hist, monkeypatch):
         assert t.latest_version() == v_before, inject.__name__
         assert _rows(t.read()) == rows_before, inject.__name__
         assert _cache_empty(spark), f"{inject.__name__} left persisted frames"
-    run_scd2_batch(spark, SPEC, batch, t.path, batch_id="b2")
+    monkeypatch.setattr(scd2_pipeline, "_observed_long", lambda obs, key: None)
+    m = run_scd2_batch(spark, SPEC, batch, t.path, batch_id="b2")
+    assert m["n_observation_fallbacks"] == 1
+    assert m["n_stale"] == hist["metrics"][0]["n_stale"]
     assert _rows(t.read()) == _rows(hist["t"].read(1))
     assert t.generated_columns() == hist["t"].generated_columns() != {}
     assert t.properties() == hist["seed"].properties() == {"owner": "etl"}

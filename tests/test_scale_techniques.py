@@ -181,110 +181,46 @@ def test_dynamic_partition_pruning(spark, tmp_path):
     assert files and all("o_orderpriority=1-URGENT" in f for f in files)
 
 
-def test_hot_split_join_rejects_unsupported_how(spark):
-    """right/full would duplicate unmatched right rows across the
-    hot/cold branches — both must fail loud (round-9 advice; left_anti
-    became supported in round 10: routing partitions the left side
-    only, so the anti predicate factors through the split)."""
-    from delta_lake_pyspark_scd2_spark.operators.skew import hot_split_join
-
-    left = spark.createDataFrame([(1, "a")], ["k", "v"])
-    right = spark.createDataFrame([(1, "b")], ["k", "w"])
-    hot = spark.createDataFrame([(1,)], ["k"])
-    for how in ("right", "full", "outer"):
-        with pytest.raises(ValueError, match="hot_split_join"):
-            hot_split_join(left, right, "k", hot=hot, how=how)
-
-
-def test_hot_split_join_left_anti_matches_plain(spark):
-    """left_anti under the hot/cold split must equal the plain
-    anti-join on every key class: hot key present in right (dropped),
-    hot key absent from right (kept), cold keys both ways, and a
-    null-keyed left row (kept — null never matches an anti probe)."""
-    from delta_lake_pyspark_scd2_spark.operators.skew import hot_split_join
-
-    left = spark.createDataFrame(
-        [(1, i) for i in range(200)]  # hot, in right -> dropped
-        + [(2, i) for i in range(150)]  # hot, not in right -> kept
-        + [(3, 0), (4, 1), (None, 2)],
-        "k int, v int",
-    )
-    right = spark.createDataFrame([(1, "x"), (3, "y")], "k int, w string")
-    hot = spark.createDataFrame([(1,), (2,)], "k int")
-    got = hot_split_join(left, right, "k", hot=hot, how="left_anti")
-    want = left.join(right, "k", "left_anti")
-    assert got.columns == want.columns
-    assert got.exceptAll(want).count() == 0
-    assert want.exceptAll(got).count() == 0
-
-
-def test_upsert_skew_policy_matches_plain_upsert(spark, tmp_path):
-    """Round-9 directive #4: the generic upsert's opt-in skew
-    pre-flight. A target with one hot key (600 version rows) and 50
-    uniform keys takes an update+delete batch through
-    skew_policy='auto' and through the plain path — the split must
-    ENGAGE (n_hot_keys=1), and the resulting table, merge accounting,
-    and CDF records must be identical."""
+@pytest.mark.parametrize("mode", ["rewrite", "dv"])
+def test_upsert_hot_key_target_matches_dict_replay(spark, tmp_path, mode):
+    """``upsert`` on a target with one hot key (600 rows) and 50
+    uniform keys (3 rows each): an update + delete batch must leave the
+    table a Python dict replay predicts — every row of an updated key
+    replaced by its one update row, a deleted key's rows gone, a new
+    key inserted — and one change record per replaced or deleted row
+    in the commit's change-data files."""
     from delta_lake_pyspark_scd2_spark.sources.vtable import (
+        CDC_DIR,
         VersionedParquetTable,
     )
 
-    def build(path):
-        rows = [(f"HOT", i, f"v{i}") for i in range(600)] + [
-            (f"K{k}", j, f"v{j}") for k in range(50) for j in range(3)
-        ]
-        df = spark.createDataFrame(rows, "k string, seq int, val string")
-        return VersionedParquetTable.create(
-            spark, df, str(tmp_path / path),
-            properties={"enableChangeDataFeed": "true"},
-        )
-
-    updates = spark.createDataFrame(
-        [("HOT", -1, "upd"), ("K3", -1, "upd"), ("NEW", -1, "ins")],
-        "k string, seq int, val string",
+    target = [("HOT", i, f"v{i}") for i in range(600)] + [
+        (f"K{k}", j, f"v{j}") for k in range(50) for j in range(3)
+    ]
+    upd = [("HOT", -1, "upd"), ("K3", -1, "upd"), ("NEW", -1, "ins")]
+    schema = "k string, seq int, val string"
+    t = VersionedParquetTable.create(
+        spark, spark.createDataFrame(target, schema), str(tmp_path / mode),
+        properties={"enableChangeDataFeed": "true"},
     )
-    deletes = spark.createDataFrame([("K7",)], "k string")
-
-    t_skew, t_plain = build("t_skew"), build("t_plain")
-    m_skew = t_skew.upsert(
-        updates, ["k"], deletes=deletes,
-        skew_policy="auto", skew_hot_rows=100,
-    )
-    m_plain = t_plain.upsert(updates, ["k"], deletes=deletes)
-
-    assert m_skew.pop("n_hot_keys") == 1
-    assert m_skew == m_plain
-    a, b = t_skew.read(), t_plain.read()
-    assert a.exceptAll(b).count() == 0 and b.exceptAll(a).count() == 0
-    # CDF parity: same change records from both paths
-    ca = t_skew.table_changes(["k"], 0).drop("_commit_version")
-    cb = t_plain.table_changes(["k"], 0).drop("_commit_version")
-    assert ca.exceptAll(cb).count() == 0 and cb.exceptAll(ca).count() == 0
-
-
-def test_upsert_dv_mode_skew_policy_matches_plain(spark, tmp_path):
-    """Same equivalence through the merge-on-read (DV) upsert path,
-    whose dead-row positional semi-join is also routed by the split."""
-    from delta_lake_pyspark_scd2_spark.sources.vtable import (
-        VersionedParquetTable,
+    m = t.upsert(
+        spark.createDataFrame(upd, schema), ["k"],
+        deletes=spark.createDataFrame([("K7",)], "k string"), mode=mode,
     )
 
-    def build(path):
-        rows = [("HOT", i, f"v{i}") for i in range(400)] + [
-            (f"K{k}", 0, "v0") for k in range(30)
-        ]
-        df = spark.createDataFrame(rows, "k string, seq int, val string")
-        return VersionedParquetTable.create(spark, df, str(tmp_path / path))
-
-    updates = spark.createDataFrame(
-        [("HOT", -1, "upd"), ("K5", -1, "upd")], "k string, seq int, val string"
-    )
-    t_skew, t_plain = build("d_skew"), build("d_plain")
-    m_skew = t_skew.upsert(
-        updates, ["k"], mode="dv", skew_policy="force",
-    )
-    m_plain = t_plain.upsert(updates, ["k"], mode="dv")
-    assert m_skew.pop("n_hot_keys") >= 1
-    assert m_skew == m_plain
-    a, b = t_skew.read(), t_plain.read()
-    assert a.exceptAll(b).count() == 0 and b.exceptAll(a).count() == 0
+    replay: dict = {}
+    for r in target:
+        replay.setdefault(r[0], []).append(r)
+    for r in upd:
+        replay[r[0]] = [r]
+    del replay["K7"]
+    want = sorted(r for rows in replay.values() for r in rows)
+    assert sorted(tuple(r) for r in t.read().collect()) == want
+    assert m["n_updated"] == 603 and m["n_deleted"] == 3
+    changes = spark.read.parquet(f"{t.path}/{CDC_DIR}/*").groupBy("_change_type")
+    assert {r[0]: r[1] for r in changes.count().collect()} == {
+        "update_preimage": 603,
+        "update_postimage": 2,
+        "insert": 1,
+        "delete": 3,
+    }

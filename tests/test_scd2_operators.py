@@ -272,13 +272,13 @@ def test_repair_intervals_is_idempotent_on_clean_chains(spark):
     assert have == want
 
 
-def test_asof_join_skew_split_matches_plain(spark):
-    """Round-9 directive #4: asof_join's probe-side hot-key split.
-    Key HOT carries 500 probes against an 8-event history (with
-    equal-ts ties and a NULL tiebreak value, to pin the broadcast
-    array's sort order against the window's asc_nulls_first); cold
-    keys ride along. All four (direction, strict) combinations must be
-    row-identical to the plain window form."""
+def test_asof_join_hot_probe_key_matches_brute_force(spark):
+    """Key HOT carries 500 probes against an 8-event history with
+    equal-ts ties and a NULL tiebreak value; cold keys and a key with
+    no events ride along. All four (direction, strict) combinations
+    must equal a brute-force scan: backward picks the greatest
+    (ts, tiebreak) at or before the probe, forward the smallest at or
+    after it, NULL tiebreaks ordering first."""
     ev_rows = [
         Row(k="HOT", ets=ts("2023-01-01T02:00:00"), rid=1, val=1, aux="a"),
         Row(k="HOT", ets=ts("2023-01-01T04:00:00"), rid=2, val=2, aux=None),
@@ -303,55 +303,29 @@ def test_asof_join_skew_split_matches_plain(spark):
     ]
     probes = spark.createDataFrame(pr_rows, "k string, pts timestamp, pid int")
 
+    def order(e):  # window order: ts, then the tiebreak with NULL first
+        return (e.ets, e.rid is not None, e.rid or 0)
+
+    def expected(direction, strict):
+        out = {}
+        for p in pr_rows:
+            if direction == "backward":
+                cands = [e for e in ev_rows if e.k == p.k and (
+                    e.ets < p.pts if strict else e.ets <= p.pts)]
+                pick = max(cands, key=order, default=None)
+            else:
+                cands = [e for e in ev_rows if e.k == p.k and (
+                    e.ets > p.pts if strict else e.ets >= p.pts)]
+                pick = min(cands, key=order, default=None)
+            out[p.pid] = (pick.val, pick.aux) if pick else (None, None)
+        return out
+
     for direction in ("backward", "forward"):
         for strict in (False, True):
-            plain = scd2.asof_join(
+            got = scd2.asof_join(
                 probes, events, "k", "pts", "ets", ["val", "aux"],
                 strict=strict, event_tiebreak_cols=["rid"],
                 direction=direction,
             )
-            split = scd2.asof_join(
-                probes, events, "k", "pts", "ets", ["val", "aux"],
-                strict=strict, event_tiebreak_cols=["rid"],
-                direction=direction,
-                skew_policy="force", skew_hot_rows=50,
-            )
-            a = plain.sort("pid").collect()
-            b = split.sort("pid").collect()
-            assert a == b, (direction, strict)
-
-
-def test_asof_join_skew_split_bounds_fail_loud(spark):
-    """The hot arm's in-plan guards: an event history beyond
-    skew_max_events_per_key, or a NULL timestamp on a hot key, must
-    raise at execution instead of silently diverging from the window
-    form."""
-    from py4j.protocol import Py4JJavaError
-    from pyspark.errors import SparkRuntimeException
-
-    events = spark.createDataFrame(
-        [Row(k="HOT", ets=ts("2023-01-01T00:00:00") + dt.timedelta(seconds=i), val=i)
-         for i in range(20)],
-        "k string, ets timestamp, val int",
-    )
-    probes = spark.createDataFrame(
-        [Row(k="HOT", pts=ts("2023-01-01T01:00:00"), pid=i) for i in range(100)],
-        "k string, pts timestamp, pid int",
-    )
-    with pytest.raises((Py4JJavaError, SparkRuntimeException, Exception),
-                       match="skew_max_events_per_key"):
-        scd2.asof_join(
-            probes, events, "k", "pts", "ets", ["val"],
-            skew_policy="force", skew_hot_rows=10,
-            skew_max_events_per_key=5,
-        ).collect()
-
-    null_probe = probes.withColumn(
-        "pts", F.when(F.col("pid") == 3, F.lit(None)).otherwise(F.col("pts"))
-    )
-    with pytest.raises((Py4JJavaError, SparkRuntimeException, Exception),
-                       match="non-null probe timestamps"):
-        scd2.asof_join(
-            null_probe, events, "k", "pts", "ets", ["val"],
-            skew_policy="force", skew_hot_rows=10,
-        ).collect()
+            have = {r.pid: (r.val, r.aux) for r in got.collect()}
+            assert have == expected(direction, strict), (direction, strict)

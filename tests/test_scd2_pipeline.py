@@ -756,14 +756,12 @@ def test_vtable_commit_is_atomic_no_clobber(tmp_path, spark):
     assert not [f for f in _os.listdir(mdir) if ".tmp-" in f]
 
 
-def test_skew_preflight_split_matches_plain_merge(spark, tmp_path):
-    """Round-8 directive #7: a deliberately hot-keyed batch engages the
-    broadcast split path in the Phase-A change-detection joins, and the
-    resulting history is row-for-row identical to the plain join's.
-    Key HOT emits 600 events (one changing per hour) while 50 other
-    keys emit 2 each — the single-hot-key shape AQE's skew-join cannot
-    spread."""
-    import dataclasses
+def test_hot_key_merge_counts_and_invariants(spark, tmp_path):
+    """A hot-keyed batch through the default spec: key HOT emits 600
+    events (one changing per minute) while 50 other keys emit 2 each —
+    the single-hot-key shape AQE's skew-join split handles. HOT's 600
+    versions, C0's 2 and the 49 new keys' 98 are inserted, and HOT's
+    and C0's seeded rows are closed."""
 
     def batch(n_hot=600):
         rows = []
@@ -776,51 +774,27 @@ def test_skew_preflight_split_matches_plain_merge(spark, tmp_path):
                 rows.append(ev(f"C{k}", t.isoformat(), f"S{j}", rid=j))
         return spark.createDataFrame(rows, BATCH_SCHEMA)
 
-    def seed(path, spec):
-        run_scd2_batch(
-            spark, spec,
-            spark.createDataFrame(
-                [ev("HOT", "2023-02-01T00:00:00", "init"),
-                 ev("C0", "2023-02-01T00:00:00", "init")],
-                BATCH_SCHEMA,
-            ),
-            path, batch_id="b0",
-        )
+    path = str(tmp_path / "t")
+    run_scd2_batch(
+        spark, SPEC,
+        spark.createDataFrame(
+            [ev("HOT", "2023-02-01T00:00:00", "init"),
+             ev("C0", "2023-02-01T00:00:00", "init")],
+            BATCH_SCHEMA,
+        ),
+        path, batch_id="b0",
+    )
+    m = run_scd2_batch(spark, SPEC, batch(), path, batch_id="b1")
 
-    spec_split = dataclasses.replace(SPEC, skew_policy="auto", skew_hot_rows=100)
-    spec_plain = dataclasses.replace(SPEC, skew_policy="off")
-
-    p_split = str(tmp_path / "t_split")
-    p_plain = str(tmp_path / "t_plain")
-    seed(p_split, spec_split)
-    seed(p_plain, spec_plain)
-    m_split = run_scd2_batch(spark, spec_split, batch(), p_split, batch_id="b1")
-    m_plain = run_scd2_batch(spark, spec_plain, batch(), p_plain, batch_id="b1")
-
-    # the split path ENGAGED (hot key detected) and the plain path did not
-    assert m_split["n_hot_keys"] == 1
-    assert m_plain["n_hot_keys"] == 0
-    # identical merge accounting...
-    for k in ("n_inserted", "n_closed", "n_stale"):
-        assert m_split[k] == m_plain[k], k
-    # ...and identical golden history, row for row
-    cols = ["contract", "valid_from", "valid_to", "is_current", "status",
-            "agent", "rid"]
-    a = _read(spark, p_split).select(*cols)
-    b = _read(spark, p_plain).select(*cols)
-    assert a.exceptAll(b).count() == 0 and b.exceptAll(a).count() == 0
-    assert scd2.check_invariants(_read(spark, p_split), "contract").count() == 0
+    assert (m["n_inserted"], m["n_closed"], m["n_stale"]) == (700, 2, 0)
+    assert scd2.check_invariants(_read(spark, path), "contract").count() == 0
 
 
-def test_combined_dq_profile_matches_separate_jobs(spark):
-    """Round-9 directive #5: the single-job
-    ``dq_metrics_with_key_profile`` must reproduce BOTH the flat
-    ``dq_metrics`` tallies and ``skew.key_count_profile`` over the
-    kept rows exactly — on a batch exercising every discard reason
-    (null key, duplicate-older, batch-date mismatch) plus a key whose
-    rows are all discarded (must drop out of the profile)."""
+def test_dq_metrics_tallies_every_discard_reason(spark):
+    """``dq_metrics`` tallies every discard reason in one aggregate:
+    null key, duplicate-older and batch-date mismatch, including a key
+    whose rows are all discarded."""
     from delta_lake_pyspark_scd2_spark.operators import validation
-    from delta_lake_pyspark_scd2_spark.operators.skew import key_count_profile
 
     rows = [
         ev("A", "2023-03-01T00:00:00", "S0", rid=0),
@@ -830,8 +804,7 @@ def test_combined_dq_profile_matches_separate_jobs(spark):
         # duplicate (key, ts) pair: loser discarded as DUPLICATE_OLDER
         ev("B", "2023-03-01T00:00:00", "S1", rid=-1),
         ev(None, "2023-03-01T00:00:00", "S0", rid=0),  # NULL_KEY
-        # key D: every row lands on the wrong batch date -> all
-        # discarded, so D must not count toward the kept-key profile
+        # key D: every row lands on the wrong batch date -> all discarded
         ev("D", "2023-02-28T00:00:00", "S0", rid=0),
     ]
     batch = spark.createDataFrame(rows, BATCH_SCHEMA).withColumn(
@@ -841,19 +814,19 @@ def test_combined_dq_profile_matches_separate_jobs(spark):
         batch, ["contract"], "event_time",
         batch_date_col="batch_date", tiebreak_cols=["rid"],
     )
-    dq, prof = validation.dq_metrics_with_key_profile(tagged, ["contract"])
-    assert dq == validation.dq_metrics(tagged)
-    kept, _ = validation.split_valid(tagged)
-    assert prof == key_count_profile(kept, ["contract"])
-    assert prof == {"max_rows": 3, "avg_rows": 2.0, "n_keys": 2}
-    assert dq["n_null_key"] == 1 and dq["n_duplicate_older"] == 1
-    assert dq["n_batch_date_mismatch"] == 1 and dq["n_kept"] == 4
+    assert validation.dq_metrics(tagged) == {
+        "n_total": 7,
+        "n_kept": 4,
+        "n_null_key": 1,
+        "n_batch_date_mismatch": 1,
+        "n_duplicate_older": 1,
+    }
 
 
 def test_skew_preflight_auto_stays_off_on_uniform_batches(spark, table_path):
-    """A uniform batch must NOT pay the split (no hot keys detected at
-    default thresholds), and the default-spec merge still reports the
-    profile ran (n_hot_keys key present, zero)."""
+    """A uniform batch closes and re-inserts every key through the
+    default spec. (The name predates the removal of the skew
+    pre-flight this test once checked as well.)"""
     batch = spark.createDataFrame(
         [ev(f"K{k}", "2023-03-01T00:00:00", "S0") for k in range(40)],
         BATCH_SCHEMA,
@@ -867,19 +840,15 @@ def test_skew_preflight_auto_stays_off_on_uniform_batches(spark, table_path):
         ),
         table_path, batch_id="b2",
     )
-    assert m["n_hot_keys"] == 0
     assert m["n_closed"] == 40 and m["n_inserted"] == 40
 
 
 def test_spec_rejects_unknown_enum_values():
-    """A typo like skew_policy='Auto' or 'none' must fail at spec
-    construction, not silently take the auto-threshold branch
-    (round-9 advice)."""
+    """A typo in an enum-valued spec field must fail at spec
+    construction, not silently take some default branch."""
     import dataclasses
 
     for field, bad in [
-        ("skew_policy", "Auto"),
-        ("skew_policy", "none"),
         ("dedup_mode", "keep_first"),
         ("late_policy", "ignore"),
         ("close_mode", "cow"),

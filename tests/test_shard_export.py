@@ -224,34 +224,56 @@ def test_tracked_scope_is_thread_scoped(spark):
 
 
 def test_export_token_shards_broadcast_plan_matches_window_path(
-    spark, tmp_path
+    spark, tmp_path, monkeypatch
 ):
     """The gated broadcast-plan attach (round-11: text crosses only the
     shard repartition) must produce byte-equal assignments, manifests
-    and file contents as the full-frame window path it replaces."""
+    and file contents as the full-frame window path it replaces. The
+    gate closes when broadcasting is off, and when the plan's measured
+    size exceeds the threshold: with 200-byte source names, a threshold
+    that a flat 64 B per row would fit must take the window path."""
+    from pyspark.sql import functions as F
+
     from delta_lake_pyspark_scd2_spark.sources.export import (
         export_token_shards,
     )
 
     rows = [
-        (i, "s1" if i % 3 else "s2", f"w{i} " * ((i % 11) + 1))
+        # shard directory names stay under the 255-byte name limit
+        (i, "a" * 200 if i % 3 else "b" * 200, f"w{i} " * ((i % 11) + 1))
         for i in range(80)
     ]
     df = spark.createDataFrame(rows, "doc_id long, source string, text string")
+    # the prefix sum broadcasts its chunk offsets on every path; only
+    # the plan attach broadcasts a frame carrying the shard column
+    plan_broadcasts = []
+    orig = F.broadcast
+
+    def spy(frame):
+        if "shard" in frame.columns:
+            plan_broadcasts.append(frame)
+        return orig(frame)
+
+    monkeypatch.setattr(F, "broadcast", spy)
     key = "spark.sql.autoBroadcastJoinThreshold"
     saved = spark.conf.get(key)
+    window = {}
     try:
         m_bcast = export_token_shards(df, str(tmp_path / "b"), budget=25)
-        spark.conf.set(key, "-1")  # gate closes -> window fallback
-        m_window = export_token_shards(df, str(tmp_path / "w"), budget=25)
+        assert len(plan_broadcasts) == 1
+        for name, threshold in (("off", "-1"), ("sized", str(len(rows) * 64))):
+            spark.conf.set(key, threshold)
+            window[name] = export_token_shards(df, str(tmp_path / name), budget=25)
     finally:
         spark.conf.set(key, saved)
-    assert m_bcast["tokens_per_shard"] == m_window["tokens_per_shard"]
-    assert m_bcast["rows_per_shard"] == m_window["rows_per_shard"]
+    assert len(plan_broadcasts) == 1  # both closed gates took the window path
     a = spark.read.json(str(tmp_path / "b") + "/shard=*").orderBy("doc_id")
-    b = spark.read.json(str(tmp_path / "w") + "/shard=*").orderBy("doc_id")
-    assert a.columns == b.columns
-    assert a.collect() == b.collect()
+    for name, m_window in window.items():
+        assert m_bcast["tokens_per_shard"] == m_window["tokens_per_shard"]
+        assert m_bcast["rows_per_shard"] == m_window["rows_per_shard"]
+        b = spark.read.json(str(tmp_path / name) + "/shard=*").orderBy("doc_id")
+        assert a.columns == b.columns
+        assert a.collect() == b.collect()
 
 
 def test_export_token_shards_null_or_dup_ids_take_window_path(spark, tmp_path):
