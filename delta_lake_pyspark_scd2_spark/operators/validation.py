@@ -78,10 +78,11 @@ def split_valid(df_tagged: DataFrame) -> tuple[DataFrame, DataFrame]:
     return kept, discarded
 
 
-def dq_metrics(df_tagged: DataFrame) -> dict[str, int]:
-    """Single-pass DQ tallies (one aggregate, not N counts —
-    ``validations_utils.py:106-120`` 'evita molteplici count()')."""
-    row = df_tagged.agg(
+def dq_aggs() -> list[Column]:
+    """The DQ tallies as aggregate expressions — one definition for
+    :func:`dq_metrics` and for an ``Observation`` that carries them on
+    another action's pass over the tagged rows."""
+    return [
         F.count(F.lit(1)).alias("n_total"),
         F.sum(F.col(DISCARD_COL).isNull().cast("int")).alias("n_kept"),
         F.sum((F.col(DISCARD_COL) == NULL_KEY).cast("int")).alias("n_null_key"),
@@ -91,8 +92,19 @@ def dq_metrics(df_tagged: DataFrame) -> dict[str, int]:
         F.sum((F.col(DISCARD_COL) == DUPLICATE_OLDER).cast("int")).alias(
             "n_duplicate_older"
         ),
-    ).collect()[0]
-    return {k: int(row[k] or 0) for k in row.asDict()}
+    ]
+
+
+def dq_counts(row: dict) -> dict[str, int]:
+    """The tallies of one :func:`dq_aggs` row (a sum over no rows is
+    NULL) as ints."""
+    return {k: int(v or 0) for k, v in row.items()}
+
+
+def dq_metrics(df_tagged: DataFrame) -> dict[str, int]:
+    """Single-pass DQ tallies (one aggregate, not N counts —
+    ``validations_utils.py:106-120`` 'evita molteplici count()')."""
+    return dq_counts(df_tagged.agg(*dq_aggs()).collect()[0].asDict())
 
 
 #: Kept only so perfbench's tracer, which looks this name up in the

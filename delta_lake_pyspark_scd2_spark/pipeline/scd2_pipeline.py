@@ -21,6 +21,12 @@ so its history holds a version between them in which every updated key
 has no current row — a documented divergence.)
 
 Cost:
+  * Validation is lazy. The DQ tallies and the stale count ride the
+    merge's first action (the collect of Phase A's touched partitions,
+    which fills the validated, staged and changed caches) as
+    Observations, so no aggregation job runs before the merge.
+    Quarantine is written right after that action, before Phase A or B
+    stages anything, so it still lands before any table write.
   * Phase A touches only the partitions holding the current rows of
     *changed* keys, but rewrites every file of each touched partition
     (copy-on-write), so its cost follows the touched partitions' size,
@@ -30,7 +36,10 @@ Cost:
   * Change detection joins staged×current on the key — broadcast when
     the batch is small, AQE-planned shuffle otherwise.
   * The idempotency anti-join reads only (key, valid_from) columns —
-    column-pruned parquet scan.
+    column-pruned parquet scan — of the partitions the new versions
+    land in. When a batch opens only new days that scan names no file,
+    reads as an empty relation, and Catalyst folds the anti-join away
+    at plan time.
 
 Skew: AQE's skew-join split (``session.py``) is the only skew
 handling. The batch×current join is a left-outer join whose right side
@@ -44,7 +53,7 @@ from __future__ import annotations
 import time
 import uuid
 import warnings
-from collections.abc import Sequence
+from collections.abc import Callable, Sequence
 from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, Observation, SparkSession, Window
@@ -212,13 +221,13 @@ def _read_event_log(
     )
 
 
-def _observed_long(obs: Observation, key: str) -> int | None:
-    """Non-blocking read of one observed long metric; ``None`` when the
-    metrics row is unavailable (the action has not run, or AQE's
-    empty-relation propagation elided the CollectMetrics node — the
-    round-10 rejected-variant failure mode) so the caller can fall back
-    to an explicit action. ``Observation.get`` would BLOCK forever in
-    the elided case; the JVM-side ``getRowOrEmpty`` does not.
+def _observed_row(obs: Observation) -> dict | None:
+    """Non-blocking read of an Observation's metrics row; ``None`` when
+    it is unavailable (the action has not run, or AQE's empty-relation
+    propagation elided the CollectMetrics node — the round-10
+    rejected-variant failure mode) so the caller can fall back to an
+    explicit action. ``Observation.get`` would BLOCK forever in the
+    elided case; the JVM-side ``getRowOrEmpty`` does not.
 
     The read goes through private pyspark APIs (pinned 4.1.2); when it
     fails for any reason other than an empty metrics row, the fallback
@@ -234,17 +243,23 @@ def _observed_long(obs: Observation, key: str) -> int | None:
         utils = getattr(
             obs._jvm, "org.apache.spark.sql.api.python.PythonSQLUtils"
         )
-        row = CPickleSerializer().loads(utils.toPyRow(jopt.get()))
-        v = row.asDict(recursive=False)[key]
-        return 0 if v is None else int(v)
+        return CPickleSerializer().loads(utils.toPyRow(jopt.get())).asDict()
     except Exception as e:  # noqa: BLE001 — any pyspark-internals drift
         warnings.warn(
             f"Observation read failed ({type(e).__name__}); falling back "
-            "to an explicit count job",
+            "to an explicit job",
             RuntimeWarning,
             stacklevel=2,
         )
         return None
+
+
+def _observed_long(obs: Observation, key: str) -> int | None:
+    """:func:`_observed_row`'s read of one long metric."""
+    row = _observed_row(obs)
+    if row is None:
+        return None
+    return int(row[key] or 0)
 
 
 def _prepare_versions(spec: SCD2Spec, staged_events: DataFrame) -> DataFrame:
@@ -316,22 +331,34 @@ def run_scd2_batch(
                 F.lit(validation.DUPLICATE_OLDER),
             ).otherwise(F.col(validation.DISCARD_COL)),
         )
-    tagged = tagged.persist()
+    # The DQ tallies ride the first action over the tagged cache as an
+    # Observation inside the persisted plan — on a merge, the `touched`
+    # collect that fills every cache; on a create, the table write — so
+    # no DQ aggregation job runs as a serial prefix of the batch.
+    dq_obs = Observation(f"scd2_dq_{uuid.uuid4().hex[:8]}")
+    tagged = tagged.observe(dq_obs, *validation.dq_aggs()).persist()
     try:
         kept, discarded = validation.split_valid(tagged)
+        dq: dict = {}
 
-        def _write_quarantine(dq: dict) -> None:
+        def _land_dq() -> int:
+            """Read the observed DQ tallies and land the quarantine;
+            returns the number of Observation fallbacks (0 or 1). Call
+            only after an action has filled the tagged cache: the
+            fallback aggregation then reads the warm cache."""
+            row = _observed_row(dq_obs)
+            dq.update(
+                validation.dq_metrics(tagged)
+                if row is None
+                else validation.dq_counts(row)
+            )
             if quarantine_path is not None and dq["n_total"] > dq["n_kept"]:
                 discarded.write.mode("overwrite").parquet(
                     f"{quarantine_path}/batch={batch_id}"
                 )
+            return int(row is None)
 
         creating = not VersionedParquetTable.is_table(table_path)
-        dq: dict = {}
-        if not creating:
-            # the merge path lands quarantine before any table mutation
-            dq = validation.dq_metrics(tagged)
-            _write_quarantine(dq)
         metrics_val_s = round(time.time() - t0, 3)
 
         # -- merge ----------------------------------------------------------
@@ -339,61 +366,47 @@ def run_scd2_batch(
         if spec.late_policy == "rebuild":
             _append_event_log(spec, kept, table_path, batch_id)
         if creating:
-            # Initial load: the DQ aggregation and the table write are
-            # independent consumers of the tagged cache — overlap them
-            # (guide §2.6) instead of paying the validation aggregation as
-            # a serial prefix of the load. The quarantine write (gated on
-            # the DQ counts) lands after the create commit — i.e. on the
-            # CREATE path quarantine durability is guaranteed only after a
-            # successful create (round-10 ADVICE, documented contract: a
-            # failed create aborts the whole load and the batch is
+            versions = _prepare_versions(spec, kept)
+            # count rides the initial write job (observe) — recomputing
+            # the whole versions plan for a count would double the cost
+            obs = Observation("scd2_create")
+            versions = versions.observe(
+                obs, F.count(F.lit(1)).alias("n_inserted")
+            )
+            VersionedParquetTable.create(
+                spark,
+                versions,
+                table_path,
+                partition_cols=spec.partition_cols,
+                metrics={"batch_id": batch_id},
+                # partition layout as GENERATED columns: the table
+                # itself re-derives/validates y/m/d from valid_from on
+                # every write path, so no future writer can land a
+                # version row in the wrong partition (the pruning in
+                # Phases A/B relies on it)
+                generated_cols={
+                    f"{spec.partition_prefix}_year": "year(valid_from)",
+                    f"{spec.partition_prefix}_month": "month(valid_from)",
+                    f"{spec.partition_prefix}_day": "dayofmonth(valid_from)",
+                },
+            )
+            # On the CREATE path quarantine lands after the create
+            # commit (round-10 ADVICE, documented contract: a failed
+            # create aborts the whole load and the batch is
             # re-submitted, so nothing is lost, merely not yet
-            # quarantined); the merge path keeps DQ (and quarantine)
-            # strictly before any table mutation.
-            from concurrent.futures import ThreadPoolExecutor
-
-            pool = ThreadPoolExecutor(max_workers=1)
-            dq_fut = pool.submit(validation.dq_metrics, tagged)
-            try:
-                versions = _prepare_versions(spec, kept)
-                # count rides the initial write job (observe) — recomputing
-                # the whole versions plan for a count would double the cost
-                obs = Observation("scd2_create")
-                versions = versions.observe(
-                    obs, F.count(F.lit(1)).alias("n_inserted")
-                )
-                VersionedParquetTable.create(
-                    spark,
-                    versions,
-                    table_path,
-                    partition_cols=spec.partition_cols,
-                    metrics={"batch_id": batch_id},
-                    # partition layout as GENERATED columns: the table
-                    # itself re-derives/validates y/m/d from valid_from on
-                    # every write path, so no future writer can land a
-                    # version row in the wrong partition (the pruning in
-                    # Phases A/B relies on it)
-                    generated_cols={
-                        f"{spec.partition_prefix}_year": "year(valid_from)",
-                        f"{spec.partition_prefix}_month": "month(valid_from)",
-                        f"{spec.partition_prefix}_day": "dayofmonth(valid_from)",
-                    },
-                )
-            finally:
-                pool.shutdown(wait=True)
-            dq = dq_fut.result()
-            _write_quarantine(dq)
+            # quarantined).
             merge_part: dict = {
                 "n_inserted": int(obs.get["n_inserted"] or 0),
                 "n_closed": 0,
                 "n_stale": 0,
+                "n_observation_fallbacks": _land_dq(),
             }
         else:
             table = VersionedParquetTable(spark, table_path)
-            merge_part = _merge_batch(spec, table, kept, batch_id)
+            # the merge path lands quarantine before any table mutation
+            merge_part = _merge_batch(spec, table, kept, batch_id, _land_dq)
         # canonical key order (dq before durations, merge keys after) so
-        # the metrics CSV header is identical whichever path ran and
-        # whenever the DQ future resolved
+        # the metrics CSV header is identical whichever path ran
         metrics.update(dq)
         metrics["duration_s_validation"] = metrics_val_s
         metrics.update(merge_part)
@@ -410,9 +423,12 @@ def _merge_batch(
     table: VersionedParquetTable,
     kept: DataFrame,
     batch_id: str,
+    land_dq: Callable[[], int],
 ) -> dict:
     """SCD2 merge (reference Phase A/B, src/header_etl.py:144-280) on the
-    versioned table, committed ONCE.
+    versioned table, committed ONCE. ``land_dq`` runs right after the
+    first action (it reads the DQ Observation and writes quarantine)
+    and returns its Observation fallbacks.
 
     Phase A closes the current rows of changed keys; Phase B inserts the
     new version rows. Both read one pinned snapshot, stage their files,
@@ -577,9 +593,10 @@ def _merge_batch(
             "valid_from",
             spec.partition_prefix,
         )
-        # this collect materializes the `staged` AND `changed` caches
-        # (its plan scans every staged partition) and fires the stale
-        # Observation — the single serial prefix of the merge
+        # this collect materializes the `tagged`, `staged` AND `changed`
+        # caches (its plan scans every staged partition) and fires the
+        # DQ and stale Observations — the single serial prefix of the
+        # merge
         touched = [
             {k: str(r[k]) for k in spec.partition_cols}
             for r in close_parts.select(*spec.partition_cols).distinct().collect()
@@ -589,10 +606,12 @@ def _merge_batch(
         # CollectMetrics row): non-blocking getRowOrEmpty, falling back
         # to an explicit count — cheap now, the cache is materialized.
         n_stale = _observed_long(stale_obs, "n_stale")
-        # the fallback leaves a count in the run metrics
+        # a fallback leaves a count in the run metrics
         n_observation_fallbacks = int(n_stale is None)
         if n_stale is None:
             n_stale = late.count()
+        # quarantine lands before Phase A or B stages anything
+        n_observation_fallbacks += land_dq()
 
         def _phase_b() -> tuple[StagedWrite | None, int]:
             # insert version rows from the first change onward for

@@ -62,6 +62,12 @@ def get_spark(
         # (sub-µs digits are zero in this corpus, so conversion is lossless).
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")
         .config("spark.sql.parquet.compression.codec", "snappy")
+        # A versioned-table scan names every file from its manifest, and
+        # past this many paths Spark lists them with a parallel Spark
+        # job (one per scan, 0.4-0.8 s at 92 files) where a driver-side
+        # stat per file is all a local file system needs — the
+        # manifest's commit primitive already assumes one.
+        .config("spark.sql.sources.parallelPartitionDiscovery.threshold", str(2**31 - 1))
         .config("spark.ui.enabled", "false")
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"))
     )

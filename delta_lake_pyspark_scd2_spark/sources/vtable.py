@@ -1701,17 +1701,17 @@ class VersionedParquetTable:
         gone_keys = (
             upd_keys if del_keys is None else upd_keys.unionByName(del_keys).distinct()
         )
-        n_matched = cur.join(upd_keys, on=keys, how="left_semi").count()
-        n_updates = updates.count()
-        n_deleted = (
-            cur.join(del_keys, on=keys, how="left_semi").count()
-            if del_keys is not None
-            else 0
-        )
+        cur_keys = cur.select(*keys).distinct()
         out = {
-            "n_updated": n_matched,
-            "n_inserted": n_updates - n_matched,
-            "n_deleted": n_deleted,
+            # target rows replaced (several per key on a multi-row target)
+            "n_updated": cur.join(upd_keys, on=keys, how="left_semi").count(),
+            # update rows whose key matches no target row
+            "n_inserted": updates.join(cur_keys, on=keys, how="left_anti").count(),
+            "n_deleted": (
+                cur.join(del_keys, on=keys, how="left_semi").count()
+                if del_keys is not None
+                else 0
+            ),
         }
         cdc_files = None
         if self._cdc_enabled(m):
@@ -1720,7 +1720,6 @@ class VersionedParquetTable:
             # so the streaming source reads changes from these files on
             # executors instead of re-deriving them by join.
             upd = updates.select(*cur.columns)
-            cur_keys = cur.select(*keys).distinct()
             change = (
                 cur.join(upd_keys, on=keys, how="left_semi")
                 .withColumn("_change_type", F.lit("update_preimage"))
@@ -2925,7 +2924,20 @@ class VersionedParquetTable:
                         T.StructField("__pos", T.LongType()),
                     ]
                 )
-            return self.spark.createDataFrame([], out_schema)
+            # An empty LocalRelation built on the JVM side, not
+            # ``createDataFrame([])``: that is a Python RDD, so every
+            # action over it starts Python workers, and Catalyst cannot
+            # see it is empty. This one folds at plan time: an anti-join
+            # against it reduces to its left side, a union to the other
+            # input.
+            js = self.spark._jsparkSession
+            return DataFrame(
+                js.createDataFrame(
+                    self.spark._jvm.java.util.ArrayList(),
+                    js.parseDataType(out_schema.json()),
+                ),
+                self.spark,
+            )
         phys_schema = (
             T.StructType(
                 [

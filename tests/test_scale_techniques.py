@@ -216,7 +216,7 @@ def test_upsert_hot_key_target_matches_dict_replay(spark, tmp_path, mode):
     del replay["K7"]
     want = sorted(r for rows in replay.values() for r in rows)
     assert sorted(tuple(r) for r in t.read().collect()) == want
-    assert m["n_updated"] == 603 and m["n_deleted"] == 3
+    assert (m["n_updated"], m["n_inserted"], m["n_deleted"]) == (603, 1, 3)
     changes = spark.read.parquet(f"{t.path}/{CDC_DIR}/*").groupBy("_change_type")
     assert {r[0]: r[1] for r in changes.count().collect()} == {
         "update_preimage": 603,

@@ -12,7 +12,7 @@ from __future__ import annotations
 import datetime as dt
 
 import pytest
-from hypothesis import HealthCheck, given, settings
+from hypothesis import HealthCheck, Phase, example, given, settings
 from hypothesis import strategies as st
 from pyspark.sql import Row
 
@@ -70,6 +70,28 @@ events_strategy = st.lists(
 )
 @given(events=events_strategy, cuts=st.lists(st.integers(0, 11), max_size=2))
 def test_any_batching_converges_to_ground_truth(spark, tmp_path_factory, events, cuts):
+    _check_batching_converges(spark, tmp_path_factory, events, cuts)
+
+
+# Default-tier smoke variant: pinned examples only. Three batches with a
+# late event (the rebuild path), a same-value event that collapses, a
+# new key and a new day (the idempotency anti-join over no files).
+@settings(
+    deadline=None,
+    phases=[Phase.explicit],
+    suppress_health_check=[HealthCheck.function_scoped_fixture],
+)
+@example(
+    events=[("A", 5, "x"), ("A", 10, "y"), ("B", 3, "z"), ("A", 2, "y"),
+            ("B", 26, "z"), ("B", 28, "x")],
+    cuts=[2, 4],
+)
+@given(events=events_strategy, cuts=st.lists(st.integers(0, 11), max_size=2))
+def test_pinned_batchings_converge_to_ground_truth(spark, tmp_path_factory, events, cuts):
+    _check_batching_converges(spark, tmp_path_factory, events, cuts)
+
+
+def _check_batching_converges(spark, tmp_path_factory, events, cuts):
     import uuid
 
     table = str(tmp_path_factory.mktemp("prop") / f"t{uuid.uuid4().hex}")

@@ -8,7 +8,7 @@ storage-layer twin of the differential query fuzzer."""
 from __future__ import annotations
 
 import pytest
-from hypothesis import HealthCheck, given, settings
+from hypothesis import HealthCheck, Phase, example, given, settings
 from hypothesis import strategies as st
 from pyspark.sql import functions as F
 
@@ -48,8 +48,27 @@ def _read_set(t, version=None):
 )
 @given(ops=st.lists(_OP, min_size=1, max_size=7), data=st.data())
 def test_random_op_sequences_match_model(spark, tmp_path_factory, ops, data):
-    path = str(tmp_path_factory.mktemp("fuzz") / "t")
     seq = data.draw(st.integers(0, 10**6))  # distinguish versions' values
+    _check_ops_match_model(spark, tmp_path_factory, ops, seq)
+
+
+# Default-tier smoke variant: pinned sequences only, together covering
+# every op — upserts over ids that appends duplicated, a restore to a
+# version before a deletion vector, and a purge.
+@settings(deadline=None, phases=[Phase.explicit], suppress_health_check=list(HealthCheck))
+@example(
+    ops=[("append", [1, 4]), ("upsert", [1, 2, 7]), ("dv_remove", [4]),
+         ("delete", 2), ("restore", 2), ("compact",)],
+    seq=1000,
+)
+@example(ops=[("append", [3]), ("update", 2), ("purge", 1)], seq=77)
+@given(ops=st.lists(_OP, min_size=1, max_size=7), seq=st.integers(0, 10**6))
+def test_pinned_op_sequences_match_model(spark, tmp_path_factory, ops, seq):
+    _check_ops_match_model(spark, tmp_path_factory, ops, seq)
+
+
+def _check_ops_match_model(spark, tmp_path_factory, ops, seq):
+    path = str(tmp_path_factory.mktemp("fuzz") / "t")
 
     # model: id -> (id, part, val); versions: list of frozensets by commit
     model: dict[int, tuple] = {}
