@@ -49,13 +49,6 @@ def main(argv: list[str] | None = None) -> dict:
         help="drop_all = the reference's items-job W3 semantics",
     )
     p.add_argument("--delete-col", default=None, help="soft-delete flag column")
-    p.add_argument(
-        "--close-mode",
-        default="rewrite",
-        choices=["rewrite", "dv"],
-        help="Phase-A close strategy: partition rewrite (default) or "
-        "deletion-vector close (O(closed rows) write amplification)",
-    )
     args = p.parse_args(argv)
 
     from delta_lake_pyspark_scd2_spark.functions import batch_date_from_filename
@@ -72,7 +65,6 @@ def main(argv: list[str] | None = None) -> dict:
         late_policy=args.late_policy,
         dedup_mode=args.dedup_mode,
         delete_col=args.delete_col,
-        close_mode=args.close_mode,
     )
     reader = spark.read.option("header", "true").option("sep", args.sep)
     if args.schema:

@@ -94,15 +94,6 @@ class SCD2Spec:
     #: schema, pre-existing rows read NULL, and a *tracked* new column
     #: null-safely change-detects against that NULL.
     evolve_schema: bool = False
-    #: Phase-A close strategy. "rewrite": partition-scoped copy-on-write
-    #: (rewrites every file of a touched partition). "dv": deletion
-    #: vectors — mark the closed rows dead in place and append their
-    #: closed copies; write cost drops from O(touched partitions) to
-    #: O(closed rows), at the price of a broadcast anti-join on reads
-    #: until ``compact()`` clears the DVs. At 100 TB, closing a handful
-    #: of keys inside a 1 TB day-partition is exactly the case "dv"
-    #: exists for.
-    close_mode: str = "rewrite"
 
     def __post_init__(self) -> None:
         if self.dedup_mode not in {"keep_latest", "drop_all"}:
@@ -114,10 +105,6 @@ class SCD2Spec:
             raise ValueError(
                 f"late_policy must be 'drop' or 'rebuild', "
                 f"got {self.late_policy!r}"
-            )
-        if self.close_mode not in {"rewrite", "dv"}:
-            raise ValueError(
-                f"close_mode must be 'rewrite' or 'dv', got {self.close_mode!r}"
             )
 
     @property
@@ -674,7 +661,7 @@ def _merge_batch(
         try:
             fut = pool.submit(_phase_b)
             closed, close = _phase_a(
-                spec, table, base, changed, touched, batch_id, cached
+                spec, table, base, changed, touched, batch_id
             )
             t_b = time.time()
             insert, n_inserted = fut.result()
@@ -713,9 +700,9 @@ def _merge_batch(
         "n_inserted": n_inserted,
         "n_stale": n_stale,
         "n_observation_fallbacks": n_observation_fallbacks,
-        # Phase-A scope evidence: partitions actually rewritten (or
-        # DV'd) this merge — the number that must track the BATCH's
-        # date spread, not the table's, for cost ∝ changed data
+        # Phase-A scope evidence: partitions actually rewritten this
+        # merge — the number that must track the BATCH's date spread,
+        # not the table's, for cost ∝ changed data
         "n_parts_closed": len(touched),
         # phase breakdown (reference tracks per-phase durations,
         # src/header_etl.py:319-331; these localize merge cost the
@@ -738,7 +725,6 @@ def _phase_a(
     changed: DataFrame,
     touched: list[dict[str, str]],
     batch_id: str,
-    cached: list[DataFrame],
 ) -> tuple[int, StagedWrite | None]:
     """Stage Phase A against snapshot ``base``: close the current rows
     of ``changed`` keys in the ``touched`` partitions at their first
@@ -752,30 +738,6 @@ def _phase_a(
         & F.col("first_change_ts").isNotNull()
         & (F.col("first_change_ts") > F.col("valid_from"))
     )
-    if spec.close_mode == "dv":
-        # Deletion-vector close: mark the (few) current rows of changed
-        # keys dead at their (file, position) and add their closed
-        # copies — no partition rewrite at all. The positional read
-        # applies existing DVs, so an already-closed row can't close
-        # twice. Write amplification: O(closed rows), not O(partition).
-        rows = (
-            table.read_partitions(touched, base["version"], with_position=True)
-            .join(to_close, on=keys, how="inner")
-            .filter(closing)
-            .persist()
-        )
-        cached.append(rows)
-        dead = rows.select("__file", "__pos")
-        n_closed = dead.count()
-        if not n_closed:
-            return 0, None
-        copies = (
-            rows.withColumn("valid_to", F.col("first_change_ts"))
-            .withColumn("is_current", F.lit(False))
-            .withColumn("closed_by_batch", F.lit(batch_id))
-            .drop("first_change_ts", "__file", "__pos")
-        )
-        return n_closed, table.stage_remove_rows(dead, adds=copies, base=base)
     # copy-on-write: rewrite the touched partitions with the closes
     # applied; the count piggybacks on the write job (observe)
     updated = (

@@ -31,9 +31,9 @@ schema under ``merge_schema``), touched none of the partitions this
 operation read, and this operation assigned no identity values;
 anything else is a hard conflict raised to the caller. A blind append
 reads no partition, so it only ever conflicts on metadata. Writes can
-also be staged (``stage_write``, ``stage_remove_rows``) and committed
-together as one version (``commit_staged``), which is how the SCD2
-merge lands its close and its inserts atomically.
+also be staged (``stage_write``) and committed together as one version
+(``commit_staged``), which is how the SCD2 merge lands its close and
+its inserts atomically.
 
 Log layout (Delta's checkpoint + incremental-log split): each commit
 ``v{N}.json`` is a DELTA record — ``add`` (new file entries) and
@@ -925,69 +925,6 @@ class VersionedParquetTable:
             assigned_identity=assigned,
         )
 
-    def stage_remove_rows(
-        self,
-        dead: DataFrame,
-        *,
-        adds: DataFrame | None = None,
-        base: dict | None = None,
-        cdc_files: list[str] | None = None,
-    ) -> StagedWrite:
-        """Stage :meth:`remove_rows`' deletion vector and added files
-        against snapshot ``base`` (the latest by default) without
-        committing them. On a change-feed table without ``cdc_files``
-        the newly dead rows are recorded as deletes, the adds as
-        inserts (the dv-mode upsert passes its richer pre/post-image
-        records instead)."""
-        m = base or self._current()
-        # per-file dead counts: bounded by files touched, driver-safe
-        per_file = {
-            r["__file"]: r["n"]
-            for r in dead.groupBy("__file")
-            .agg(F.count(F.lit(1)).alias("n"))
-            .collect()
-        }
-        unknown = sorted(set(per_file) - {f["path"] for f in m["files"]})
-        if unknown:
-            raise ValueError(
-                f"deletion vector targets unknown files: {unknown[:3]}"
-            )
-        dv_files = []
-        if per_file:
-            # distributed sidecar write (no driver collect of positions)
-            dv_rel = f"dv-{uuid.uuid4().hex}"
-            dead.select("__file", "__pos").write.parquet(
-                os.path.join(self.path, DV_DIR, dv_rel)
-            )
-            for f in m["files"]:
-                if f["path"] in per_file:
-                    old = f.get("dv") or {"paths": [], "count": 0}
-                    dv_files.append(
-                        ManifestEntry(
-                            f["path"], f["partition"], f.get("stats"), f.get("rows"),
-                            {
-                                "paths": old["paths"] + [dv_rel],
-                                "count": old["count"] + per_file[f["path"]],
-                            },
-                        )
-                    )
-        new_files, assigned = [], False
-        if adds is not None:
-            new_files, _, assigned = self._stage(m, adds, _schema(m))
-        s = StagedWrite(
-            m,
-            dv_files + new_files,
-            reads=[e.partition for e in dv_files],
-            assigned_identity=assigned,
-            cdc_files=cdc_files,
-            metrics={"n_deleted": sum(per_file.values()), "n_files_dv": len(per_file)},
-        )
-        if cdc_files is None and self._cdc_enabled(m) and (
-            per_file or adds is not None
-        ):
-            s.cdc_files = self._write_changes(s, dead if per_file else None)
-        return s
-
     # -- the commit primitive ------------------------------------------------
 
     def _transact(
@@ -1603,7 +1540,6 @@ class VersionedParquetTable:
         *,
         deletes: DataFrame | None = None,
         sync_deletes: bool = False,
-        mode: str = "rewrite",
         operation: str = "UPSERT",
         metrics: "dict | Callable[[], dict] | None" = None,
         txn: tuple[str, int] | None = None,
@@ -1630,14 +1566,6 @@ class VersionedParquetTable:
         the move case where an update changes its own partition values.
         Cost ∝ touched partitions, never table size.
 
-        ``mode="dv"`` is **merge-on-read**: old rows of matched/deleted
-        keys are marked dead via deletion-vector sidecars and the
-        updates append in the SAME commit — write amplification
-        O(changed rows) instead of O(touched partitions). The trade is
-        Delta's: reads of DV'd files pay a tiny anti-join until
-        ``compact()`` materializes the deletes. Same result as
-        ``rewrite`` in every snapshot read.
-
         ``txn=(app_id, txn_version)`` makes the merge **idempotent**
         (same contract as :meth:`append`): an already-applied batch is
         skipped before any work, and a lost commit race against the
@@ -1645,21 +1573,12 @@ class VersionedParquetTable:
         MERGE sinks.
 
         Skew: every target-side join (match counts, CDC pre-images,
-        the DV dead-row scan, the rewrite survivors) is a left-semi or
-        left-anti join against ``upd_keys`` or ``gone_keys``, which are
-        key-distinct, so a hot target key buffers one row per
-        sort-merge group and AQE's skew-join split divides its
-        oversized partition by map ranges.
+        the rewrite survivors) is a left-semi or left-anti join against
+        ``upd_keys`` or ``gone_keys``, which are key-distinct, so a hot
+        target key buffers one row per sort-merge group and AQE's
+        skew-join split divides its oversized partition by map ranges.
         """
         keys = list(key_cols)
-        if mode not in {"rewrite", "dv"}:
-            raise ValueError(f"unknown upsert mode: {mode!r}")
-        if mode == "dv" and txn is not None:
-            raise ValueError(
-                "txn-idempotent upsert supports mode='rewrite' only "
-                "(the DV commit path does not thread writer "
-                "transactions yet)"
-            )
         m = self._current()
         if _txn_applied(m, txn):
             return {
@@ -1743,51 +1662,15 @@ class VersionedParquetTable:
                     )
                 )
             cdc_files = self._write_cdc(change)
-        # partitions holding the old rows of matched/deleted keys
-        old_parts = (
-            cur.join(gone_keys, on=keys, how="left_semi").select(*pc).distinct()
-        )
-        if mode == "dv":
-            # merge-on-read: DV the old rows of every matched/deleted
-            # key (positional read scoped to the partitions that hold
-            # them), append the updates in the same commit
-            if pc:
-                touched = [
-                    {k: str(r[k]) for k in pc} for r in old_parts.collect()
-                ]
-            else:
-                touched = [{}]
-            dead = None
-            if touched:
-                # persisted: the positional scan + semi-join feeds the
-                # emptiness gate, remove_rows' per-file counts, AND the
-                # sidecar write — without it the dominant I/O runs 3x
-                dead = (
-                    self.read_partitions(touched, with_position=True)
-                    .join(gone_keys, on=keys, how="left_semi")
-                    .select("__file", "__pos")
-                    .persist()
-                )
-            try:
-                if dead is not None and not dead.isEmpty():
-                    self.remove_rows(
-                        dead,
-                        adds=updates.select(*cur.columns),
-                        operation=operation,
-                        metrics=metrics or out,
-                        cdc_files=cdc_files,
-                    )
-                else:
-                    self.append(
-                        updates.select(*cur.columns), metrics=metrics or out,
-                        cdc_files=cdc_files,
-                    )
-            finally:
-                if dead is not None:
-                    dead.unpersist()
-            return out
         if pc:
-            parts = old_parts.unionByName(updates.select(*pc).distinct()).distinct()
+            # partitions holding the old rows of matched/deleted keys,
+            # plus the ones receiving the updates
+            parts = (
+                cur.join(gone_keys, on=keys, how="left_semi")
+                .select(*pc)
+                .unionByName(updates.select(*pc))
+                .distinct()
+            )
             touched = [{k: str(r[k]) for k in pc} for r in parts.collect()]
             base = self.read_partitions(touched)
         else:
@@ -1883,15 +1766,13 @@ class VersionedParquetTable:
         versions that share those files (shared files rewrite ONCE).
 
         Files covered by a deletion vector in ANY retained version
-        (merge-on-read tables — ``upsert(mode="dv")`` /
-        ``close_mode="dv"``) are handled, not refused (round-9
-        directive #2): the rewrite shifts row positions, so a DV'd
-        file's replacement is forced to a single file written in
-        ascending old-position order, and every sidecar referencing it
-        is rewritten in place — purged positions dropped, surviving
-        dead positions remapped to the new (file, position) — so each
-        retained version still sees exactly its own dead rows, minus
-        the purged ones.
+        (written by :meth:`remove_rows`) are handled, not refused: the
+        rewrite shifts row positions, so a DV'd file's replacement is
+        forced to a single file written in ascending old-position
+        order, and every sidecar referencing it is rewritten in place
+        — purged positions dropped, surviving dead positions remapped
+        to the new (file, position) — so each retained version still
+        sees exactly its own dead rows, minus the purged ones.
 
         Limitations (explicit, never silent): manifest
         rewrites are per-file atomic (``os.replace``) but not
@@ -2276,8 +2157,6 @@ class VersionedParquetTable:
         *,
         adds: DataFrame | None = None,
         operation: str = "DELETE_ROWS",
-        metrics: "dict | Callable[[], dict] | None" = None,
-        cdc_files: list[str] | None = None,
     ) -> int:
         """Row-level delete WITHOUT rewriting files (Delta deletion
         vectors): ``dead`` is a ``(__file, __pos)`` frame — typically
@@ -2294,11 +2173,51 @@ class VersionedParquetTable:
         anti-join against the (tiny) sidecars; ``compact()`` rewrites
         DV'd partitions and clears them.
         """
-        return self.commit_staged(
-            operation,
-            self.stage_remove_rows(dead, adds=adds, cdc_files=cdc_files),
-            metrics=metrics,
+        m = self._current()
+        # per-file dead counts: bounded by files touched, driver-safe
+        per_file = {
+            r["__file"]: r["n"]
+            for r in dead.groupBy("__file")
+            .agg(F.count(F.lit(1)).alias("n"))
+            .collect()
+        }
+        unknown = sorted(set(per_file) - {f["path"] for f in m["files"]})
+        if unknown:
+            raise ValueError(
+                f"deletion vector targets unknown files: {unknown[:3]}"
+            )
+        dv_files = []
+        if per_file:
+            # distributed sidecar write (no driver collect of positions)
+            dv_rel = f"dv-{uuid.uuid4().hex}"
+            dead.select("__file", "__pos").write.parquet(
+                os.path.join(self.path, DV_DIR, dv_rel)
+            )
+            for f in m["files"]:
+                if f["path"] in per_file:
+                    old = f.get("dv") or {"paths": [], "count": 0}
+                    dv_files.append(
+                        ManifestEntry(
+                            f["path"], f["partition"], f.get("stats"), f.get("rows"),
+                            {
+                                "paths": old["paths"] + [dv_rel],
+                                "count": old["count"] + per_file[f["path"]],
+                            },
+                        )
+                    )
+        new_files, assigned = [], False
+        if adds is not None:
+            new_files, _, assigned = self._stage(m, adds, _schema(m))
+        s = StagedWrite(
+            m,
+            dv_files + new_files,
+            reads=[e.partition for e in dv_files],
+            assigned_identity=assigned,
+            metrics={"n_deleted": sum(per_file.values()), "n_files_dv": len(per_file)},
         )
+        if self._cdc_enabled(m) and (per_file or adds is not None):
+            s.cdc_files = self._write_changes(s, dead if per_file else None)
+        return self.commit_staged(operation, s)
 
     def compact(
         self,
@@ -2742,8 +2661,8 @@ class VersionedParquetTable:
             dead_dv = []
             if os.path.isdir(dv_root):
                 for name in sorted(set(os.listdir(dv_root)) - live_dv):
-                    # same grace window as data-file orphans: a dv-mode
-                    # upsert writes its sidecar BEFORE its manifest
+                    # same grace window as data-file orphans:
+                    # remove_rows writes its sidecar BEFORE its manifest
                     # commit, so a young unreferenced sidecar may belong
                     # to an in-flight writer
                     try:
@@ -2805,7 +2724,7 @@ class VersionedParquetTable:
         if os.path.isdir(dv_root):
             for name in os.listdir(dv_root):
                 if name not in live_dv:
-                    # grace window: a dv-mode upsert writes its sidecar
+                    # grace window: remove_rows writes its sidecar
                     # before its manifest commit, so a young
                     # unreferenced sidecar may be an in-flight write
                     try:
@@ -3146,6 +3065,13 @@ class VersionedParquetTable:
         partition-scoped copy-on-write that is the touched partitions,
         not the table. The remaining join keys on ``key_cols`` over
         just that changed slice.
+
+        Precondition: ``key_cols`` is unique per row in each of the two
+        snapshots. Pre and post rows pair by a full outer join on
+        ``key_cols``, so rows of a key that repeats cross-pair into
+        spurious updates. The exact per-commit feed is the change
+        records each commit writes under ``_cdc/`` on a change-feed
+        table (what the stream reader serves).
         """
         keys = list(key_cols)
         if (version_from is None) == (timestamp_from is None):

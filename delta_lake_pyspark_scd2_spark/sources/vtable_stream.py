@@ -61,6 +61,10 @@ from pyspark.sql.datasource import (
 from pyspark.sql.types import StructType
 
 _META_COLS = ("_change_type", "_commit_version")
+#: Spark writes timestamps as INT96, which pyarrow reads as nanoseconds
+#: by default: the SCD2 far-future sentinel 9999-12-31 overflows that
+#: range and would arrive as a date in 1816.
+_INT96_UNIT = "us"
 
 
 def _meta_table(path: str):
@@ -308,7 +312,7 @@ class _VTableChangesStreamReader(DataSourceStreamReader):
         import pyarrow.parquet as pq
 
         path = os.path.join(spec["table_path"], "_cdc", spec["cdc"])
-        tbl = pq.read_table(path)
+        tbl = pq.read_table(path, coerce_int96_timestamp_unit=_INT96_UNIT)
         cols = set(tbl.column_names)
         names = [n for n, _ in spec["fields"]]
         rows = tbl.to_pylist()
@@ -325,7 +329,7 @@ class _VTableChangesStreamReader(DataSourceStreamReader):
 
         root = spec["table_path"]
         fpath = os.path.join(root, "data", spec["file"])
-        tbl = pq.read_table(fpath)
+        tbl = pq.read_table(fpath, coerce_int96_timestamp_unit=_INT96_UNIT)
         cols = set(tbl.column_names)
         mapping = spec.get("mapping") or {}
         part_vals = spec.get("partition") or {}

@@ -51,7 +51,6 @@ _SLOW_TESTS = {
     "test_corpus_ingest.py::test_reingesting_same_batch_accepts_nothing",
     "test_corpus_ingest.py::test_second_batch_dedups_against_store",
     "test_corpus_ingest.py::test_txn_heals_corpus_committed_fp_crashed_window",
-    "test_deletion_vectors.py::test_upsert_dv_mode_equivalent_and_no_rewrite",
     "test_dtype_sweep.py::test_registry_oracles_strict_dtypes",
     "test_dtype_sweep.py::test_rows_only_queries_have_no_temporal_outputs",
     "test_fsck.py::test_fsck_cli_exit_codes",
@@ -68,7 +67,6 @@ _SLOW_TESTS = {
     "test_purge.py::test_purge_on_dv_upsert_table",
     "test_reference_parity.py::test_reference_items_full_batch_counts",
     "test_scale_techniques.py::test_upsert_hot_key_target_matches_dict_replay",
-    "test_scd2_dv_close.py::test_dv_close_matches_rewrite_close",
     "test_scd2_operators.py::test_asof_join_hot_probe_key_matches_brute_force",
     "test_scd2_properties.py::test_any_batching_converges_to_ground_truth",
     "test_scd2_properties.py::test_upsert_sequence_equals_dict_replay",
@@ -133,7 +131,6 @@ _SLOW_TESTS = {
     "test_table_properties.py::test_auto_compact_only_touches_appended_partition",
     "test_table_properties.py::test_concurrent_scd2_merges_different_days_both_land",
     "test_table_properties.py::test_vacuum_sweeps_orphans_with_grace",
-    "test_vtable_stream.py::test_dv_mode_upsert_streams_pre_post_images",
     "test_vtable_stream.py::test_vacuum_sweeps_unreferenced_cdc_dirs",
 }
 

@@ -44,7 +44,7 @@ def test_partitioning_bench_smoke():
 
 
 def test_daily_bench_rebuild_smoke():
-    rows = _run(["tools/daily_bench.py", "3", "5000", "rewrite", "rebuild"])
+    rows = _run(["tools/daily_bench.py", "3", "5000", "rebuild"])
     assert len(rows) == 3
     assert rows[0]["n_inserted"] == 5000 and rows[0]["n_stale"] == 0
     # late injection fires from day 1: stale events arrive AND rebuild

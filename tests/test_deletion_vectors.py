@@ -158,41 +158,3 @@ def test_remove_rows_unknown_file_rejected(spark, tmp_path):
     )
     with pytest.raises(ValueError, match="unknown files"):
         t.remove_rows(bogus)
-
-
-def test_upsert_dv_mode_equivalent_and_no_rewrite(spark, tmp_path):
-    """Merge-on-read upsert: same result as rewrite mode in every
-    read, but the old files' bytes are untouched (DV sidecars only)."""
-    import os
-
-    rows = [(i, i % 3, i * 10) for i in range(30)]
-    mk = lambda p: VersionedParquetTable.create(  # noqa: E731
-        spark,
-        spark.createDataFrame(rows, "id long, part long, val long"),
-        str(tmp_path / p),
-        partition_cols=["part"],
-    )
-    t_rw, t_dv = mk("rw"), mk("dv")
-    upd = spark.createDataFrame(
-        [(1, 1, 111), (2, 2, 222), (99, 0, 990)], "id long, part long, val long"
-    )
-    dels = spark.createDataFrame([(5,)], "id long")
-
-    out_rw = t_rw.upsert(upd, ["id"], deletes=dels)
-    files_before = {f["path"] for f in t_dv._current()["files"]}
-    out_dv = t_dv.upsert(upd, ["id"], deletes=dels, mode="dv")
-    assert out_rw == out_dv
-    got_rw = {(r["id"], r["val"]) for r in t_rw.read().collect()}
-    got_dv = {(r["id"], r["val"]) for r in t_dv.read().collect()}
-    assert got_rw == got_dv
-    assert (1, 111) in got_dv and (99, 990) in got_dv and 5 not in {
-        i for i, _ in got_dv
-    }
-    # no-rewrite pin: every pre-existing file path is still live
-    after = {f["path"] for f in t_dv._current()["files"]}
-    assert files_before <= after
-    assert any(f.get("dv") for f in t_dv._current()["files"])
-    # compaction materializes and results stay identical
-    t_dv.compact()
-    assert {(r["id"], r["val"]) for r in t_dv.read().collect()} == got_rw
-    assert not any(f.get("dv") for f in t_dv._current()["files"])

@@ -85,26 +85,33 @@ def test_identity_rename_drop_guards(spark, tmp_path):
 
 
 def test_identity_semantics_through_dv_upsert(spark, tmp_path):
-    """Merge-on-read upsert with the identity column omitted: a MATCHED
-    key keeps its existing id (Delta's BY DEFAULT merge semantics — no
-    silent surrogate-key churn); a NEW key gets a fresh id and the
-    remove_rows commit advances the watermark past it."""
+    """With the identity column omitted, an upsert's MATCHED key keeps
+    its existing id (Delta's BY DEFAULT merge semantics — no silent
+    surrogate-key churn), and a ``remove_rows`` commit that appends a
+    NEW key gives it a fresh id and advances the watermark past it."""
     t = VersionedParquetTable.create(
         spark, _rows(spark, 0, 3), str(tmp_path / "t"),
         identity_cols={"rid": {"start": 1, "step": 1}},
     )
     before = {r["k"]: r["rid"] for r in t.read().collect()}
     # matched key, rid omitted -> keeps its old rid
-    t.upsert(spark.createDataFrame([(0,)], "k long"), ["k"], mode="dv")
+    t.upsert(spark.createDataFrame([(0,)], "k long"), ["k"])
     after = {r["k"]: r["rid"] for r in t.read().collect()}
     assert after[0] == before[0]
     assert len(set(after.values())) == 3  # still unique
-    # new key, rid omitted -> fresh id, watermark past it
-    t.upsert(spark.createDataFrame([(77,)], "k long"), ["k"], mode="dv")
+    # DV key 1's row and append a new key, rid omitted -> fresh id,
+    # watermark past it
+    pos = t.read_partitions(t.partitions_of(), with_position=True)
+    t.remove_rows(
+        pos.filter(F.col("k") == 1).select("__file", "__pos"),
+        adds=spark.createDataFrame([(77,)], "k long"),
+    )
+    assert any(f.get("dv") for f in t._current()["files"])
     got = {r["k"]: r["rid"] for r in t.read().collect()}
+    assert sorted(got) == [0, 2, 77]
     assert got[77] is not None and got[77] not in before.values()
     assert t.identity_columns()["rid"]["next"] > got[77]
     # and the next plain append cannot collide
     t.append(_rows(spark, 100, 2))
     rids2 = [r["rid"] for r in t.read().collect()]
-    assert len(set(rids2)) == 6
+    assert len(rids2) == len(set(rids2)) == 5

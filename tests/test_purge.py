@@ -193,9 +193,10 @@ def test_purge_erases_through_deletion_vectors(spark, tmp_path):
 
 
 def test_purge_on_dv_upsert_table(spark, tmp_path):
-    """The merge-on-read path the repo recommends (upsert(mode='dv'))
-    must support right-to-be-forgotten: purge a key from a DV-upserted
-    table and no version, snapshot, or CDF replay returns it."""
+    """Right-to-be-forgotten on a change-feed table updated through a
+    deletion vector: purge a key after a ``remove_rows`` that DVs its
+    old row and appends replacements in one commit, and no version,
+    snapshot, or CDF replay returns it."""
     import glob
     import os
 
@@ -207,14 +208,14 @@ def test_purge_on_dv_upsert_table(spark, tmp_path):
     t = VersionedParquetTable.create(
         spark, df, path, properties={"enableChangeDataFeed": "true"}
     )
-    # dv-mode merge touches u2's row (id=2) and inserts a new u2 row
-    t.upsert(
-        spark.createDataFrame(
+    # DV u2's row id=2, append its replacement and a new u2 row
+    pos = t.read_partitions(t.partitions_of(), with_position=True)
+    t.remove_rows(
+        pos.filter(F.col("id") == 2).select("__file", "__pos"),
+        adds=spark.createDataFrame(
             [(2, "u2", 222.0), (100, "u2", 100.0)],
             "id long, user string, v double",
         ),
-        ["id"],
-        mode="dv",
     )
     assert any(f.get("dv") for f in t._snapshot_files(t.latest_version()))
 
@@ -230,11 +231,8 @@ def test_purge_on_dv_upsert_table(spark, tmp_path):
     files = glob.glob(
         os.path.join(path, "_cdc", "**", "*.parquet"), recursive=True
     )
-    if files:
-        assert (
-            spark.read.parquet(*files).filter(F.col("user") == "u2").count()
-            == 0
-        )
+    assert files  # the remove_rows commit wrote change records
+    assert spark.read.parquet(*files).filter(F.col("user") == "u2").count() == 0
     # and the purge is idempotent on the DV table too
     out2 = t2.purge([("user", "=", "u2")])
     assert out2["n_history_rows_purged"] == 0

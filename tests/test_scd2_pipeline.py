@@ -851,7 +851,6 @@ def test_spec_rejects_unknown_enum_values():
     for field, bad in [
         ("dedup_mode", "keep_first"),
         ("late_policy", "ignore"),
-        ("close_mode", "cow"),
     ]:
         with pytest.raises(ValueError, match=field):
             dataclasses.replace(SPEC, **{field: bad})

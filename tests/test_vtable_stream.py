@@ -229,35 +229,6 @@ def test_stream_without_cdf_rejects_inplace_dv_commits(spark, tmp_path):
         reader.partitions({"version": 0}, {"version": 1})
 
 
-def test_dv_mode_upsert_streams_pre_post_images(spark, tmp_path):
-    """Merge-on-read upserts write the same change files as rewrite
-    mode: the stream sees full update pairing, not file-diff noise."""
-    path, ck = str(tmp_path / "t"), str(tmp_path / "ck")
-    t = VersionedParquetTable.create(
-        spark,
-        spark.createDataFrame([(1, "a"), (2, "b")], "id long, s string"),
-        path,
-        properties={"enableChangeDataFeed": "true"},
-    )
-    batches: list = []
-    _drain(spark, path, ck, batches)
-    batches.clear()
-    t.upsert(
-        spark.createDataFrame([(2, "B!"), (3, "c")], "id long, s string"),
-        ["id"],
-        mode="dv",
-    )
-    _drain(spark, path, ck, batches)
-    rows = [r for b in batches for r in b]
-    assert sorted((r["id"], r["_change_type"]) for r in rows) == [
-        (2, "update_postimage"),
-        (2, "update_preimage"),
-        (3, "insert"),
-    ]
-    post = [r for r in rows if r["_change_type"] == "update_postimage"][0]
-    assert post["s"] == "B!"
-
-
 def test_stream_restart_resumes_from_checkpoint(spark, tmp_path):
     path, ck = str(tmp_path / "t"), str(tmp_path / "ck")
     t = VersionedParquetTable.create(

@@ -9,11 +9,7 @@ the evidence.
 
 Usage::
 
-    python tools/daily_bench.py [days] [rows_per_day] [close_mode] [late_policy]
-
-``close_mode`` (default ``rewrite``): ``dv`` switches Phase A to
-deletion-vector closes — write cost O(closed rows) instead of
-O(touched partitions).
+    python tools/daily_bench.py [days] [rows_per_day] [late_policy]
 
 ``late_policy`` (default ``drop``): ``rebuild`` turns on the bronze
 event-log + per-batch watermark sidecars and injects ~1% genuinely
@@ -59,13 +55,10 @@ SPEC = SCD2Spec(
 def main() -> None:
     days = int(sys.argv[1]) if len(sys.argv) > 1 else 8
     n = int(sys.argv[2]) if len(sys.argv) > 2 else 500_000
-    close_mode = sys.argv[3] if len(sys.argv) > 3 else "rewrite"
-    late_policy = sys.argv[4] if len(sys.argv) > 4 else "drop"
+    late_policy = sys.argv[3] if len(sys.argv) > 3 else "drop"
     import dataclasses
 
-    spec = dataclasses.replace(
-        SPEC, close_mode=close_mode, late_policy=late_policy
-    )
+    spec = dataclasses.replace(SPEC, late_policy=late_policy)
     spark = get_spark("daily_bench")
     with tempfile.TemporaryDirectory() as d:
         for day in range(days):
