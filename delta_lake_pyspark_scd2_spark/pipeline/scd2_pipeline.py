@@ -11,9 +11,10 @@ stale-event guard that keeps the single-current invariant under
 superset re-runs (the reference's Phase A/B split can double-open a
 key there; see tests/test_scd2_pipeline.py).
 
-One commit per batch: Phase A (close the current rows of changed keys)
-and Phase B (insert the new version rows) both stage their files
-against one pinned table snapshot and land together in a single
+One write and one commit per batch: the close (the reference's Phase
+A: close the current rows of changed keys) and the inserts (its Phase
+B: the new version rows) are two frames planned on one pinned table
+snapshot, written by ONE Spark job and landed in a single
 ``SCD2_MERGE`` commit. Every committed version is a consistent SCD2
 state, and a failure anywhere before the commit leaves the previous
 version. (The reference ran Phase A and Phase B as two Delta MERGEs,
@@ -22,22 +23,25 @@ has no current row — a documented divergence.)
 
 Cost:
   * Validation is lazy. The DQ tallies and the stale count ride the
-    merge's first action (the collect of Phase A's touched partitions,
-    which fills the validated, staged and changed caches) as
-    Observations, so no aggregation job runs before the merge.
-    Quarantine is written right after that action, before Phase A or B
-    stages anything, so it still lands before any table write.
-  * Phase A touches only the partitions holding the current rows of
+    merge's first action (the collect of its partition scope, which
+    fills the validated, staged and changed caches) as Observations,
+    so no aggregation job runs before the merge. Quarantine is written
+    right after that action, before the merge writes anything, so it
+    still lands before any table write.
+  * After that collect the merge runs one more job: the write of both
+    frames, whose branches Spark's scheduler runs side by side. The
+    close and insert counts ride it as Observations.
+  * The close touches only the partitions holding the current rows of
     *changed* keys, but rewrites every file of each touched partition
     (copy-on-write), so its cost follows the touched partitions' size,
     not the rows closed: on the benchmark's daily merge it copies about
     40 rows per row closed, and a deeper history makes it slower.
-  * Phase B only adds files (no rewrite at all).
+    Inserts landing in a touched partition share its new files.
   * Change detection joins staged×current on the key — broadcast when
     the batch is small, AQE-planned shuffle otherwise.
   * The idempotency anti-join reads only (key, valid_from) columns —
-    column-pruned parquet scan — of the partitions the new versions
-    land in. When a batch opens only new days that scan names no file,
+    column-pruned parquet scan — of the days the batch's usable events
+    fall on. When a batch opens only new days that scan names no file,
     reads as an empty relation, and Catalyst folds the anti-join away
     at plan time.
 
@@ -61,10 +65,7 @@ from pyspark.sql import functions as F
 
 from delta_lake_pyspark_scd2_spark.functions import partition_cols_from
 from delta_lake_pyspark_scd2_spark.operators import scd2, validation
-from delta_lake_pyspark_scd2_spark.sources.vtable import (
-    StagedWrite,
-    VersionedParquetTable,
-)
+from delta_lake_pyspark_scd2_spark.sources.vtable import VersionedParquetTable
 
 
 @dataclass(frozen=True)
@@ -360,7 +361,7 @@ def run_scd2_batch(
             versions = versions.observe(
                 obs, F.count(F.lit(1)).alias("n_inserted")
             )
-            VersionedParquetTable.create(
+            created = VersionedParquetTable.create(
                 spark,
                 versions,
                 table_path,
@@ -369,8 +370,8 @@ def run_scd2_batch(
                 # partition layout as GENERATED columns: the table
                 # itself re-derives/validates y/m/d from valid_from on
                 # every write path, so no future writer can land a
-                # version row in the wrong partition (the pruning in
-                # Phases A/B relies on it)
+                # version row in the wrong partition (the merge's
+                # partition pruning relies on it)
                 generated_cols={
                     f"{spec.partition_prefix}_year": "year(valid_from)",
                     f"{spec.partition_prefix}_month": "month(valid_from)",
@@ -382,11 +383,15 @@ def run_scd2_batch(
             # create aborts the whole load and the batch is
             # re-submitted, so nothing is lost, merely not yet
             # quarantined).
+            n_inserted = _observed_long(obs, "n_inserted")
             merge_part: dict = {
-                "n_inserted": int(obs.get["n_inserted"] or 0),
+                # fallback: count the rows just committed
+                "n_inserted": created.read().count()
+                if n_inserted is None
+                else n_inserted,
                 "n_closed": 0,
                 "n_stale": 0,
-                "n_observation_fallbacks": _land_dq(),
+                "n_observation_fallbacks": int(n_inserted is None) + _land_dq(),
             }
         else:
             table = VersionedParquetTable(spark, table_path)
@@ -413,17 +418,19 @@ def _merge_batch(
     land_dq: Callable[[], int],
 ) -> dict:
     """SCD2 merge (reference Phase A/B, src/header_etl.py:144-280) on the
-    versioned table, committed ONCE. ``land_dq`` runs right after the
-    first action (it reads the DQ Observation and writes quarantine)
-    and returns its Observation fallbacks.
+    versioned table, written ONCE and committed ONCE. ``land_dq`` runs
+    right after the first action (it reads the DQ Observation and
+    writes quarantine) and returns its Observation fallbacks.
 
-    Phase A closes the current rows of changed keys; Phase B inserts the
-    new version rows. Both read one pinned snapshot, stage their files,
-    and land in a single ``SCD2_MERGE`` commit — so no reader, time
-    travel or crash ever sees a version in which an updated key has no
-    current row. (The reference ran two Delta MERGEs; documented
-    divergence.) Any failure before that commit leaves the table at its
-    previous version and releases every persisted frame.
+    Two frames are planned on one pinned snapshot: the close frame
+    rewrites the partitions holding the current rows of changed keys,
+    with those rows closed; the insert frame holds the new version rows.
+    One ``stage_write`` writes both with one Spark job, and one
+    ``SCD2_MERGE`` commit lands them — so no reader, time travel or
+    crash ever sees a version in which an updated key has no current
+    row. (The reference ran two Delta MERGEs; documented divergence.)
+    Any failure before that commit leaves the table at its previous
+    version and releases every persisted frame.
 
     Correctness refinements over the reference (documented divergences):
       * events at or before the key's current ``valid_from`` are *stale*
@@ -436,17 +443,18 @@ def _merge_batch(
     """
     keys = list(spec.key_cols)
     ts = spec.event_ts_col
+    pcols = spec.partition_cols
     # the snapshot every read below pins and the commit rebases from
     base = table._current()
 
-    # Phases A and B derive touched partitions *arithmetically* from
-    # valid_from under THIS spec's partition scheme; that is only sound
-    # if the table on disk was partitioned the same way. Fail fast on a
-    # spec/manifest mismatch instead of silently pruning to the wrong
-    # partitions and missing closes.
-    if list(base["partition_cols"]) != list(spec.partition_cols):
+    # The merge derives its partition scope *arithmetically* from event
+    # and valid_from timestamps under THIS spec's partition scheme; that
+    # is only sound if the table on disk was partitioned the same way.
+    # Fail fast on a spec/manifest mismatch instead of silently pruning
+    # to the wrong partitions and missing closes.
+    if list(base["partition_cols"]) != list(pcols):
         raise ValueError(
-            f"SCD2 spec partition_cols {list(spec.partition_cols)} do not "
+            f"SCD2 spec partition_cols {list(pcols)} do not "
             f"match table manifest partition_cols {base['partition_cols']} "
             f"at {table.path}; merge's partition pruning would be unsound "
             "under a different scheme. Recreate the table or align "
@@ -479,8 +487,8 @@ def _merge_batch(
     )
 
     # Split staged events: new-key events, fresh events, stale events.
-    # Persisted: reused by Phase A and Phase B — without it every
-    # downstream action re-runs the batch×current join.
+    # Persisted: reused by the scope collect and both frames — without
+    # it every downstream action re-runs the batch×current join.
     #
     # Freshness reference point differs by policy. "drop": the current
     # row's valid_from (reference behavior — anything at/before it is
@@ -490,7 +498,7 @@ def _merge_batch(
     # that (convergence property, tests/test_scd2_properties.py).
     #
     # every frame persisted below; the finally releases them whatever
-    # happens, on the Phase-B thread too
+    # happens
     cached: list[DataFrame] = []
     try:
         prior_events: DataFrame | None = None
@@ -520,8 +528,8 @@ def _merge_batch(
         # The stale count rides the staged cache's materialization as an
         # Observation INSIDE the persisted plan (round-11, guide §5 "the
         # driver is a single process"): it fires exactly once, on the
-        # first action that fills the cache (the `touched` collect
-        # below), so no dedicated `late.count()` job runs.
+        # first action that fills the cache (the scope collect below),
+        # so no dedicated `late.count()` job runs.
         # when/otherwise (not a bare cast) so NULL predicates count as
         # 0, exactly like filter().
         stale_obs = Observation(f"scd2_stale_{uuid.uuid4().hex[:8]}")
@@ -548,9 +556,8 @@ def _merge_batch(
         # predicate scd2.detect_changes applies after its join — here
         # the join already happened once, in staged). One row per
         # changed key with the first changing event's ts; the current
-        # row's valid_from rides along so Phase A's touched partitions
-        # derive from `changed` alone — no table re-scan, no second
-        # join.
+        # row's valid_from rides along so the close partitions derive
+        # from `changed` alone — no table re-scan, no second join.
         any_change = F.lit(False)
         for c in tracked:
             any_change = any_change | scd2.null_safe_neq(
@@ -567,117 +574,122 @@ def _merge_batch(
         )
         cached.append(changed)
 
-        # Phase A scope: the partitions holding the current rows of
-        # changed keys, by pure date arithmetic over the (small,
-        # persisted) changed set. No forced broadcast of `changed`: its
-        # size is data-dependent (≤ all keys in the batch) — AQE picks
-        # broadcast when it is actually small and falls back to a
-        # shuffle join when it is not.
+        # The merge's scope, by pure date arithmetic, in one collect:
+        #   * close partitions — those holding the current rows of
+        #     changed keys (over the small, persisted changed set; AQE
+        #     picks broadcast when it is actually small);
+        #   * insert scope — the day of every usable event. Each new
+        #     version's valid_from is one of these events' ts, so its
+        #     partition is among them, and so is that of any existing
+        #     row sharing its (key, valid_from): the idempotency
+        #     anti-join reads only these partitions.
+        # This collect materializes the `tagged`, `staged` AND `changed`
+        # caches and fires the DQ and stale Observations — the single
+        # serial prefix of the merge.
         close_parts = partition_cols_from(
-            changed.filter(F.col("first_change_ts") > F.col("__cur_from")).select(
-                F.col("__cur_from").alias("valid_from")
-            ),
-            "valid_from",
+            changed.filter(F.col("first_change_ts") > F.col("__cur_from")),
+            "__cur_from",
             spec.partition_prefix,
+        ).select(*pcols, F.lit(True).alias("__close"))
+        ins_parts = partition_cols_from(usable, ts, spec.partition_prefix).select(
+            *pcols, F.lit(False).alias("__close")
         )
-        # this collect materializes the `tagged`, `staged` AND `changed`
-        # caches (its plan scans every staged partition) and fires the
-        # DQ and stale Observations — the single serial prefix of the
-        # merge
-        touched = [
-            {k: str(r[k]) for k in spec.partition_cols}
-            for r in close_parts.select(*spec.partition_cols).distinct().collect()
-        ]
+        scope = close_parts.unionByName(ins_parts).distinct().collect()
+        touched = [{k: str(r[k]) for k in pcols} for r in scope if r["__close"]]
+        ins_scope = [{k: str(r[k]) for k in pcols} for r in scope if not r["__close"]]
         # Guarded read (round-10's rejected variant showed AQE's
         # empty-relation propagation can complete a query without its
         # CollectMetrics row): non-blocking getRowOrEmpty, falling back
         # to an explicit count — cheap now, the cache is materialized.
+        # Every fallback leaves a count in the run metrics.
         n_stale = _observed_long(stale_obs, "n_stale")
-        # a fallback leaves a count in the run metrics
         n_observation_fallbacks = int(n_stale is None)
         if n_stale is None:
             n_stale = late.count()
-        # quarantine lands before Phase A or B stages anything
+        # quarantine lands before the merge writes anything
         n_observation_fallbacks += land_dq()
+        t_b = time.time()
 
-        def _phase_b() -> tuple[StagedWrite | None, int]:
-            # insert version rows from the first change onward for
-            # changed keys plus everything for new keys; idempotency
-            # key = (key, valid_from) anti-join (reference
-            # src/header_etl.py:247-280). New keys read straight off the
-            # staged frame (null __cur_from ⇔ the left join found no
-            # current row).
-            new_key_events = staged.filter(is_new_key).drop(*helper_cols)
-            changed_events = (
-                usable.join(changed, on=keys, how="inner")
-                .filter(F.col(ts) >= F.col("first_change_ts"))
-                .drop("first_change_ts", "__cur_from")
+        # close frame: copy-on-write of the touched partitions with the
+        # current rows of changed keys closed at their first change
+        closes = (
+            table.read_partitions(touched, base["version"])
+            .join(changed.drop("__cur_from"), on=keys, how="left")
+            .withColumn(
+                "__close",
+                F.col("is_current")
+                & F.col("first_change_ts").isNotNull()
+                & (F.col("first_change_ts") > F.col("valid_from")),
             )
-            # Persisted: feeds the partition-scope collect AND the
-            # anti-join — without it the collapse+intervalize windows
-            # run twice.
-            versions = _prepare_versions(
-                spec, new_key_events.unionByName(changed_events)
-            ).persist()
-            cached.append(versions)
-            # Idempotency conflicts share (key, valid_from), and the
-            # partition columns are a pure function of valid_from — so
-            # a conflicting existing row can only live in a partition
-            # some incoming version also maps to. Scope the anti-join's
-            # right side to exactly those partitions (manifest-pruned
-            # scan) instead of the whole table: per-batch cost stays ∝
-            # batch footprint as the table grows 100×.
-            ins_touched = [
-                {k: str(r[k]) for k in spec.partition_cols}
-                for r in versions.select(*spec.partition_cols).distinct().collect()
-            ]
-            existing_keys = table.read_partitions(
-                ins_touched, base["version"]
-            ).select(*keys, "valid_from")
-            inserts = versions.join(
-                existing_keys, on=[*keys, "valid_from"], how="left_anti"
-            ).persist()
-            cached.append(inserts)
-            # the count materializes the cache the write replays, and is
-            # the exact insert count
+            .withColumns(
+                {
+                    "valid_to": F.when(
+                        F.col("__close"), F.col("first_change_ts")
+                    ).otherwise(F.col("valid_to")),
+                    "is_current": F.when(F.col("__close"), F.lit(False)).otherwise(
+                        F.col("is_current")
+                    ),
+                    "closed_by_batch": F.when(
+                        F.col("__close"), F.lit(batch_id)
+                    ).otherwise(F.col("closed_by_batch")),
+                }
+            )
+        )
+        # insert frame: version rows from the first change onward for
+        # changed keys plus everything for new keys, minus the (key,
+        # valid_from) pairs the table already holds — the idempotency
+        # anti-join (reference src/header_etl.py:247-280), column-pruned
+        # and scoped to the insert scope. New keys read straight off the
+        # staged frame (null __cur_from ⇔ the left join found no current
+        # row). When a batch opens only new days the scope's scan names
+        # no file and Catalyst folds the anti-join away.
+        changed_events = (
+            usable.join(changed, on=keys, how="inner")
+            .filter(F.col(ts) >= F.col("first_change_ts"))
+            .drop("first_change_ts", "__cur_from")
+        )
+        versions = _prepare_versions(
+            spec,
+            staged.filter(is_new_key).drop(*helper_cols).unionByName(changed_events),
+        )
+        inserts = versions.join(
+            table.read_partitions(ins_scope, base["version"]).select(*keys, "valid_from"),
+            on=[*keys, "valid_from"],
+            how="left_anti",
+        )
+        # both counts ride the one write job (observe)
+        ins_obs = Observation(f"scd2_insert_{uuid.uuid4().hex[:8]}")
+        frames = [inserts.observe(ins_obs, F.count(F.lit(1)).alias("n_inserted"))]
+        if touched:
+            close_obs = Observation(f"scd2_close_{uuid.uuid4().hex[:8]}")
+            frames.append(
+                closes.observe(
+                    close_obs, F.sum(F.col("__close").cast("long")).alias("n_closed")
+                ).drop("first_change_ts", "__close")
+            )
+        write = table.stage_write(
+            *frames, partitions=touched, base=base, merge_schema=spec.evolve_schema
+        )
+        # the write read its close partitions and its insert scope, and
+        # none of its files may land outside them
+        write.reads = touched + ins_scope
+        write.require_within(write.reads)
+        n_closed = _observed_long(close_obs, "n_closed") if touched else 0
+        if n_closed is None:
+            n_observation_fallbacks += 1
+            n_closed = closes.filter(F.col("__close")).count()
+        n_inserted = _observed_long(ins_obs, "n_inserted")
+        if n_inserted is None:
+            n_observation_fallbacks += 1
             n_inserted = inserts.count()
-            if not n_inserted:
-                return None, 0
-            insert = table.stage_write(
-                inserts, base=base, merge_schema=spec.evolve_schema
-            )
-            # not a blind append: the anti-join read these partitions
-            insert.reads = ins_touched
-            return insert, n_inserted
-
-        # Phase B (compute AND staging) overlaps Phase A's staging
-        # (guide §2.6: actions are only sequential because the driver
-        # calls them sequentially). Both read the pinned snapshot and
-        # stage uncommitted files, so neither can see the other's
-        # output; the single commit below orders nothing.
-        from concurrent.futures import ThreadPoolExecutor
-
-        pool = ThreadPoolExecutor(max_workers=1)
-        try:
-            fut = pool.submit(_phase_b)
-            closed, close = _phase_a(
-                spec, table, base, changed, touched, batch_id
-            )
-            t_b = time.time()
-            insert, n_inserted = fut.result()
-        finally:
-            # a failed Phase A waits out Phase B, so the finally below
-            # also releases the frames Phase B persisted
-            pool.shutdown(wait=True)
-        staged = [w for w in (close, insert) if w is not None]
-        if staged:
+        if write.adds or write.removes:
             table.commit_staged(
                 "SCD2_MERGE",
-                *staged,
+                write,
                 merge_schema=spec.evolve_schema,
                 metrics={
                     "batch_id": batch_id,
-                    "n_closed": closed,
+                    "n_closed": n_closed,
                     "n_inserted": n_inserted,
                 },
             )
@@ -696,19 +708,19 @@ def _merge_batch(
         for df in cached:
             df.unpersist()
     out = {
-        "n_closed": closed,
+        "n_closed": n_closed,
         "n_inserted": n_inserted,
         "n_stale": n_stale,
         "n_observation_fallbacks": n_observation_fallbacks,
-        # Phase-A scope evidence: partitions actually rewritten this
+        # close scope evidence: partitions actually rewritten this
         # merge — the number that must track the BATCH's date spread,
         # not the table's, for cost ∝ changed data
         "n_parts_closed": len(touched),
         # phase breakdown (reference tracks per-phase durations,
         # src/header_etl.py:319-331; these localize merge cost the
-        # same way at any scale: close = Phase A's staging, insert =
-        # the rest of Phase B's compute and staging plus the commit,
-        # rebuild = late-history reconstruction)
+        # same way at any scale): close = the scope collect through the
+        # quarantine write, insert = the one write of both frames plus
+        # the commit, rebuild = late-history reconstruction
         "duration_s_close": round(t_b - t_a, 3),
         "duration_s_insert": round(t_c - t_b, 3),
     }
@@ -716,54 +728,6 @@ def _merge_batch(
         out["n_rebuilt"] = n_rebuilt
         out["duration_s_rebuild"] = round(time.time() - t_c, 3)
     return out
-
-
-def _phase_a(
-    spec: SCD2Spec,
-    table: VersionedParquetTable,
-    base: dict,
-    changed: DataFrame,
-    touched: list[dict[str, str]],
-    batch_id: str,
-) -> tuple[int, StagedWrite | None]:
-    """Stage Phase A against snapshot ``base``: close the current rows
-    of ``changed`` keys in the ``touched`` partitions at their first
-    change. Returns ``(n_closed, staged close or None)``."""
-    if not touched:
-        return 0, None
-    keys = list(spec.key_cols)
-    to_close = changed.drop("__cur_from")
-    closing = (
-        F.col("is_current")
-        & F.col("first_change_ts").isNotNull()
-        & (F.col("first_change_ts") > F.col("valid_from"))
-    )
-    # copy-on-write: rewrite the touched partitions with the closes
-    # applied; the count piggybacks on the write job (observe)
-    updated = (
-        table.read_partitions(touched, base["version"])
-        .join(to_close, on=keys, how="left")
-        .withColumn("__close", closing)
-        .withColumns(
-            {
-                "valid_to": F.when(
-                    F.col("__close"), F.col("first_change_ts")
-                ).otherwise(F.col("valid_to")),
-                "is_current": F.when(F.col("__close"), F.lit(False)).otherwise(
-                    F.col("is_current")
-                ),
-                "closed_by_batch": F.when(
-                    F.col("__close"), F.lit(batch_id)
-                ).otherwise(F.col("closed_by_batch")),
-            }
-        )
-    )
-    obs = Observation(f"scd2_close_{uuid.uuid4().hex[:8]}")
-    updated = updated.observe(
-        obs, F.sum(F.col("__close").cast("long")).alias("n_closed")
-    ).drop("first_change_ts", "__close")
-    close = table.stage_write(updated, touched, base=base)  # fills obs
-    return int(obs.get["n_closed"] or 0), close
 
 
 def _pad_columns(df: DataFrame, reference: DataFrame) -> DataFrame:

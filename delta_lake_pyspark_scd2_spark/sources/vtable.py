@@ -30,10 +30,11 @@ retries when the winner changed no table metadata (or only widened the
 schema under ``merge_schema``), touched none of the partitions this
 operation read, and this operation assigned no identity values;
 anything else is a hard conflict raised to the caller. A blind append
-reads no partition, so it only ever conflicts on metadata. Writes can
-also be staged (``stage_write``) and committed together as one version
-(``commit_staged``), which is how the SCD2 merge lands its close and
-its inserts atomically.
+reads no partition, so it only ever conflicts on metadata. A write can
+also be staged (``stage_write``) and committed later (``commit_staged``).
+One staged write may carry several frames — each prepared on its own,
+all written by one Spark job — which is how the SCD2 merge lands its
+close and its inserts as one write and one version.
 
 Log layout (Delta's checkpoint + incremental-log split): each commit
 ``v{N}.json`` is a DELTA record — ``add`` (new file entries) and
@@ -69,8 +70,9 @@ import shutil
 import time
 import uuid
 import warnings
-from collections.abc import Callable, Iterable, Sequence
+from collections.abc import Iterable, Sequence
 from dataclasses import asdict, dataclass, field
+from functools import reduce
 
 from pyspark.sql import DataFrame, Observation, SparkSession, Window
 from pyspark.sql import functions as F
@@ -128,13 +130,11 @@ class ManifestEntry:
 class StagedWrite:
     """A write staged against snapshot ``base`` but not committed yet:
     its data files and DV sidecars are on disk, unreferenced, and these
-    fields are what its commit must record. Each public writer commits
-    one; :meth:`VersionedParquetTable.commit_staged` lands several
-    staged against the same snapshot as ONE version (the SCD2 merge's
-    close and insert). ``schema`` None keeps the base's, ``reads`` is
-    :meth:`VersionedParquetTable._transact`'s, ``metrics`` the writer's
-    default commit metrics, and ``compact`` marks appended files whose
-    partitions auto-compaction checks once they are committed."""
+    fields are what its commit must record. Each writer stages one and
+    lands it as one version with
+    :meth:`VersionedParquetTable.commit_staged`. ``schema`` None keeps
+    the base's, ``reads`` is :meth:`VersionedParquetTable._transact`'s,
+    and ``metrics`` the writer's default commit metrics."""
 
     base: dict
     adds: list[ManifestEntry] = field(default_factory=list)
@@ -144,7 +144,16 @@ class StagedWrite:
     assigned_identity: bool = False
     cdc_files: list[str] | None = None
     metrics: dict = field(default_factory=dict)
-    compact: bool = False
+
+    def require_within(self, partitions: "list[dict[str, str]]") -> None:
+        """Raise before the commit when a staged file lies outside
+        ``partitions`` — the scope a partition rewrite read."""
+        allowed = {_pkey(p) for p in partitions}
+        stray = [e.path for e in self.adds if _pkey(e.partition) not in allowed]
+        if stray:
+            raise ValueError(
+                f"staged data lands outside the declared partitions: {stray[:3]}"
+            )
 
 
 def _stat_key(v):
@@ -521,7 +530,7 @@ class VersionedParquetTable:
         schema: T.StructType,
         partition_cols: list[str],
         operation: str,
-        metrics: "dict | Callable[[], dict] | None" = None,
+        metrics: dict | None = None,
         constraints: dict[str, str] | None = None,
         txns: dict[str, int] | None = None,
         column_mapping: dict[str, str] | None = None,
@@ -573,7 +582,7 @@ class VersionedParquetTable:
             # feed must skip.
             "cdc_files": cdc_files or [],
             "data_change": data_change,
-            "metrics": (metrics() if callable(metrics) else metrics) or {},
+            "metrics": metrics or {},
             "operation_metrics": self._operation_metrics(
                 prev, add, remove, started
             ),
@@ -834,25 +843,29 @@ class VersionedParquetTable:
     def _stage(
         self,
         m: dict,
-        df: DataFrame,
+        *frames: DataFrame,
         schema: T.StructType | None = None,
-        *,
-        partitions: "list[dict[str, str]] | None" = None,
         layout_ready: bool = False,
     ) -> tuple[list[ManifestEntry], T.StructType, bool]:
         """Every writer's staging sequence against base snapshot ``m``:
-        derive absent generated columns, assign absent identity values,
-        align to ``schema`` (None keeps the frame's own columns, for
-        writers that replace the schema), then write and CHECK-validate
-        the files. ``partitions`` bounds where rows may land. Returns
-        the uncommitted entries, the schema they were written under,
-        and whether identity values were assigned."""
+        each frame gets its absent generated columns derived and its
+        absent identity values assigned, and is aligned to ``schema``
+        (None keeps the frame's own columns, for writers that replace
+        the schema); the union of the frames is then written and
+        CHECK-validated by one Spark job. Returns the uncommitted
+        entries, the schema they were written under, and whether
+        identity values were assigned."""
         ident = m.get("identity_cols") or {}
-        assigned = any(c not in df.columns for c in ident)
         gen = m.get("generated_cols") or {}
-        df = self._apply_identity(self._apply_generated(df, gen), ident)
-        if schema is not None:
-            df = _align(df, schema)
+        lacking = [df for df in frames if any(c not in df.columns for c in ident)]
+        if len(lacking) > 1:
+            # every frame would number its rows from the same watermark
+            raise ValueError("identity values go to at most one frame per write")
+        prepared = []
+        for df in frames:
+            df = self._apply_identity(self._apply_generated(df, gen), ident)
+            prepared.append(df if schema is None else _align(df, schema))
+        df = reduce(DataFrame.unionByName, prepared)
         files = self._write_files(
             df,
             list(m.get("partition_cols") or []),
@@ -861,15 +874,7 @@ class VersionedParquetTable:
             mapping=m.get("column_mapping") or {},
             layout_ready=layout_ready,
         )
-        if partitions is not None:
-            allowed = {_pkey(p) for p in partitions}
-            stray = [e for e in files if _pkey(e.partition) not in allowed]
-            if stray:
-                raise ValueError(
-                    "replacement data writes outside the declared "
-                    f"partitions: {stray[:3]}"
-                )
-        return files, df.schema, assigned
+        return files, df.schema, bool(lacking)
 
     @staticmethod
     def _widen(m: dict, schema: T.StructType) -> T.StructType:
@@ -896,31 +901,35 @@ class VersionedParquetTable:
 
     def stage_write(
         self,
-        df: DataFrame,
+        *frames: DataFrame,
         partitions: "list[dict[str, str]] | None" = None,
-        *,
         base: dict | None = None,
         merge_schema: bool = False,
         layout_ready: bool = False,
     ) -> StagedWrite:
-        """Stage ``df``'s files against snapshot ``base`` (the latest by
-        default) without committing them: an :meth:`append`, or with
-        ``partitions`` a :meth:`replace_partitions` of exactly those."""
+        """Stage ``frames`` as ONE write against snapshot ``base`` (the
+        latest by default) without committing it. Each frame is prepared
+        on its own (generated columns, identity values only where the
+        frame lacks the column, alignment to the table schema — widened
+        by every frame's columns under ``merge_schema``), and their
+        union is written by one Spark job. ``partitions`` names the
+        partitions whose base files the write replaces, and that it
+        therefore read; rows landing elsewhere are appended. Without
+        it the write is a blind append."""
         m = base or self._current()
-        schema = self._widen(m, df.schema) if merge_schema else _schema(m)
+        schema = _schema(m)
+        if merge_schema:
+            for df in frames:
+                schema = self._widen({**m, "schema": schema.json()}, df.schema)
         files, _, assigned = self._stage(
-            m, df, schema, partitions=partitions, layout_ready=layout_ready
+            m, *frames, schema=schema, layout_ready=layout_ready
         )
-        if partitions is None:
-            return StagedWrite(
-                m, files, schema=schema, assigned_identity=assigned, compact=True
-            )
-        touched = {_pkey(p) for p in partitions}
+        replaced = {_pkey(p) for p in partitions or ()}
         return StagedWrite(
             m,
             files,
-            [f["path"] for f in m["files"] if _pkey(f["partition"]) in touched],
-            reads=list(partitions),
+            [f["path"] for f in m["files"] if _pkey(f["partition"]) in replaced],
+            reads=list(partitions or ()),
             schema=schema,
             assigned_identity=assigned,
         )
@@ -939,7 +948,7 @@ class VersionedParquetTable:
         merge_schema: bool = False,
         assigned_identity: bool = False,
         txn: tuple[str, int] | None = None,
-        metrics: "dict | Callable[[], dict] | None" = None,
+        metrics: dict | None = None,
         cdc_files: list[str] | None = None,
         data_change: bool = True,
     ) -> int:
@@ -1021,50 +1030,36 @@ class VersionedParquetTable:
     def commit_staged(
         self,
         operation: str,
-        *staged: StagedWrite,
+        staged: StagedWrite,
+        *,
         merge_schema: bool = False,
         txn: tuple[str, int] | None = None,
-        metrics: "dict | Callable[[], dict] | None" = None,
+        metrics: dict | None = None,
         data_change: bool = True,
     ) -> int:
-        """Commit writes staged against one snapshot as ONE version,
-        through :meth:`_transact`: their adds, removes and reads
-        combined, the schema widened to all of theirs. When one of them
-        carries change records, the others' are derived from their
-        files, so the commit's change feed stays complete. Appended
-        files then go through auto-compaction."""
-        base = staged[0].base
-        if any(s.base["version"] != base["version"] for s in staged):
-            raise ValueError(f"{operation}: writes staged on different snapshots")
-        schema = _schema(base)
-        for s in staged:
-            if s.schema is not None:
-                schema = self._widen({**base, "schema": schema.json()}, s.schema)
-        cdc = None
-        if any(s.cdc_files is not None for s in staged):
-            cdc = [
-                p
-                for s in staged
-                for p in (
-                    s.cdc_files if s.cdc_files is not None else self._write_changes(s)
-                )
-            ]
-        reads = [p for s in staged if s.reads is not None for p in s.reads]
+        """Commit one staged write as one version through
+        :meth:`_transact`. The files it adds outside the partitions it
+        rewrites then go through auto-compaction."""
         v = self._transact(
-            base,
+            staged.base,
             operation,
-            adds=[e for s in staged for e in s.adds],
-            removes=[p for s in staged for p in s.removes],
-            reads=None if any(s.reads is None for s in staged) else reads,
-            meta={"schema": schema.json()},
+            adds=staged.adds,
+            removes=staged.removes,
+            reads=staged.reads,
+            meta=None if staged.schema is None else {"schema": staged.schema.json()},
             merge_schema=merge_schema,
-            assigned_identity=any(s.assigned_identity for s in staged),
+            assigned_identity=staged.assigned_identity,
             txn=txn,
-            metrics=metrics or {k: x for s in staged for k, x in s.metrics.items()},
-            cdc_files=cdc,
+            metrics=metrics or staged.metrics,
+            cdc_files=staged.cdc_files,
             data_change=data_change,
         )
-        appended = [e for s in staged if s.compact for e in s.adds]
+        live = {f["path"]: f["partition"] for f in staged.base["files"]}
+        rewritten = {_pkey(live[p]) for p in staged.removes}
+        appended = [
+            e for e in staged.adds
+            if e.path not in live and _pkey(e.partition) not in rewritten
+        ]
         if appended:
             self._maybe_auto_compact(appended)
         return v
@@ -1079,12 +1074,11 @@ class VersionedParquetTable:
         path: str,
         *,
         partition_cols: list[str] | None = None,
-        metrics: "dict | Callable[[], dict] | None" = None,
+        metrics: dict | None = None,
         txn: tuple[str, int] | None = None,
         generated_cols: dict[str, str] | None = None,
         identity_cols: dict[str, dict] | None = None,
         properties: dict[str, str] | None = None,
-        layout_ready: bool = False,
     ) -> "VersionedParquetTable":
         """Initial partitioned write (reference S7,
         ``src/header_etl.py:159-162``). ``txn`` records a writer
@@ -1114,7 +1108,7 @@ class VersionedParquetTable:
             },
             "properties": {k: str(v) for k, v in (properties or {}).items()},
         }
-        files, schema, _ = t._stage(base, df, layout_ready=layout_ready)
+        files, schema, _ = t._stage(base, df)
         t._transact(
             base, "CREATE", adds=files, meta={"schema": schema.json()},
             txn=txn, metrics=metrics,
@@ -1150,8 +1144,9 @@ class VersionedParquetTable:
     def properties(self, version: int | None = None) -> dict[str, str]:
         """Table properties (``TBLPROPERTIES`` analogue), carried per
         commit. Recognized keys: ``autoCompact`` (``"true"`` → every
-        append, also one committed inside a larger commit such as the
-        SCD2 merge, checks its touched partitions and compacts any that
+        commit that adds files outside the partitions it rewrites — an
+        append, the SCD2 merge's inserts on days it closes nothing in —
+        checks those partitions and compacts any that
         crossed ``autoCompact.minFiles``, default 16 — Delta's
         auto-compaction trade: small steady write tax for never letting
         streaming appends accumulate a small-file problem)."""
@@ -1391,10 +1386,8 @@ class VersionedParquetTable:
         )
 
     def append(self, df: DataFrame, *, merge_schema: bool = False,
-               metrics: "dict | Callable[[], dict] | None" = None,
-               txn: tuple[str, int] | None = None,
-               layout_ready: bool = False,
-               cdc_files: list[str] | None = None) -> int:
+               metrics: dict | None = None,
+               txn: tuple[str, int] | None = None) -> int:
         """Append-only commit (reference S9 ``mergeSchema`` append,
         ``schema_evolution_step1.py:144``): adds files, never rewrites.
         With ``merge_schema`` the committed schema is the union; old
@@ -1412,27 +1405,20 @@ class VersionedParquetTable:
         append is a no-op returning the current version — so a
         micro-batch replayed after a sink crash lands exactly once.
         The check re-runs after every commit-race rebase, closing the
-        window where two replicas replay the same batch concurrently.
-
-        ``layout_ready=True`` skips the pre-write rebalance on the
-        partition columns — for writers that pre-arranged the physical
-        layout themselves (e.g. range-sorted batches for data
-        skipping) and accept the small-file trade."""
+        window where two replicas replay the same batch concurrently."""
         m = self._current()
         if _txn_applied(m, txn):
             return m["version"]
-        s = self.stage_write(
-            df, base=m, merge_schema=merge_schema, layout_ready=layout_ready
-        )
-        s.cdc_files = cdc_files
+        s = self.stage_write(df, base=m, merge_schema=merge_schema)
         return self.commit_staged(
             "APPEND", s, merge_schema=merge_schema, txn=txn, metrics=metrics
         )
 
     def _maybe_auto_compact(self, new_files: list[ManifestEntry]) -> None:
         """Post-append auto-compaction (Delta ``autoCompact``): when
-        the table property is set, check only THIS append's touched
-        partitions (cost ∝ the write, never the table) and compact any
+        the table property is set, check only the partitions THIS
+        commit appended files to (cost ∝ the write, never the table;
+        :meth:`commit_staged` passes them) and compact any
         whose live file count crossed ``autoCompact.minFiles``.
         Best-effort: a commit-race loss skips the compaction — the
         next crossing append retries it."""
@@ -1469,8 +1455,7 @@ class VersionedParquetTable:
                 stacklevel=2,
             )
 
-    def overwrite(self, df: DataFrame, *, metrics: "dict | Callable[[], dict] | None" = None,
-                  layout_ready: bool = False,
+    def overwrite(self, df: DataFrame, *, metrics: dict | None = None,
                   txn: tuple[str, int] | None = None) -> int:
         """Full-replace commit. ``txn=(app_id, txn_version)`` makes it
         idempotent exactly like :meth:`append`'s — a replayed
@@ -1479,7 +1464,7 @@ class VersionedParquetTable:
         m = self._current()
         if _txn_applied(m, txn):
             return m["version"]
-        files, schema, assigned = self._stage(m, df, layout_ready=layout_ready)
+        files, schema, assigned = self._stage(m, df)
         return self._transact(
             m, "OVERWRITE", adds=files, removes=[f["path"] for f in m["files"]],
             reads=None, meta={"schema": schema.json()},
@@ -1493,7 +1478,7 @@ class VersionedParquetTable:
         *,
         operation: str = "REPLACE_PARTITIONS",
         merge_schema: bool = False,
-        metrics: "dict | Callable[[], dict] | None" = None,
+        metrics: dict | None = None,
         layout_ready: bool = False,
         cdc_files: list[str] | None = None,
         txn: tuple[str, int] | None = None,
@@ -1518,9 +1503,10 @@ class VersionedParquetTable:
         if _txn_applied(m, txn):
             return m["version"]
         s = self.stage_write(
-            df, partitions, base=m, merge_schema=merge_schema,
+            df, partitions=partitions, base=m, merge_schema=merge_schema,
             layout_ready=layout_ready,
         )
+        s.require_within(partitions)
         s.cdc_files = cdc_files
         return self.commit_staged(
             operation,
@@ -1541,7 +1527,7 @@ class VersionedParquetTable:
         deletes: DataFrame | None = None,
         sync_deletes: bool = False,
         operation: str = "UPSERT",
-        metrics: "dict | Callable[[], dict] | None" = None,
+        metrics: dict | None = None,
         txn: tuple[str, int] | None = None,
     ) -> dict:
         """Generic MERGE (reference S8's ``whenMatchedUpdate`` +
@@ -1688,7 +1674,7 @@ class VersionedParquetTable:
         self,
         filters: "Sequence[tuple]",
         *,
-        metrics: "dict | Callable[[], dict] | None" = None,
+        metrics: dict | None = None,
     ) -> dict:
         """``DELETE FROM`` (Delta deletion analogue) at FILE
         granularity: data skipping (``files_for``) first narrows the
@@ -1722,7 +1708,7 @@ class VersionedParquetTable:
         # (possibly z-ordered) row order and tight stats; a rebalance
         # here would merge-shuffle them and widen every rewritten
         # file's min/max
-        files, _, _ = self._stage(m, survivors, _schema(m), layout_ready=True)
+        files, _, _ = self._stage(m, survivors, schema=_schema(m), layout_ready=True)
         out = {
             "n_deleted": n_before - sum(e.rows or 0 for e in files),
             "n_files_rewritten": len(candidates),
@@ -2084,7 +2070,7 @@ class VersionedParquetTable:
         filters: "Sequence[tuple]",
         set_exprs: dict[str, str],
         *,
-        metrics: "dict | Callable[[], dict] | None" = None,
+        metrics: dict | None = None,
     ) -> dict:
         """``UPDATE ... SET ... WHERE`` (Delta UPDATE analogue) at FILE
         granularity: data skipping narrows the rewrite to files whose
@@ -2139,7 +2125,7 @@ class VersionedParquetTable:
             )
         # bounded extra scan: candidate files only, column-pruned
         n_updated = matched.count()
-        files, _, _ = self._stage(m, merged, _schema(m), layout_ready=True)
+        files, _, _ = self._stage(m, merged, schema=_schema(m), layout_ready=True)
         out = {
             "n_updated": n_updated,
             "n_files_rewritten": len(candidates),
@@ -2207,7 +2193,7 @@ class VersionedParquetTable:
                     )
         new_files, assigned = [], False
         if adds is not None:
-            new_files, _, assigned = self._stage(m, adds, _schema(m))
+            new_files, _, assigned = self._stage(m, adds, schema=_schema(m))
         s = StagedWrite(
             m,
             dv_files + new_files,

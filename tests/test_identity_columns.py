@@ -55,6 +55,25 @@ def test_identity_negative_step(spark, tmp_path):
     assert t.identity_columns()["rid"]["next"] < min(rids) + 1
 
 
+def test_two_frame_write_assigns_ids_only_to_the_frame_lacking_them(spark, tmp_path):
+    """One staged write of two frames keeps the ids the rewritten frame
+    carries and assigns fresh ones only to the frame without the column;
+    two frames without it would draw from one watermark, so they raise."""
+    t = VersionedParquetTable.create(
+        spark, _rows(spark, 0, 4), str(tmp_path / "t"),
+        identity_cols={"rid": {"start": 1, "step": 1}},
+    )
+    before = {r["k"]: r["rid"] for r in t.read().collect()}
+    s = t.stage_write(t.read(), _rows(spark, 10, 3), partitions=[{}])
+    assert s.assigned_identity
+    t.commit_staged("MERGE", s)
+    got = {r["k"]: r["rid"] for r in t.read().collect()}
+    assert {k: got[k] for k in before} == before
+    assert len(got) == 7 and len(set(got.values())) == 7
+    with pytest.raises(ValueError, match="at most one frame"):
+        t.stage_write(_rows(spark, 20, 2), _rows(spark, 30, 2))
+
+
 def test_identity_survives_upsert_and_compact(spark, tmp_path):
     t = VersionedParquetTable.create(
         spark, _rows(spark, 0, 4), str(tmp_path / "t"),

@@ -123,23 +123,21 @@ def _raise_in_commit(monkeypatch):
     monkeypatch.setattr(VersionedParquetTable, "_commit", failing)
 
 
-def _raise_in_phase_b(monkeypatch):
+def _raise_planning_inserts(monkeypatch):
     def failing(spec, events):
-        raise RuntimeError("injected: Phase B compute failed")
+        raise RuntimeError("injected: planning the insert frame failed")
 
     monkeypatch.setattr(scd2_pipeline, "_prepare_versions", failing)
 
 
-def _raise_in_phase_a_write(monkeypatch):
-    orig = VersionedParquetTable._stage
+def _raise_in_stage_write(monkeypatch):
+    orig = VersionedParquetTable.stage_write
 
-    def failing(self, *a, **kw):
-        files = orig(self, *a, **kw)
-        if kw.get("partitions") is not None:  # Phase A's partition rewrite
-            raise RuntimeError("injected: Phase A write failed")
-        return files
+    def failing(self, *frames, **kw):
+        orig(self, *frames, **kw)  # the files are written, uncommitted
+        raise RuntimeError("injected: the merge's write failed")
 
-    monkeypatch.setattr(VersionedParquetTable, "_stage", failing)
+    monkeypatch.setattr(VersionedParquetTable, "stage_write", failing)
 
 
 def test_failed_merges_leave_previous_version(spark, hist, monkeypatch):
@@ -154,7 +152,7 @@ def test_failed_merges_leave_previous_version(spark, hist, monkeypatch):
     v_before, rows_before = t.latest_version(), _rows(t.read())
     batch = spark.createDataFrame(B2, SCHEMA)
     spark.catalog.clearCache()
-    for inject in (_raise_in_commit, _raise_in_phase_b, _raise_in_phase_a_write):
+    for inject in (_raise_in_commit, _raise_planning_inserts, _raise_in_stage_write):
         with monkeypatch.context() as mp:
             inject(mp)
             with pytest.raises((OSError, RuntimeError), match="injected"):
@@ -162,13 +160,41 @@ def test_failed_merges_leave_previous_version(spark, hist, monkeypatch):
         assert t.latest_version() == v_before, inject.__name__
         assert _rows(t.read()) == rows_before, inject.__name__
         assert _cache_empty(spark), f"{inject.__name__} left persisted frames"
-    monkeypatch.setattr(scd2_pipeline, "_observed_long", lambda obs, key: None)
+    observed_long = scd2_pipeline._observed_long
+    monkeypatch.setattr(
+        scd2_pipeline,
+        "_observed_long",
+        lambda obs, key: None if key == "n_stale" else observed_long(obs, key),
+    )
     m = run_scd2_batch(spark, SPEC, batch, t.path, batch_id="b2")
     assert m["n_observation_fallbacks"] == 1
     assert m["n_stale"] == hist["metrics"][0]["n_stale"]
     assert _rows(t.read()) == _rows(hist["t"].read(1))
     assert t.generated_columns() == hist["t"].generated_columns() != {}
     assert t.properties() == hist["seed"].properties() == {"owner": "etl"}
+
+
+def test_close_and_insert_in_one_partition_write_one_file(spark, hist, monkeypatch):
+    """A merge whose close and insert land on one day stages ONE write
+    of both frames, and leaves one new file in that day."""
+    t = hist["seed"].clone(str(hist["root"] / "one_write"))
+    before = {f["path"] for f in t._current()["files"]}
+    calls = []
+    orig = VersionedParquetTable.stage_write
+
+    def counting(self, *frames, **kw):
+        calls.append(len(frames))
+        return orig(self, *frames, **kw)
+
+    monkeypatch.setattr(VersionedParquetTable, "stage_write", counting)
+    # A's current row is on 2023-01-21, and so is its change
+    batch = spark.createDataFrame([_ev("A", "2023-01-21T12:00:00", "a2")], SCHEMA)
+    m = run_scd2_batch(spark, SPEC, batch, t.path, batch_id="b9")
+    assert (m["n_closed"], m["n_inserted"]) == (1, 1)
+    assert calls == [2]
+    new = [f for f in t._current()["files"] if f["path"] not in before]
+    day = {"valid_from_year": "2023", "valid_from_month": "1", "valid_from_day": "21"}
+    assert [(f["partition"], f["rows"]) for f in new] == [(day, 2)]
 
 
 def test_merges_stream_from_a_change_feed_table(spark, hist):

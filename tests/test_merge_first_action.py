@@ -32,8 +32,8 @@ B1 = [
     _ev(None, "2023-02-05T11:00:00", "n1"),  # NULL key
 ]
 # NULL keys and a duplicate (key, ts) the tiebreak drops; the new key D
-# opens a day no file holds yet, so Phase B's idempotency anti-join
-# reads an empty partition set
+# opens a day no file holds yet, and so does A's change: the merge's
+# idempotency anti-join reads an empty partition set
 B2 = [
     _ev("A", "2023-01-22T09:00:00", "a2"),  # closes A
     _ev("A", "2023-01-22T09:00:00", "a0"),  # duplicate, loses the tiebreak
@@ -146,26 +146,32 @@ def test_dq_tallies_ride_the_first_action(spark, seed, clean):
 
 
 def test_dq_observation_fallback(spark, seed, clean, monkeypatch):
-    """Without the DQ Observation's row the merge aggregates the warm
-    cache instead: same counts and table, one fallback counted."""
-    orig = scd2_pipeline._observed_row
-
-    def no_dq_row(obs):
-        return None if obs._name.startswith("scd2_dq") else orig(obs)
-
-    monkeypatch.setattr(scd2_pipeline, "_observed_row", no_dq_row)
+    """Without any Observation row the merge and the create count
+    explicitly instead: same counts and table, each fallback counted —
+    on the merge DQ, stale, close and insert; on the create the insert
+    and DQ."""
+    monkeypatch.setattr(scd2_pipeline, "_observed_row", lambda obs: None)
     t = seed["t"].clone(str(seed["root"] / "fallback"))
     m = run_scd2_batch(spark, SPEC, spark.createDataFrame(B2, SCHEMA), t.path, batch_id="b2")
     assert _dq_part(m) == _dq_part(clean["m"])
-    assert m["n_observation_fallbacks"] == 1
+    for k in ("n_closed", "n_inserted", "n_stale"):
+        assert m[k] == clean["m"][k], k
+    assert m["n_observation_fallbacks"] == 4
     assert _rows(t.read()) == _rows(clean["t"].read())
+    c = run_scd2_batch(
+        spark, SPEC, spark.createDataFrame(B1, SCHEMA),
+        str(seed["root"] / "fallback_create"), batch_id="b1",
+    )
+    assert _dq_part(c) == _dq_part(seed["create"])
+    assert c["n_inserted"] == seed["create"]["n_inserted"] == 2
+    assert c["n_observation_fallbacks"] == 2
 
 
 def test_quarantine_lands_before_phase_a(spark, seed, monkeypatch):
     def failing(*a, **kw):
-        raise RuntimeError("injected: Phase A failed")
+        raise RuntimeError("injected: the merge's write failed")
 
-    monkeypatch.setattr(scd2_pipeline, "_phase_a", failing)
+    monkeypatch.setattr(VersionedParquetTable, "stage_write", failing)
     t = seed["t"].clone(str(seed["root"] / "quarantine"))
     q = str(seed["root"] / "q")
     with pytest.raises(RuntimeError, match="injected"):

@@ -364,16 +364,21 @@ def test_merge_schema_evolution_new_tracked_column(spark, table_path):
 
 
 def test_vtable_compaction(spark, table_path):
-    # several merges leave multiple files per partition; COMPACT
-    # coalesces them without changing data, and time travel still works
-    for i, t in enumerate(["2023-01-10T00:00:00", "2023-01-10T06:00:00",
-                           "2023-01-10T12:00:00"]):
-        run_scd2_batch(
-            spark, SPEC,
-            spark.createDataFrame([ev("A", t, f"S{i}")], BATCH_SCHEMA),
-            table_path, batch_id=f"b{i}",
-        )
+    # appends leave multiple files per partition; COMPACT coalesces
+    # them without changing data, and time travel still works
+    run_scd2_batch(
+        spark, SPEC,
+        spark.createDataFrame([ev("A", "2023-01-10T00:00:00", "S0")], BATCH_SCHEMA),
+        table_path, batch_id="b0",
+    )
     t = VersionedParquetTable(spark, table_path)
+    for i in (1, 2):
+        t.append(
+            t.read(0).withColumns({
+                "contract": F.lit(f"K{i}"),
+                "valid_from": F.col("valid_from") + F.expr(f"INTERVAL {6 * i} HOURS"),
+            })
+        )
     before = sorted(t.read().collect(), key=lambda r: r.valid_from)
     v_before = t.latest_version()
     n_files_before = len(t._current()["files"])
@@ -856,75 +861,41 @@ def test_spec_rejects_unknown_enum_values():
             dataclasses.replace(SPEC, **{field: bad})
 
 
-def test_overlapped_phase_b_matches_serialized_merge(spark, tmp_path):
-    """The Phase-B compute runs CONCURRENTLY with Phase A's write
-    (round-10 optimization, guide §2.6), with its idempotency anti-join
-    planned against the pinned pre-A manifest version. Equivalence rests
-    on Phase A never changing a (key, valid_from) pair; prove it by
-    running the same two batches through the overlapped merge and a
-    serialized one (synchronous executor monkeypatch — same code path,
-    overlap removed) and comparing full version histories row-for-row.
-    The batch mixes the racy ingredients: closes and inserts in the SAME
-    partition, an idempotent replayed event, and a brand-new key."""
-    import concurrent.futures as cf
-
-    class _SyncFuture:
-        def __init__(self, v):
-            self._v = v
-
-        def result(self):
-            return self._v
-
-    class _SyncPool:
-        def __init__(self, *a, **k):
-            pass
-
-        def submit(self, fn, *a, **k):
-            return _SyncFuture(fn(*a, **k))
-
-        def shutdown(self, wait=True):
-            pass
-
+def test_same_day_close_replay_and_new_key_history(spark, table_path):
+    """One merge holding every case that shares a partition: closes and
+    inserts for A and B on the day of their current rows, a replay of
+    A's first event (stale, no row), and a new key C on that day. The
+    exact version history, and one new file for the day."""
     b1 = [
         ev("A", "2023-01-21T10:00:00", "Draft"),
         ev("B", "2023-01-21T11:00:00", "Draft"),
     ]
-    # same-day close+insert for A and B (same partition), replay of A's
-    # b1 event (idempotency conflict), new key C
     b2 = [
         ev("A", "2023-01-21T10:00:00", "Draft"),  # replay: no-op
         ev("A", "2023-01-21T15:00:00", "Active"),
         ev("B", "2023-01-21T16:00:00", "Closed"),
         ev("C", "2023-01-21T17:00:00", "Draft"),
     ]
-    metrics = {}
-    for variant, pool_cls in [("overlap", None), ("serial", _SyncPool)]:
-        real = cf.ThreadPoolExecutor
-        if pool_cls is not None:
-            cf.ThreadPoolExecutor = pool_cls
-        try:
-            path = str(tmp_path / f"t_{variant}")
-            run_scd2_batch(
-                spark, SPEC, spark.createDataFrame(b1, BATCH_SCHEMA), path,
-                batch_id="b1",
-            )
-            metrics[variant] = run_scd2_batch(
-                spark, SPEC, spark.createDataFrame(b2, BATCH_SCHEMA), path,
-                batch_id="b2",
-            )
-        finally:
-            cf.ThreadPoolExecutor = real
-        cols = ["contract", "valid_from", "valid_to", "is_current",
-                "status", "agent", "closed_by_batch"]
-        hist = sorted(
-            tuple(str(r[c]) for c in cols)
-            for r in _read(spark, path).select(*cols).collect()
-        )
-        if variant == "overlap":
-            overlap_hist = hist
-        else:
-            assert hist == overlap_hist
-    for k in ("n_closed", "n_inserted", "n_stale"):
-        assert metrics["overlap"][k] == metrics["serial"][k], k
-    assert metrics["overlap"]["n_closed"] == 2
-    assert metrics["overlap"]["n_inserted"] == 3
+    run_scd2_batch(
+        spark, SPEC, spark.createDataFrame(b1, BATCH_SCHEMA), table_path,
+        batch_id="b1",
+    )
+    m = run_scd2_batch(
+        spark, SPEC, spark.createDataFrame(b2, BATCH_SCHEMA), table_path,
+        batch_id="b2",
+    )
+    assert (m["n_closed"], m["n_inserted"], m["n_stale"]) == (2, 3, 1)
+    cols = ["contract", "valid_from", "valid_to", "is_current",
+            "status", "agent", "closed_by_batch"]
+    t = VersionedParquetTable(spark, table_path)
+    got = sorted(tuple(str(r[c]) for c in cols) for r in t.read().collect())
+    end = "9999-12-31 00:00:00"
+    assert got == [
+        ("A", "2023-01-21 10:00:00", "2023-01-21 15:00:00", "False", "Draft", "None", "b2"),
+        ("A", "2023-01-21 15:00:00", end, "True", "Active", "None", "None"),
+        ("B", "2023-01-21 11:00:00", "2023-01-21 16:00:00", "False", "Draft", "None", "b2"),
+        ("B", "2023-01-21 16:00:00", end, "True", "Closed", "None", "None"),
+        ("C", "2023-01-21 17:00:00", end, "True", "Draft", "None", "None"),
+    ]
+    assert len(t._current()["files"]) == 1
+    assert scd2.check_invariants(t.read(), "contract").count() == 0

@@ -2,9 +2,9 @@
 growing SCD2 table.
 
 The scale claim under test: per-batch merge cost is ∝ batch size, NOT
-table size (Phase A rewrites only the partitions holding changed keys'
-current rows; Phase B appends; the idempotency anti-join prunes to
-key/valid_from columns). A growing table with flat per-batch times is
+table size (the close rewrites only the partitions holding changed
+keys' current rows; inserts on other days append; the idempotency
+anti-join prunes to key/valid_from columns). A growing table with flat per-batch times is
 the evidence.
 
 Usage::
