@@ -68,6 +68,11 @@ from delta_lake_pyspark_scd2_spark.operators import scd2, validation
 from delta_lake_pyspark_scd2_spark.sources.vtable import VersionedParquetTable
 
 
+#: The version table's day layout, derived from ``valid_from``
+#: (``partition_cols_from``'s default prefix).
+PARTITION_COLS = ("valid_from_year", "valid_from_month", "valid_from_day")
+
+
 @dataclass(frozen=True)
 class SCD2Spec:
     """Declarative table spec (reference hardcodes all of this at
@@ -77,8 +82,6 @@ class SCD2Spec:
     event_ts_col: str
     tracked_cols: Sequence[str]
     tiebreak_cols: Sequence[str] = ()
-    max_ts: str = scd2.MAX_TS
-    partition_prefix: str = "valid_from"
     dedup_mode: str = "keep_latest"  # or "drop_all" (items W3 semantics)
     #: "drop" counts events at/before a key's current valid_from as
     #: stale (reference behavior, made explicit); "rebuild" merges them
@@ -107,11 +110,6 @@ class SCD2Spec:
                 f"late_policy must be 'drop' or 'rebuild', "
                 f"got {self.late_policy!r}"
             )
-
-    @property
-    def partition_cols(self) -> list[str]:
-        p = self.partition_prefix
-        return [f"{p}_year", f"{p}_month", f"{p}_day"]
 
     @property
     def effective_tracked(self) -> list[str]:
@@ -271,9 +269,8 @@ def _prepare_versions(spec: SCD2Spec, staged_events: DataFrame) -> DataFrame:
         spec.key_cols,
         spec.event_ts_col,
         tiebreak_cols=spec.tiebreak_cols,
-        max_ts=spec.max_ts,
     ).withColumn("closed_by_batch", F.lit(None).cast("string"))
-    return partition_cols_from(versions, "valid_from", spec.partition_prefix)
+    return partition_cols_from(versions, "valid_from")
 
 
 def run_scd2_batch(
@@ -365,7 +362,7 @@ def run_scd2_batch(
                 spark,
                 versions,
                 table_path,
-                partition_cols=spec.partition_cols,
+                partition_cols=list(PARTITION_COLS),
                 metrics={"batch_id": batch_id},
                 # partition layout as GENERATED columns: the table
                 # itself re-derives/validates y/m/d from valid_from on
@@ -373,9 +370,9 @@ def run_scd2_batch(
                 # version row in the wrong partition (the merge's
                 # partition pruning relies on it)
                 generated_cols={
-                    f"{spec.partition_prefix}_year": "year(valid_from)",
-                    f"{spec.partition_prefix}_month": "month(valid_from)",
-                    f"{spec.partition_prefix}_day": "dayofmonth(valid_from)",
+                    "valid_from_year": "year(valid_from)",
+                    "valid_from_month": "month(valid_from)",
+                    "valid_from_day": "dayofmonth(valid_from)",
                 },
             )
             # On the CREATE path quarantine lands after the create
@@ -443,22 +440,21 @@ def _merge_batch(
     """
     keys = list(spec.key_cols)
     ts = spec.event_ts_col
-    pcols = spec.partition_cols
+    pcols = list(PARTITION_COLS)
     # the snapshot every read below pins and the commit rebases from
     base = table._current()
 
     # The merge derives its partition scope *arithmetically* from event
-    # and valid_from timestamps under THIS spec's partition scheme; that
-    # is only sound if the table on disk was partitioned the same way.
-    # Fail fast on a spec/manifest mismatch instead of silently pruning
-    # to the wrong partitions and missing closes.
-    if list(base["partition_cols"]) != list(pcols):
+    # and valid_from timestamps under the day layout; that is only sound
+    # if the table on disk was partitioned the same way. Fail fast on a
+    # mismatch instead of silently pruning to the wrong partitions and
+    # missing closes.
+    if list(base["partition_cols"]) != pcols:
         raise ValueError(
-            f"SCD2 spec partition_cols {list(pcols)} do not "
-            f"match table manifest partition_cols {base['partition_cols']} "
-            f"at {table.path}; merge's partition pruning would be unsound "
-            "under a different scheme. Recreate the table or align "
-            "spec.partition_prefix."
+            f"SCD2 merge needs partition_cols {pcols}, but the table "
+            f"manifest at {table.path} has {base['partition_cols']}; the "
+            "merge's partition pruning would be unsound under a different "
+            "scheme. Recreate the table with run_scd2_batch."
         )
 
     tracked = spec.effective_tracked
@@ -589,9 +585,8 @@ def _merge_batch(
         close_parts = partition_cols_from(
             changed.filter(F.col("first_change_ts") > F.col("__cur_from")),
             "__cur_from",
-            spec.partition_prefix,
         ).select(*pcols, F.lit(True).alias("__close"))
-        ins_parts = partition_cols_from(usable, ts, spec.partition_prefix).select(
+        ins_parts = partition_cols_from(usable, ts).select(
             *pcols, F.lit(False).alias("__close")
         )
         scope = close_parts.unionByName(ins_parts).distinct().collect()
@@ -816,12 +811,12 @@ def _rebuild_late(
     )
     if n_changed or n_new != n_old:
         parts = (
-            hist.select(*spec.partition_cols)
-            .unionByName(rebuilt.select(*spec.partition_cols))
+            hist.select(*PARTITION_COLS)
+            .unionByName(rebuilt.select(*PARTITION_COLS))
             .distinct()
             .collect()
         )
-        touched = [{k: str(r[k]) for k in spec.partition_cols} for r in parts]
+        touched = [{k: str(r[k]) for k in PARTITION_COLS} for r in parts]
         others = table.read_partitions(touched).join(
             affected, on=keys, how="left_anti"
         )

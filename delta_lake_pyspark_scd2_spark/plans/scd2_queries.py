@@ -320,11 +320,11 @@ def s8_generic_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     SELECT o_orderkey, 'R' AS o_orderstatus, CAST(0 AS DOUBLE) AS price
     FROM base WHERE o_orderkey % 21 = 0
     """,
-    doc="Deletion-vector row delete + replace (Delta DV analogue): "
-    "remove_rows marks matched rows dead by (file, position) via a "
-    "parquet sidecar — zero data files rewritten — and appends the "
-    "replacement rows in the same commit; the read applies the DV as "
-    "a broadcast anti-join. Oracle is the equivalent filter+union.",
+    doc="Row delete + replace in one copy-on-write commit (the "
+    "update Delta DVs would serve): upsert drops every key % 7 == 0 "
+    "and writes the replacement rows of the keys % 21 == 0 in the "
+    "same commit, rewriting only the partitions that held or receive "
+    "them. Oracle is the equivalent filter+union.",
 )
 def dv_delete_update(spark: SparkSession, sf_dir: str) -> DataFrame:
     from delta_lake_pyspark_scd2_spark.plans.scratch import scratch_path
@@ -339,14 +339,17 @@ def dv_delete_update(spark: SparkSession, sf_dir: str) -> DataFrame:
     t = VersionedParquetTable.create(
         spark, base, path, partition_cols=["o_orderstatus"]
     )
-    pos = t.read_partitions(t.partitions_of(), with_position=True)
-    dead = pos.filter(F.col("o_orderkey") % 7 == 0).select("__file", "__pos")
     repl = base.filter(F.col("o_orderkey") % 21 == 0).select(
         "o_orderkey",
         F.lit("R").alias("o_orderstatus"),
         F.lit(0.0).alias("price"),
     )
-    t.remove_rows(dead, adds=repl, operation="UPDATE_DV")
+    t.upsert(
+        repl,
+        ["o_orderkey"],
+        deletes=base.filter(F.col("o_orderkey") % 7 == 0).select("o_orderkey"),
+        operation="UPDATE",
+    )
     return t.read().select("o_orderkey", "o_orderstatus", "price")
 
 

@@ -138,15 +138,13 @@ def _stage_files(
         fs.delete(stage, recursive=True)
 
 
-def _metadata_action(
-    df: DataFrame, partition_cols: list[str], table_id: str
-) -> dict:
+def _metadata_action(schema_json: str, partition_cols: list[str]) -> dict:
     return {
         "metaData": {
-            "id": table_id,
+            "id": str(uuid.uuid4()),
             "format": {"provider": "parquet", "options": {}},
             # Delta schemaString IS Spark's StructType JSON
-            "schemaString": df.schema.json(),
+            "schemaString": schema_json,
             "partitionColumns": list(partition_cols),
             "configuration": {},
             "createdTime": 0,
@@ -193,7 +191,7 @@ def write_delta(
             [
                 _commit_info("WRITE"),
                 _PROTOCOL,
-                _metadata_action(frame, pc, str(uuid.uuid4())),
+                _metadata_action(frame.schema.json(), pc),
                 *adds,
             ],
         )
@@ -224,71 +222,36 @@ def write_delta(
     raise ValueError(f"unknown mode {mode!r}")
 
 
-def export_vtable_as_delta(table, dest: str, *, preserve_dvs: bool = False) -> int:
+def export_vtable_as_delta(table, dest: str) -> int:
     """Export a ``VersionedParquetTable``'s CURRENT snapshot as a new
-    Delta table.
+    Delta table at protocol (1,2).
 
-    Default mode re-writes through a read (deletion vectors are
-    materialized by the scan, so the export is exact and stays on the
-    widest-compatibility protocol (1,2)).
-
-    ``preserve_dvs=True`` is the **zero-rewrite** path: data files are
-    byte-copied as-is under their existing relative layout (vtable uses
-    hive-style partition dirs, which IS Delta's layout), and each
-    vtable DV reference is re-serialized as a native Delta deletion
-    vector (z85-uuid ``storageType "u"`` RoaringBitmapArray sidecar,
-    ``delta_dv.write_dv_file``). The commit declares protocol (3,7)
-    with the ``deletionVectors`` reader/writer feature exactly when a
-    DV exists — otherwise it stays (1,2). O(data bytes copied +
-    deleted rows); no Spark job at all.
+    Data files are byte-copied under their relative layout (vtable's
+    hive-style partition dirs ARE Delta's layout): O(data bytes
+    copied), no Spark job. A column-mapped table's files hold physical
+    column names that differ from its logical schema, so it is instead
+    re-written through a read with :func:`write_delta`.
     """
-    if not preserve_dvs:
-        df = table.read()
-        return write_delta(
-            df, dest, partition_cols=table.partition_columns(), mode="create"
-        )
-
-    import tempfile as _tf
-
-    from delta_lake_pyspark_scd2_spark.sources import delta_dv
-    from delta_lake_pyspark_scd2_spark.sources.vtable import DATA_DIR, DV_DIR
-
     m = table._current()
     if m.get("column_mapping"):
-        raise ValueError(
-            "preserve_dvs export cannot carry a column-mapped table "
-            "(physical file schemas differ from the logical schema); "
-            "use the default materializing export"
+        return write_delta(
+            table.read(), dest, partition_cols=list(m["partition_cols"]),
+            mode="create",
         )
+
+    from delta_lake_pyspark_scd2_spark.sources.vtable import DATA_DIR
+
     fs = fsio.get_fs(dest, table.spark)
     if fs.exists(fsio.join(dest, LOG_DIR)):
         raise FileExistsError(f"Delta table already exists at {dest}")
     src_fs = fsio.get_fs(table.path, table.spark)
-
-    # dead positions per file, read once from the parquet sidecars
-    dv_positions: dict[str, list[int]] = {}
-    dv_paths = sorted(
-        {p for f in m["files"] for p in ((f.get("dv") or {}).get("paths", []))}
-    )
-    if dv_paths:
-        from pyspark.sql import functions as F
-
-        dead = table.spark.read.parquet(
-            *[os.path.join(table.path, DV_DIR, p) for p in dv_paths]
-        )
-        for r in (
-            dead.groupBy("__file")
-            .agg(F.collect_set("__pos").alias("ps"))
-            .collect()
-        ):
-            dv_positions[r["__file"]] = sorted(int(p) for p in r["ps"])
 
     def _copy(src: str, dst: str) -> None:
         lp = fsio.local_path(src)
         if lp is not None:
             fs.put_file(lp, dst)
             return
-        with _tf.NamedTemporaryFile(delete=False) as tmp:
+        with tempfile.NamedTemporaryFile(delete=False) as tmp:
             tmp.write(src_fs.read_bytes(src))
             name = tmp.name
         try:
@@ -297,75 +260,34 @@ def export_vtable_as_delta(table, dest: str, *, preserve_dvs: bool = False) -> i
             os.unlink(name)
 
     adds: list[dict] = []
-    has_dv = False
     for f in m["files"]:
         rel = f["path"]
-        src = fsio.join(table.path, DATA_DIR, rel)
         dst = fsio.join(dest, rel)
-        if "/" in rel:
-            fs.mkdirs(fsio.join(dest, rel.rsplit("/", 1)[0]))
-        else:
-            fs.mkdirs(dest)
-        _copy(src, dst)
-        add = {
-            "path": quote(rel, safe="/=-"),
-            "partitionValues": dict(f.get("partition") or {}),
-            "size": fs.size(dst),
-            "modificationTime": fs.mtime_ms(dst),
-            "dataChange": True,
-            "stats": json.dumps({"numRecords": int(f.get("rows") or 0)}),
-        }
-        positions = dv_positions.get(rel) if f.get("dv") else None
-        if positions:
-            has_dv = True
-            u = uuid.uuid4()
-            with _tf.NamedTemporaryFile(delete=False) as tmp:
-                name = tmp.name
-            desc = delta_dv.write_dv_file(positions, name)
-            try:
-                fs.put_file(name, fsio.join(dest, f"deletion_vector_{u}.bin"))
-            finally:
-                os.unlink(name)
-            add["deletionVector"] = {
-                "storageType": "u",
-                "pathOrInlineDv": delta_dv.z85_encode(u.bytes),
-                "offset": desc["offset"],
-                "sizeInBytes": desc["sizeInBytes"],
-                "cardinality": desc["cardinality"],
+        fs.mkdirs(fsio.join(dest, rel.rsplit("/", 1)[0]) if "/" in rel else dest)
+        _copy(fsio.join(table.path, DATA_DIR, rel), dst)
+        adds.append(
+            {
+                "add": {
+                    "path": quote(rel, safe="/=-"),
+                    "partitionValues": dict(f.get("partition") or {}),
+                    "size": fs.size(dst),
+                    "modificationTime": fs.mtime_ms(dst),
+                    "dataChange": True,
+                    "stats": json.dumps({"numRecords": int(f.get("rows") or 0)}),
+                }
             }
-        adds.append({"add": add})
-
-    schema_json = m["schema"]
-    protocol = (
-        {
-            "protocol": {
-                "minReaderVersion": 3,
-                "minWriterVersion": 7,
-                "readerFeatures": ["deletionVectors"],
-                "writerFeatures": ["deletionVectors"],
-            }
-        }
-        if has_dv
-        else _PROTOCOL
+        )
+    _write_commit(
+        fs,
+        dest,
+        0,
+        [
+            _commit_info("EXPORT_VTABLE"),
+            _PROTOCOL,
+            _metadata_action(m["schema"], m["partition_cols"]),
+            *adds,
+        ],
     )
-    actions = [
-        _commit_info("EXPORT_VTABLE"),
-        protocol,
-        {
-            "metaData": {
-                "id": str(uuid.uuid4()),
-                "format": {"provider": "parquet", "options": {}},
-                "schemaString": schema_json,
-                "partitionColumns": list(m["partition_cols"]),
-                "configuration": (
-                    {"delta.enableDeletionVectors": "true"} if has_dv else {}
-                ),
-                "createdTime": 0,
-            }
-        },
-        *adds,
-    ]
-    _write_commit(fs, dest, 0, actions)
     return 0
 
 

@@ -17,7 +17,13 @@ environment, so this module supplies the same *capabilities* natively:
     whole of every partition it touches, not the rows it changes: the
     SCD2 merge's close copies about 40 rows per row closed on the
     benchmark's daily merge, where the current rows of a batch's
-    changed keys spread over most day partitions.
+    changed keys spread over most day partitions;
+  * copy-on-write is the only way a row leaves the table (``delete``,
+    ``update``, ``upsert``, ``replace_partitions``, ``compact``), so a
+    committed file entry never changes under its path. A table whose
+    records carry a deletion vector (``dv``, written by earlier
+    releases of this module) is refused on read, not served with the
+    rows the vector marks deleted.
 
 Concurrency: manifest commit is an atomic ``os.link`` (hard-link fails
 EEXIST atomically — unlike ``os.rename``, which silently overwrites),
@@ -74,15 +80,14 @@ from collections.abc import Iterable, Sequence
 from dataclasses import asdict, dataclass, field
 from functools import reduce
 
-from pyspark.sql import DataFrame, Observation, SparkSession, Window
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 MANIFEST_DIR = "_manifest"
 DATA_DIR = "data"
-DV_DIR = "_dv"
 #: Change-data files (Delta ``_change_data`` analogue): row-level
-#: change records written AT COMMIT TIME by upsert/delete/remove_rows
+#: change records written AT COMMIT TIME by upsert/delete/update
 #: when the table property ``enableChangeDataFeed`` is true. The CDC
 #: streaming source reads these parquet files directly on executors —
 #: no driver-side row materialization, no re-deriving changes by join.
@@ -111,25 +116,18 @@ class ManifestEntry:
     statistics — row count plus per-column min/max/null-count read from
     the parquet footer at commit time (the Delta ``add``-action ``stats``
     analogue). ``stats`` maps column name → ``{"min", "max", "nulls"}``;
-    columns without usable footer stats are simply absent.
-
-    ``dv`` (Delta deletion-vector analogue): ``{"paths": [...],
-    "count": n}`` — parquet sidecars under ``_dv/`` listing dead
-    ``(__file, __pos)`` row positions of THIS file; readers anti-join
-    them out. None for files with no dead rows (the common case, which
-    keeps the plain fast scan path)."""
+    columns without usable footer stats are simply absent."""
 
     path: str
     partition: dict[str, str]
     stats: dict | None = None
     rows: int | None = None
-    dv: dict | None = None
 
 
 @dataclass
 class StagedWrite:
     """A write staged against snapshot ``base`` but not committed yet:
-    its data files and DV sidecars are on disk, unreferenced, and these
+    its data files are on disk, unreferenced, and these
     fields are what its commit must record. Each writer stages one and
     lands it as one version with
     :meth:`VersionedParquetTable.commit_staged`. ``schema`` None keeps
@@ -226,12 +224,13 @@ def _file_stats(path: str) -> tuple[dict, int]:
     return out, md.num_rows
 
 
-def _same_record(a: dict, b: dict) -> bool:
-    """Record equality for the commit diff, tolerant of absent keys in
-    old-format records (no ``dv`` field == ``dv`` None)."""
-    return all(
-        a.get(k) == b.get(k) for k in ("partition", "stats", "rows", "dv")
-    )
+def _older_than(path: str, cutoff: float) -> bool:
+    """``path``'s mtime is before ``cutoff``; False once a concurrent
+    writer has removed it."""
+    try:
+        return os.path.getmtime(path) < cutoff
+    except FileNotFoundError:
+        return False
 
 
 def _drop_crc_sidecar(full_path: str) -> None:
@@ -251,9 +250,7 @@ def _drop_crc_sidecar(full_path: str) -> None:
 def _entry(f: dict) -> ManifestEntry:
     """Rehydrate a manifest file record, carrying stats forward so
     unrewritten files never lose their skipping metadata."""
-    return ManifestEntry(
-        f["path"], f["partition"], f.get("stats"), f.get("rows"), f.get("dv")
-    )
+    return ManifestEntry(f["path"], f["partition"], f.get("stats"), f.get("rows"))
 
 
 def _pkey(partition: dict[str, str]) -> tuple:
@@ -303,13 +300,13 @@ def _conflict(
         return "conflicts with a concurrent schema/constraint/metadata change"
     if scope is not None and not scope:
         return None  # blind: reads no partition
-    before = {f["path"]: f for f in old["files"]}
-    after = {f["path"]: f for f in new["files"]}
+    before = {f["path"] for f in old["files"]}
+    after = {f["path"] for f in new["files"]}
     hit = {
         _pkey(f["partition"])
-        for p, f in after.items()
-        if p not in before or not _same_record(f, before[p])
-    } | {_pkey(f["partition"]) for p, f in before.items() if p not in after}
+        for f in old["files"] + new["files"]
+        if (f["path"] in before) != (f["path"] in after)
+    }
     if scope is not None:
         hit &= scope
     if hit:
@@ -429,7 +426,8 @@ class VersionedParquetTable:
                     "partition": json.loads(r["partition"]),
                     "stats": json.loads(r["stats"]) if r["stats"] else None,
                     "rows": r["rows"],
-                    "dv": json.loads(r["dv"]) if r["dv"] else None,
+                    # kept only so that _snapshot_files can refuse it
+                    **({"dv": r["dv"]} if r.get("dv") else {}),
                 }
                 for r in rows
             ]
@@ -472,12 +470,18 @@ class VersionedParquetTable:
             v -= 1
         files = list(base)
         for m in reversed(chain):
-            adds = m.get("add", [])
-            # an ``add`` for an already-live path is a metadata
-            # replacement (deletion-vector update) — drop the old record
-            gone = set(m.get("remove", [])) | {a["path"] for a in adds}
+            gone = set(m.get("remove", []))
             files = [f for f in files if f["path"] not in gone]
-            files.extend(adds)
+            files.extend(m.get("add", []))
+        dv = next((f["path"] for f in files if f.get("dv")), None)
+        if dv is not None:
+            raise ValueError(
+                f"table {self.path} v{version}: file {dv} carries a deletion "
+                "vector, which this engine no longer applies; reading it "
+                "would return the rows the vector marks deleted. Rewrite "
+                "the table's files (compact) with a release that still "
+                "applies deletion vectors."
+            )
         if len(self._snap_cache) >= self._snap_cache_max:
             self._snap_cache.pop(next(iter(self._snap_cache)))
         self._snap_cache[version] = files
@@ -487,11 +491,7 @@ class VersionedParquetTable:
         """Commit metadata with the file set MATERIALIZED under
         ``files`` — the shape every reader of this class consumes;
         the on-disk delta/checkpoint split stays internal."""
-        m = self._load_commit(version)
-        if "files" not in m:
-            m = dict(m)
-            m["files"] = self._snapshot_files(version)
-        return m
+        return {**self._load_commit(version), "files": self._snapshot_files(version)}
 
     def _write_checkpoint(self, version: int, files: list[dict]) -> None:
         """Full-snapshot checkpoint — derived data, written OUTSIDE the
@@ -514,10 +514,6 @@ class VersionedParquetTable:
                 "rows": pa.array(
                     [f.get("rows") for f in files], type=pa.int64()
                 ),
-                "dv": [
-                    json.dumps(f["dv"]) if f.get("dv") is not None else None
-                    for f in files
-                ],
             }
         )
         pq.write_table(table, tmp, compression="zstd")
@@ -548,23 +544,16 @@ class VersionedParquetTable:
         already holds ``version``."""
         os.makedirs(os.path.join(self.path, MANIFEST_DIR), exist_ok=True)
         # Delta record: diff the desired file set against the parent
-        # snapshot — commit size ∝ files this operation touched. Data
-        # files are written-once, but an entry's METADATA can change
-        # (deletion vectors), so the diff compares full records: a
-        # same-path entry whose dv changed is re-emitted in ``add`` and
-        # replayed as a replacement.
+        # snapshot — commit size ∝ files this operation touched. A file
+        # entry never changes under its path, so the diff is of paths.
         prev = {f["path"]: f for f in self._snapshot_files(version - 1)} if version > 0 else {}
         new_records = [
             {"path": e.path, "partition": e.partition, "stats": e.stats,
-             "rows": e.rows, "dv": e.dv}
+             "rows": e.rows}
             for e in files
         ]
         new_paths = {r["path"] for r in new_records}
-        add = [
-            r
-            for r in new_records
-            if r["path"] not in prev or not _same_record(r, prev[r["path"]])
-        ]
+        add = [r for r in new_records if r["path"] not in prev]
         remove = sorted(p for p in prev if p not in new_paths)
         manifest = {
             "version": version,
@@ -622,33 +611,17 @@ class VersionedParquetTable:
         started: float | None,
     ) -> dict:
         """What a commit did, stamped on its record apart from the
-        caller's ``metrics``: files and rows added and removed (newly
-        dead deletion-vector rows count as removed), bytes of the data
-        files and DV sidecars it adds, and its wall time in ms."""
-
-        def dead(f: dict) -> int:
-            return (f.get("dv") or {}).get("count", 0)
-
-        def sidecars(fs) -> set[str]:
-            return {p for f in fs for p in (f.get("dv") or {}).get("paths", [])}
-
-        new = [a for a in add if a["path"] not in prev]
-        n_bytes = sum(
-            os.path.getsize(os.path.join(self.path, DATA_DIR, a["path"]))
-            for a in new
-        )
-        for p in sidecars(add) - sidecars(prev.values()):
-            for root, _dirs, fnames in os.walk(os.path.join(self.path, DV_DIR, p)):
-                n_bytes += sum(os.path.getsize(os.path.join(root, f)) for f in fnames)
+        caller's ``metrics``: files and rows added and removed, bytes
+        of the data files it adds, and its wall time in ms."""
         return {
-            "files_added": len(new),
+            "files_added": len(add),
             "files_removed": len(remove),
-            "rows_added": sum(a.get("rows") or 0 for a in new),
-            "rows_removed": sum(
-                (prev[p].get("rows") or 0) - dead(prev[p]) for p in remove
-            )
-            + sum(dead(a) - dead(prev[a["path"]]) for a in add if a["path"] in prev),
-            "bytes_added": n_bytes,
+            "rows_added": sum(a.get("rows") or 0 for a in add),
+            "rows_removed": sum(prev[p].get("rows") or 0 for p in remove),
+            "bytes_added": sum(
+                os.path.getsize(os.path.join(self.path, DATA_DIR, a["path"]))
+                for a in add
+            ),
             "commit_ms": round(1000 * (time.time() - (started or time.time())), 1),
         }
 
@@ -683,47 +656,6 @@ class VersionedParquetTable:
             for f in sorted(os.listdir(out_dir))
             if f.endswith(".parquet")
         ]
-
-    def _write_changes(
-        self, s: StagedWrite, dead: DataFrame | None = None
-    ) -> list[str]:
-        """Stage the change records of a write that brings none of its
-        own: its new files as inserts, its removed files and the
-        ``dead`` positions of the files it deletion-vectors as deletes
-        (what the change feed would otherwise read off the file diff)."""
-        m = s.base
-        schema = s.schema or _schema(m)
-        mapping = m.get("column_mapping")
-        have = {f["path"] for f in m["files"]}
-        gone = set(s.removes)
-        parts = []
-        if dead is not None:
-            hit = {e.path for e in s.adds if e.path in have}
-            parts.append(
-                self._scan(
-                    [f for f in m["files"] if f["path"] in hit], schema,
-                    with_position=True, mapping=mapping,
-                )
-                .join(dead.select("__file", "__pos"), on=["__file", "__pos"],
-                      how="left_semi")
-                .drop("__file", "__pos")
-                .withColumn("_change_type", F.lit("delete"))
-            )
-        for files, kind in (
-            ([asdict(e) for e in s.adds if e.path not in have], "insert"),
-            ([f for f in m["files"] if f["path"] in gone], "delete"),
-        ):
-            if files:
-                parts.append(
-                    self._scan(files, schema, mapping=mapping)
-                    .withColumn("_change_type", F.lit(kind))
-                )
-        if not parts:
-            return []
-        change = parts[0]
-        for p in parts[1:]:
-            change = change.unionByName(p)
-        return self._write_cdc(change)
 
     # -- data-file staging ---------------------------------------------------
 
@@ -955,8 +887,7 @@ class VersionedParquetTable:
         """Commit one operation: the only path to a new table version.
 
         ``base`` is the snapshot the operation read; ``removes`` are the
-        paths it drops and ``adds`` the entries it adds (new files and
-        deletion-vector updates of live ones alike). ``reads`` names
+        paths it drops and ``adds`` the new file entries. ``reads`` names
         the partitions its result depends on: ``()`` for a blind
         append, ``None`` for a whole-table read. ``meta`` overrides
         table metadata (``META_KEYS``) on top of the base's.
@@ -971,7 +902,7 @@ class VersionedParquetTable:
         the head version is returned."""
         started = time.time()
         over = dict(meta or {})
-        gone = set(removes) | {e.path for e in adds}
+        gone = set(removes)
         scope = None if reads is None else {_pkey(p) for p in reads}
         head = base
         for _attempt in range(10):
@@ -1700,9 +1631,7 @@ class VersionedParquetTable:
                 .withColumn("_change_type", F.lit("delete"))
             )
         n_before = sum(
-            (f.get("rows") or 0) - (f.get("dv") or {}).get("count", 0)
-            for f in m["files"]
-            if f["path"] in candidates
+            f.get("rows") or 0 for f in m["files"] if f["path"] in candidates
         )
         # narrow per-file rewrite: survivors keep their source files'
         # (possibly z-ordered) row order and tight stats; a rebalance
@@ -1751,45 +1680,23 @@ class VersionedParquetTable:
         the same data-skipping bound as ``delete``, times retained
         versions that share those files (shared files rewrite ONCE).
 
-        Files covered by a deletion vector in ANY retained version
-        (written by :meth:`remove_rows`) are handled, not refused: the
-        rewrite shifts row positions, so a DV'd file's replacement is
-        forced to a single file written in ascending old-position
-        order, and every sidecar referencing it is rewritten in place
-        — purged positions dropped, surviving dead positions remapped
-        to the new (file, position) — so each retained version still
-        sees exactly its own dead rows, minus the purged ones.
-
         Limitations (explicit, never silent): manifest
         rewrites are per-file atomic (``os.replace``) but not
         transactional across versions; a crash mid-purge leaves a
         partially-scrubbed history and RE-RUNNING the same purge
         completes it (idempotent: already-scrubbed files no longer
-        match). DV sidecar replacement is write-new/remove-old/rename —
-        a crash in that window leaves the sidecar directory missing and
-        scans of versions referencing it FAIL LOUD (no resurrection) —
-        re-create from a backup or vacuum the referencing versions.
-        Rows already delivered to external consumers cannot be
+        match). Rows already delivered to external consumers cannot be
         recalled — that is inherent to erasure, not this mechanism.
         """
         # candidate files across ALL retained versions (dedup by path;
-        # a file shared by many versions is rewritten once), plus the
-        # union of DV sidecars referencing each candidate — collected
+        # a file shared by many versions is rewritten once) — collected
         # BEFORE any mutation
         candidates: dict[str, dict] = {}
-        dv_sidecars_by_path: dict[str, set[str]] = {}
         for v in self.versions():
             admitted = {e.path for e in self.files_for(filters, v)}
             for f in self._snapshot_files(v):
-                if f["path"] not in admitted:
-                    continue
-                candidates.setdefault(f["path"], f)
-                if f.get("dv"):
-                    # dv is per-VERSION metadata on a shared path —
-                    # remember every sidecar that may need a remap
-                    dv_sidecars_by_path.setdefault(f["path"], set()).update(
-                        f["dv"]["paths"]
-                    )
+                if f["path"] in admitted:
+                    candidates.setdefault(f["path"], f)
 
         head_out = self.delete(filters)
         head = self.latest_version()
@@ -1803,17 +1710,9 @@ class VersionedParquetTable:
 
         # rewrite candidate data files (None = every row matched)
         replacement: dict[str, list[dict] | None] = {}
-        # DV'd files that got survivors: old path -> (new path, lazy
-        # old-position -> new-position map), consumed by the sidecar
-        # remap below
-        remap: dict[str, tuple[str, DataFrame]] = {}
         n_purged = 0
         for p, f in sorted(candidates.items()):
-            has_dv = p in dv_sidecars_by_path
-            df = self._scan(
-                [dict(f, dv=None)], schema,
-                with_position=has_dv, mapping=mapping,
-            )
+            df = self._scan([f], schema, mapping=mapping)
             survivors = df.filter(~hit)
             n_kept = survivors.count()
             n_before = f.get("rows")
@@ -1828,109 +1727,11 @@ class VersionedParquetTable:
             if n_kept == 0:
                 replacement[p] = None
                 continue
-            if has_dv:
-                # The rewrite shifts row positions, so (a) the
-                # replacement must be exactly ONE file written in
-                # ascending old-position order, and (b) an old->new
-                # position map feeds the sidecar remap. Dead-but-
-                # unpurged rows STAY in the file — the per-version
-                # sidecars keep marking them dead.
-                # global-window-ok: scope is the rows of ONE data file,
-                # the same bound as the single-task rewrite below.
-                w = Window.orderBy("__pos").rowsBetween(
-                    Window.unboundedPreceding, Window.currentRow
-                )
-                pos_map = (
-                    df.select("__pos", (~hit).alias("__keep"))
-                    .withColumn(
-                        "__new_pos",
-                        F.sum(F.col("__keep").cast("long")).over(w) - 1,
-                    )
-                    .filter("__keep")
-                    .select("__pos", "__new_pos")
-                    .persist()
-                )
-                ordered = (
-                    survivors.repartition(1)
-                    .sortWithinPartitions("__pos")
-                    .drop("__file", "__pos")
-                )
-                new_entries = self._write_files(
-                    _align(ordered, schema), pc, mapping=mapping,
-                    layout_ready=True,
-                )
-                if len(new_entries) != 1:  # pragma: no cover - invariant
-                    raise AssertionError(
-                        f"purge: DV'd file {p} rewrote to "
-                        f"{len(new_entries)} files; position remap "
-                        "requires exactly one"
-                    )
-                remap[p] = (new_entries[0].path, pos_map)
-            else:
-                new_entries = self._write_files(
-                    _align(survivors, schema), pc, mapping=mapping,
-                    layout_ready=True,
-                )
-            replacement[p] = [
-                {
-                    "path": e.path,
-                    "partition": e.partition,
-                    "stats": e.stats,
-                    "rows": e.rows,
-                }
-                for e in new_entries
-            ]
-
-        # Remap and rewrite the DV sidecars of rewritten files IN PLACE
-        # (paths are referenced by every retained manifest and must not
-        # move): purged positions drop out, surviving dead positions
-        # move to the replacement (file, position). Done BEFORE the old
-        # data files are removed — the lazy position maps read them.
-        n_surv: dict[tuple[str, str], int] = {}
-        dv_touched = sorted(p for p in dv_sidecars_by_path if p in replacement)
-        if dv_touched:
-            remap_all: DataFrame | None = None
-            for p in sorted(remap):
-                newp, pm = remap[p]
-                fr = pm.select(
-                    F.lit(p).alias("__file"),
-                    F.col("__pos"),
-                    F.lit(newp).alias("__new_file"),
-                    F.col("__new_pos"),
-                )
-                remap_all = (
-                    fr if remap_all is None else remap_all.unionByName(fr)
-                )
-            affected = sorted(
-                {s for p in dv_touched for s in dv_sidecars_by_path[p]}
+            new_entries = self._write_files(
+                _align(survivors, schema), pc, mapping=mapping,
+                layout_ready=True,
             )
-            for s in affected:
-                s_dir = os.path.join(self.path, DV_DIR, s)
-                s_df = self.spark.read.parquet(s_dir).select("__file", "__pos")
-                out_df = s_df.filter(~F.col("__file").isin(dv_touched))
-                if remap_all is not None:
-                    moved = s_df.join(remap_all, ["__file", "__pos"], "inner")
-                    # per-(sidecar, old path) surviving dead-row counts:
-                    # bounded by files touched, feeds the per-version
-                    # dv.count update in the manifest substitution
-                    for r in (
-                        moved.groupBy("__file")
-                        .agg(F.count(F.lit(1)).alias("n"))
-                        .collect()
-                    ):
-                        n_surv[(s, r["__file"])] = int(r["n"])
-                    out_df = out_df.unionByName(
-                        moved.select(
-                            F.col("__new_file").alias("__file"),
-                            F.col("__new_pos").alias("__pos"),
-                        )
-                    )
-                tmp = s_dir + f".tmp-{uuid.uuid4().hex}"
-                out_df.coalesce(1).write.parquet(tmp)
-                shutil.rmtree(s_dir)
-                os.rename(tmp, s_dir)
-            for p in remap:
-                remap[p][1].unpersist()
+            replacement[p] = [asdict(e) for e in new_entries]
 
         def _map_files(entries: list[dict]) -> tuple[list[dict], bool]:
             out_, changed = [], False
@@ -1939,26 +1740,7 @@ class VersionedParquetTable:
                     out_.append(f)
                     continue
                 changed = True
-                repl = replacement[f["path"]] or []
-                if not f.get("dv"):
-                    out_.extend(dict(r) for r in repl)
-                    continue
-                # this version marks some of the file's rows dead: the
-                # replacement is one position-stable file (forced above)
-                # whose sidecars were remapped in place — carry the same
-                # sidecar list with the post-purge dead count, dropping
-                # the reference entirely when every dead row was purged
-                count = sum(
-                    n_surv.get((s, f["path"]), 0) for s in f["dv"]["paths"]
-                )
-                for r in repl:
-                    rec = dict(r)
-                    if count > 0:
-                        rec["dv"] = {
-                            "paths": list(f["dv"]["paths"]),
-                            "count": count,
-                        }
-                    out_.append(rec)
+                out_.extend(dict(r) for r in replacement[f["path"]] or [])
             return out_, changed
 
         if replacement:
@@ -2137,74 +1919,6 @@ class VersionedParquetTable:
         )
         return out
 
-    def remove_rows(
-        self,
-        dead: DataFrame,
-        *,
-        adds: DataFrame | None = None,
-        operation: str = "DELETE_ROWS",
-    ) -> int:
-        """Row-level delete WITHOUT rewriting files (Delta deletion
-        vectors): ``dead`` is a ``(__file, __pos)`` frame — typically
-        built from a ``with_position=True`` read — whose rows are
-        marked dead via a parquet DV sidecar; affected manifest entries
-        get (or extend) their ``dv`` reference, every file's bytes stay
-        untouched. ``adds`` appends new files in the same commit — the
-        UPDATE pattern (DV the old row + append its replacement), which
-        is what turns an O(partition) copy-on-write rewrite into an
-        O(changed rows) commit. At 100 TB closing 10 keys in a 1 TB
-        day-partition writes 10 rows + a KB-sized sidecar, not the day.
-
-        Read cost until compaction: scans of DV'd files pay a broadcast
-        anti-join against the (tiny) sidecars; ``compact()`` rewrites
-        DV'd partitions and clears them.
-        """
-        m = self._current()
-        # per-file dead counts: bounded by files touched, driver-safe
-        per_file = {
-            r["__file"]: r["n"]
-            for r in dead.groupBy("__file")
-            .agg(F.count(F.lit(1)).alias("n"))
-            .collect()
-        }
-        unknown = sorted(set(per_file) - {f["path"] for f in m["files"]})
-        if unknown:
-            raise ValueError(
-                f"deletion vector targets unknown files: {unknown[:3]}"
-            )
-        dv_files = []
-        if per_file:
-            # distributed sidecar write (no driver collect of positions)
-            dv_rel = f"dv-{uuid.uuid4().hex}"
-            dead.select("__file", "__pos").write.parquet(
-                os.path.join(self.path, DV_DIR, dv_rel)
-            )
-            for f in m["files"]:
-                if f["path"] in per_file:
-                    old = f.get("dv") or {"paths": [], "count": 0}
-                    dv_files.append(
-                        ManifestEntry(
-                            f["path"], f["partition"], f.get("stats"), f.get("rows"),
-                            {
-                                "paths": old["paths"] + [dv_rel],
-                                "count": old["count"] + per_file[f["path"]],
-                            },
-                        )
-                    )
-        new_files, assigned = [], False
-        if adds is not None:
-            new_files, _, assigned = self._stage(m, adds, schema=_schema(m))
-        s = StagedWrite(
-            m,
-            dv_files + new_files,
-            reads=[e.partition for e in dv_files],
-            assigned_identity=assigned,
-            metrics={"n_deleted": sum(per_file.values()), "n_files_dv": len(per_file)},
-        )
-        if self._cdc_enabled(m) and (per_file or adds is not None):
-            s.cdc_files = self._write_changes(s, dead if per_file else None)
-        return self.commit_staged(operation, s)
-
     def compact(
         self,
         *,
@@ -2307,21 +2021,12 @@ class VersionedParquetTable:
             else None
         )
         per_part: dict[tuple, int] = {}
-        dv_parts: set[tuple] = set()
         for f in m["files"]:
             k = tuple(sorted(f["partition"].items()))
             if scope is not None and k not in scope:
                 continue
             per_part[k] = per_part.get(k, 0) + 1
-            if f.get("dv"):
-                # deletion-vector'd files always qualify: compaction is
-                # what materializes the deletes and clears the DVs
-                dv_parts.add(k)
-        crowded = [
-            dict(k)
-            for k, n in per_part.items()
-            if n > max_files_per_partition or k in dv_parts
-        ]
+        crowded = [dict(k) for k, n in per_part.items() if n > max_files_per_partition]
         if not crowded:
             return m["version"]
         df = self.read_partitions(crowded)
@@ -2352,11 +2057,6 @@ class VersionedParquetTable:
             f["path"]
             for f in m["files"]
             if not os.path.exists(os.path.join(data_root, f["path"]))
-        ] + [
-            p
-            for f in m["files"]
-            for p in ((f.get("dv") or {}).get("paths", []))
-            if not os.path.exists(os.path.join(self.path, DV_DIR, p))
         ]
         if missing:
             raise FileNotFoundError(
@@ -2439,17 +2139,6 @@ class VersionedParquetTable:
                 os.link(src, dst)
             except OSError:  # cross-device: fall back to a real copy
                 shutil.copy2(src, dst)
-        for p in sorted(
-            {
-                p
-                for f in m["files"]
-                for p in ((f.get("dv") or {}).get("paths", []))
-            }
-        ):
-            shutil.copytree(
-                os.path.join(self.path, DV_DIR, p),
-                os.path.join(dest_path, DV_DIR, p),
-            )
         t = VersionedParquetTable(self.spark, dest_path)
         # v0 takes every piece of table metadata from the source commit
         # (schema, constraints, generated and identity columns, column
@@ -2479,16 +2168,12 @@ class VersionedParquetTable:
             if os.path.exists(p):
                 size += os.path.getsize(p)
         rows = [f.get("rows") for f in m["files"]]
-        n_dead = sum((f.get("dv") or {}).get("count", 0) for f in m["files"])
         return {
             "location": self.path,
             "version": m["version"],
             "num_files": len(m["files"]),
             "size_bytes": size,
-            "num_rows": sum(r for r in rows if r is not None) - n_dead
-            if all(r is not None for r in rows)
-            else None,
-            "num_dead_rows": n_dead,
+            "num_rows": sum(rows) if None not in rows else None,
             "partition_cols": list(m["partition_cols"]),
             "num_versions": len(self.versions()),
             "constraints": dict(m.get("constraints") or {}),
@@ -2499,8 +2184,8 @@ class VersionedParquetTable:
     def fsck(self, *, deep: bool = False) -> dict:
         """Read-only storage-integrity audit (the detection half of
         ``FSCK REPAIR TABLE``): re-resolve every RETAINED version's
-        manifest and verify each referenced data file and
-        deletion-vector sidecar is actually present on storage;
+        manifest and verify each referenced data file is actually
+        present on storage;
         ``deep=True`` additionally re-reads every distinct live data
         file's parquet FOOTER and compares its row count to the
         manifest's recorded ``rows`` — catching truncation or
@@ -2516,9 +2201,8 @@ class VersionedParquetTable:
         """
         checked: set[str] = set()
         missing_files: list[dict] = []
-        missing_dvs: list[dict] = []
         row_mismatches: list[dict] = []
-        n_files = n_dvs = 0
+        n_files = 0
         versions = self.versions()
         for v in versions:
             for f in self._load_manifest(v)["files"]:
@@ -2544,25 +2228,12 @@ class VersionedParquetTable:
                                      "manifest_rows": f["rows"],
                                      "footer_rows": footer_rows}
                                 )
-                for dvp in (f.get("dv") or {}).get("paths", []):
-                    if dvp in checked:
-                        continue
-                    checked.add(dvp)
-                    n_dvs += 1
-                    if not os.path.exists(
-                        os.path.join(self.path, DV_DIR, dvp)
-                    ):
-                        missing_dvs.append(
-                            {"version": v, "path": dvp, "file": rel}
-                        )
         return {
-            "ok": not (missing_files or missing_dvs or row_mismatches),
+            "ok": not (missing_files or row_mismatches),
             "deep": deep,
             "versions_checked": versions,
             "n_data_files": n_files,
-            "n_dv_files": n_dvs,
             "missing_files": missing_files,
-            "missing_dvs": missing_dvs,
             "row_mismatches": row_mismatches,
         }
 
@@ -2588,83 +2259,47 @@ class VersionedParquetTable:
         Orphans younger than ``orphan_grace_s`` are spared so an
         in-flight concurrent write is never swept mid-commit.
 
-        ``dry_run=True`` (Delta ``VACUUM ... DRY RUN``): report what
-        WOULD be deleted — counts and the candidate paths — without
-        touching anything.
+        ``dry_run=True`` (Delta ``VACUUM ... DRY RUN``) returns the
+        deletion plan — counts and the candidate paths — without
+        touching anything; the real run carries out the same plan.
         """
         keep_versions = max(1, keep_versions)
         vs = self.versions()
         kept_vs, dropped_vs = vs[-keep_versions:], vs[:-keep_versions]
-        if dry_run:
-            live = {
-                f["path"]
-                for v in kept_vs
-                for f in self._snapshot_files(v)
-            }
-            doomed = sorted(
-                {
-                    f["path"]
-                    for v in dropped_vs
-                    for f in self._load_manifest(v)["files"]
-                    if f["path"] not in live
-                }
+        live = {f["path"] for v in kept_vs for f in self._snapshot_files(v)}
+        doomed = sorted(
+            {f["path"] for v in dropped_vs for f in self._snapshot_files(v)} - live
+        )
+        referenced = live.union(doomed)
+        # orphans: files no retained manifest references — crashed
+        # writes, lost txn/commit races. A grace window (mtime) spares
+        # what a concurrent writer staged but has not committed yet;
+        # the same holds for staging dirs and change-data dirs.
+        cutoff = time.time() - max(0.0, orphan_grace_s)
+        data_root = os.path.join(self.path, DATA_DIR)
+        orphans = sorted(
+            rel
+            for root, _dirs, fnames in os.walk(data_root)
+            for rel in (
+                os.path.relpath(os.path.join(root, n), data_root) for n in fnames
             )
-            # a faithful preview includes everything the real run
-            # removes: orphans past grace, stale staging dirs, and
-            # DV sidecars no kept version references
-            cutoff = time.time() - max(0.0, orphan_grace_s)
-            data_root = os.path.join(self.path, DATA_DIR)
-            orphans = []
-            if os.path.isdir(data_root):
-                for root, _dirs, fnames in os.walk(data_root):
-                    for fname in fnames:
-                        p = os.path.join(root, fname)
-                        rel = os.path.relpath(p, data_root)
-                        try:
-                            if (
-                                rel not in live
-                                and rel not in doomed
-                                and os.path.getmtime(p) < cutoff
-                            ):
-                                orphans.append(rel)
-                        except FileNotFoundError:
-                            pass  # concurrent writer cleaned it up
-            staging = []
-            for name in os.listdir(self.path):
-                if name.startswith("_staging-"):
-                    try:
-                        if os.path.getmtime(os.path.join(self.path, name)) < cutoff:
-                            staging.append(name)
-                    except FileNotFoundError:
-                        pass
-            live_dv = {
-                p
-                for v in kept_vs
-                for f in self._snapshot_files(v)
-                for p in ((f.get("dv") or {}).get("paths", []))
-            }
-            dv_root = os.path.join(self.path, DV_DIR)
-            dead_dv = []
-            if os.path.isdir(dv_root):
-                for name in sorted(set(os.listdir(dv_root)) - live_dv):
-                    # same grace window as data-file orphans:
-                    # remove_rows writes its sidecar BEFORE its manifest
-                    # commit, so a young unreferenced sidecar may belong
-                    # to an in-flight writer
-                    try:
-                        if os.path.getmtime(os.path.join(dv_root, name)) < cutoff:
-                            dead_dv.append(name)
-                    except FileNotFoundError:
-                        pass
-            dead_cdc = self._dead_cdc_dirs(kept_vs, cutoff)
+            if rel not in referenced
+            and _older_than(os.path.join(data_root, rel), cutoff)
+        )
+        staging = sorted(
+            n for n in os.listdir(self.path)
+            if n.startswith("_staging-")
+            and _older_than(os.path.join(self.path, n), cutoff)
+        )
+        dead_cdc = self._dead_cdc_dirs(kept_vs, cutoff)
+        if dry_run:
             return {
                 "dry_run": True,
                 "n_data_files": len(doomed),
                 "n_versions": len(dropped_vs),
                 "paths": doomed,
                 "n_orphans": len(orphans) + len(staging),
-                "orphan_paths": sorted(orphans) + staging,
-                "n_dv": len(dead_dv),
+                "orphan_paths": orphans + staging,
                 "n_cdc": len(dead_cdc),
                 "oldest_kept_version": kept_vs[0],
             }
@@ -2672,23 +2307,13 @@ class VersionedParquetTable:
         # commits below it are gone: materialize it as a checkpoint
         # first (idempotent if one already exists).
         if dropped_vs:
-            self._write_checkpoint(
-                kept_vs[0], self._snapshot_files(kept_vs[0])
-            )
-        live = {
-            f["path"]
-            for v in kept_vs
-            for f in self._snapshot_files(v)
-        }
-        data_root = os.path.join(self.path, DATA_DIR)
+            self._write_checkpoint(kept_vs[0], self._snapshot_files(kept_vs[0]))
         n_deleted = 0
-        for v in dropped_vs:
-            for f in self._load_manifest(v)["files"]:
-                if f["path"] not in live:
-                    p = os.path.join(data_root, f["path"])
-                    if os.path.exists(p):
-                        os.remove(p)
-                        n_deleted += 1
+        for rel in doomed:
+            p = os.path.join(data_root, rel)
+            if os.path.exists(p):
+                os.remove(p)
+                n_deleted += 1
         for v in dropped_vs:
             os.remove(self._manifest_path(v))
             self._snap_cache.pop(v, None)
@@ -2697,63 +2322,25 @@ class VersionedParquetTable:
                 p = self._ckpt_file(v)
                 if p:
                     os.remove(p)
-        # deletion-vector sidecars referenced only by dropped versions
-        live_dv = {
-            p
-            for v in kept_vs
-            for f in self._snapshot_files(v)
-            for p in ((f.get("dv") or {}).get("paths", []))
-        }
-        dv_root = os.path.join(self.path, DV_DIR)
-        n_dv_deleted = 0
-        cutoff = time.time() - max(0.0, orphan_grace_s)
-        if os.path.isdir(dv_root):
-            for name in os.listdir(dv_root):
-                if name not in live_dv:
-                    # grace window: remove_rows writes its sidecar
-                    # before its manifest commit, so a young
-                    # unreferenced sidecar may be an in-flight write
-                    try:
-                        if os.path.getmtime(os.path.join(dv_root, name)) >= cutoff:
-                            continue
-                    except FileNotFoundError:
-                        continue
-                    shutil.rmtree(os.path.join(dv_root, name))
-                    n_dv_deleted += 1
-        # orphan sweep: files no retained manifest references — crashed
-        # writes, lost txn/commit races. A grace window (mtime) spares
-        # files a concurrent writer staged but hasn't committed yet.
+        # re-stat before removing: a concurrent writer may have touched
+        # or cleaned up a planned path since the listing
         n_orphans = 0
-        if os.path.isdir(data_root):
-            for root, _dirs, fnames in os.walk(data_root):
-                for fname in fnames:
-                    p = os.path.join(root, fname)
-                    rel = os.path.relpath(p, data_root)
-                    # a concurrent writer can remove its staging debris
-                    # between the listing and the stat — skip, don't die
-                    try:
-                        if rel not in live and os.path.getmtime(p) < cutoff:
-                            os.remove(p)
-                            n_orphans += 1
-                    except FileNotFoundError:
-                        pass
-        for name in os.listdir(self.path):
-            if name.startswith("_staging-"):
-                p = os.path.join(self.path, name)
+        for rel in orphans:
+            p = os.path.join(data_root, rel)
+            if _older_than(p, cutoff):
                 try:
-                    if os.path.getmtime(p) < cutoff:
-                        shutil.rmtree(p, ignore_errors=True)
-                        n_orphans += 1
+                    os.remove(p)
+                    n_orphans += 1
                 except FileNotFoundError:
                     pass
-        # change-data files referenced only by dropped versions (or by
-        # no retained commit at all — lost OCC races); same grace
-        # window, cdc files are staged before their manifest commit
-        n_cdc_deleted = 0
+        for name in staging:
+            p = os.path.join(self.path, name)
+            if _older_than(p, cutoff):
+                shutil.rmtree(p, ignore_errors=True)
+                n_orphans += 1
         cdc_root = os.path.join(self.path, CDC_DIR)
-        for name in self._dead_cdc_dirs(kept_vs, cutoff):
+        for name in dead_cdc:
             shutil.rmtree(os.path.join(cdc_root, name), ignore_errors=True)
-            n_cdc_deleted += 1
         # prune emptied partition dirs so listings stay honest
         for root, dirs, files in os.walk(data_root, topdown=False):
             if root != data_root and not dirs and not files:
@@ -2761,8 +2348,7 @@ class VersionedParquetTable:
         return {
             "n_files_deleted": n_deleted,
             "n_versions_dropped": len(dropped_vs),
-            "n_dv_deleted": n_dv_deleted,
-            "n_cdc_deleted": n_cdc_deleted,
+            "n_cdc_deleted": len(dead_cdc),
             "n_orphans_deleted": n_orphans,
             "oldest_kept_version": kept_vs[0],
         }
@@ -2778,14 +2364,11 @@ class VersionedParquetTable:
             for v in kept_vs
             for p in (self._load_commit(v).get("cdc_files") or [])
         }
-        out = []
-        for name in sorted(set(os.listdir(cdc_root)) - live):
-            try:
-                if os.path.getmtime(os.path.join(cdc_root, name)) < cutoff:
-                    out.append(name)
-            except FileNotFoundError:
-                pass
-        return out
+        return [
+            name
+            for name in sorted(set(os.listdir(cdc_root)) - live)
+            if _older_than(os.path.join(cdc_root, name), cutoff)
+        ]
 
     # -- read API ------------------------------------------------------------
 
@@ -2794,41 +2377,14 @@ class VersionedParquetTable:
         files: list[dict],
         schema: T.StructType,
         *,
-        with_position: bool = False,
         mapping: dict[str, str] | None = None,
     ) -> DataFrame:
-        """One scan over ``files`` with deletion vectors applied.
-
-        Files carrying a ``dv`` get their dead ``(__file, __pos)`` rows
-        anti-joined out (the DV sidecars are tiny — AQE broadcasts
-        them); files without DVs — the common case — take the plain
-        path with zero overhead. ``with_position`` keeps the computed
-        ``__file`` (path relative to ``data/``) and ``__pos``
-        (``_metadata.row_index``) columns so callers can build NEW
-        deletion vectors from what they read.
+        """One parquet scan over ``files`` under ``schema``.
 
         ``mapping`` (logical → physical): files are read under their
         on-disk physical names and aliased back to the logical schema —
         how a rename costs zero data I/O."""
-        data_root = os.path.abspath(os.path.join(self.path, DATA_DIR))
-        mapping = {
-            log: phys
-            for log, phys in (mapping or {}).items()
-            if log != phys
-        }
-        dv_paths = sorted(
-            {p for f in files for p in ((f.get("dv") or {}).get("paths", []))}
-        )
         if not files:
-            out_schema = schema
-            if with_position:
-                out_schema = T.StructType(
-                    schema.fields
-                    + [
-                        T.StructField("__file", T.StringType()),
-                        T.StructField("__pos", T.LongType()),
-                    ]
-                )
             # An empty LocalRelation built on the JVM side, not
             # ``createDataFrame([])``: that is a Python RDD, so every
             # action over it starts Python workers, and Catalyst cannot
@@ -2839,10 +2395,16 @@ class VersionedParquetTable:
             return DataFrame(
                 js.createDataFrame(
                     self.spark._jvm.java.util.ArrayList(),
-                    js.parseDataType(out_schema.json()),
+                    js.parseDataType(schema.json()),
                 ),
                 self.spark,
             )
+        data_root = os.path.abspath(os.path.join(self.path, DATA_DIR))
+        mapping = {
+            log: phys
+            for log, phys in (mapping or {}).items()
+            if log != phys
+        }
         phys_schema = (
             T.StructType(
                 [
@@ -2855,41 +2417,17 @@ class VersionedParquetTable:
             if mapping
             else schema
         )
-        reader = self.spark.read.option("basePath", data_root).schema(phys_schema)
-        df = reader.parquet(
-            *[os.path.join(data_root, f["path"]) for f in files]
+        df = (
+            self.spark.read.option("basePath", data_root)
+            .schema(phys_schema)
+            .parquet(*[os.path.join(data_root, f["path"]) for f in files])
         )
-        if dv_paths or with_position:
-            # _metadata.file_path is a URI (file:///...); strip scheme
-            # and the data-root prefix to recover the manifest-relative
-            # path DVs are keyed on.
-            rel = F.expr(
-                f"substring(regexp_replace(_metadata.file_path, "
-                f"'^[a-zA-Z0-9+.-]+:/+', '/'), {len(data_root) + 2})"
-            )
-            df = df.select(
-                "*",
-                rel.alias("__file"),
-                F.col("_metadata.row_index").alias("__pos"),
-            )
-        if dv_paths:
-            dead = self.spark.read.parquet(
-                *[os.path.join(self.path, DV_DIR, p) for p in dv_paths]
-            ).select("__file", "__pos")
-            df = df.join(dead, on=["__file", "__pos"], how="left_anti")
-            if not with_position:
-                df = df.drop("__file", "__pos")
         if mapping:
-            # physical → logical, AFTER the _metadata-derived columns
-            # (a projection would sever access to the scan's _metadata);
-            # emitted in logical-schema order, extras (__file/__pos) last
-            extras = [c for c in df.columns if c in ("__file", "__pos")]
             df = df.select(
                 *[
                     F.col(mapping.get(f.name, f.name)).alias(f.name)
                     for f in schema.fields
-                ],
-                *extras,
+                ]
             )
         return df
 
@@ -2936,8 +2474,6 @@ class VersionedParquetTable:
         self,
         partitions: list[dict[str, str]],
         version: int | None = None,
-        *,
-        with_position: bool = False,
     ) -> DataFrame:
         """Manifest-level partition pruning: only the named partitions'
         files are even listed — the scan never sees the rest."""
@@ -2951,12 +2487,7 @@ class VersionedParquetTable:
             for f in m["files"]
             if tuple(sorted(f["partition"].items())) in wanted
         ]
-        return self._scan(
-            files,
-            schema,
-            with_position=with_position,
-            mapping=m.get("column_mapping"),
-        )
+        return self._scan(files, schema, mapping=m.get("column_mapping"))
 
     # -- data skipping -------------------------------------------------------
 
@@ -3089,23 +2620,12 @@ class VersionedParquetTable:
         m_to = self._load_manifest(v_to)
         schema = T.StructType.fromJson(json.loads(m_to["schema"]))
 
-        # Identity = (path, deletion-vector state): a DV update changes
-        # a file's VISIBLE rows without changing its path, so such a
-        # file must enter the diff on both sides (read with each
-        # version's own DVs — only the rows the DV killed differ).
-        def ident(f: dict) -> tuple:
-            dv = f.get("dv") or {}
-            return (f["path"], tuple(dv.get("paths", [])))
-
-        fa = {ident(f) for f in m_from["files"]}
-        fb = {ident(f) for f in m_to["files"]}
+        fa = {f["path"] for f in m_from["files"]}
+        fb = {f["path"] for f in m_to["files"]}
         pre_df = _align(
-            self._read_paths(
-                m_from, sorted(p for p, _ in fa - fb), naming=m_to
-            ),
-            schema,
+            self._read_paths(m_from, sorted(fa - fb), naming=m_to), schema
         )
-        post_df = self._read_paths(m_to, sorted(p for p, _ in fb - fa))
+        post_df = self._read_paths(m_to, sorted(fb - fa))
         cols = [f.name for f in schema.fields]
         nonkey = [c for c in cols if c not in keys]
         payload = (
@@ -3152,9 +2672,8 @@ class VersionedParquetTable:
         rel_paths: list[str],
         naming: dict | None = None,
     ) -> DataFrame:
-        """Read a path-subset of ``manifest`` with THAT version's
-        deletion vectors applied — time-travel-correct row content.
-        ``naming`` (a manifest) overrides which version's schema and
+        """Read a path-subset of ``manifest``. ``naming`` (a manifest)
+        overrides which version's schema and
         column mapping label the result: physical names are stable, so
         CDF can read an old snapshot's files under the new version's
         logical names after a rename."""

@@ -110,12 +110,6 @@ def _build_parser() -> argparse.ArgumentParser:
 
     s = sp("export-delta", help="publish as a Delta Lake table (_delta_log)")
     s.add_argument("dest")
-    s.add_argument(
-        "--preserve-dvs",
-        action="store_true",
-        help="zero-rewrite export: byte-copy data files and emit native "
-        "Delta deletion vectors (protocol (3,7) when DVs exist)",
-    )
 
     return p
 
@@ -231,7 +225,7 @@ def main(argv: list[str] | None = None) -> int:
             export_vtable_as_delta,
         )
 
-        export_vtable_as_delta(t, args.dest, preserve_dvs=args.preserve_dvs)
+        export_vtable_as_delta(t, args.dest)
         out = {"path": args.path, "delta_table": args.dest}
     else:  # pragma: no cover — argparse enforces choices
         return 2

@@ -24,18 +24,15 @@ driver.
 Where change rows come from, per commit (Delta CDF's exact model):
 
 - ``cdc_files`` in the commit record (written at commit time by
-  upsert/delete/remove_rows when the table property
+  upsert/delete/update when the table property
   ``enableChangeDataFeed=true``): full ``insert`` / ``delete`` /
   ``update_preimage`` / ``update_postimage`` fidelity.
 - otherwise, a file-level interpretation of the commit's add/remove
   actions: rows of added files are ``insert``, rows of removed files
-  are ``delete`` (both with that side's deletion vectors applied).
-  Correct as a row-multiset diff; updates surface as delete+insert.
+  are ``delete``. Correct as a row-multiset diff, because a committed
+  file never changes under its path; updates surface as delete+insert.
 - commits with ``data_change=false`` (COMPACT/ZORDER re-layouts) are
   skipped, as Delta does.
-- a commit that mutates a file's deletion vector IN PLACE without
-  change files cannot be interpreted file-wise; the stream raises and
-  asks for ``enableChangeDataFeed=true`` (Delta's restriction too).
 
 Registration (per session)::
 
@@ -118,7 +115,7 @@ class _ChangesPartition(InputPartition):
     - table_path: table root (executors resolve files against it)
     - fields: [(logical_name, type_simple_string), ...] in output order
     - cdc: relative path under ``_cdc/`` (kind=cdc)
-    - file / partition / dv / change_type / mapping (kind=file):
+    - file / partition / change_type / mapping (kind=file):
       data-file record bits + the side's classification
     """
 
@@ -242,19 +239,6 @@ class _VTableChangesStreamReader(DataSourceStreamReader):
                 if snapshot_replay
                 else {f["path"]: f for f in t._snapshot_files(prev_v)}
             )
-            dv_mutated = [
-                p
-                for p, f in cur_files.items()
-                if p in prev_files
-                and (f.get("dv") or None) != (prev_files[p].get("dv") or None)
-            ]
-            if dv_mutated:
-                raise ValueError(
-                    f"commit v{v} of {self.path} changes deletion vectors "
-                    "in place without change-data files; set the table "
-                    "property enableChangeDataFeed=true so writers record "
-                    "row-level changes the stream can serve"
-                )
 
             def _file_part(f: dict, change_type: str) -> InputPartition:
                 return _ChangesPartition(
@@ -263,7 +247,6 @@ class _VTableChangesStreamReader(DataSourceStreamReader):
                         "kind": "file",
                         "file": f["path"],
                         "partition": f.get("partition") or {},
-                        "dv": (f.get("dv") or {}).get("paths", []),
                         "change_type": change_type,
                         "mapping": self._mapping,
                     }
@@ -335,15 +318,6 @@ class _VTableChangesStreamReader(DataSourceStreamReader):
         part_vals = spec.get("partition") or {}
         type_of = dict(spec["fields"])
         rows = tbl.to_pylist()
-        # deletion vectors: this side's dead positions never enter the
-        # feed (``__pos`` is the row index within the file, which
-        # pyarrow reads in order)
-        dead: set[int] = set()
-        for dv_rel in spec.get("dv") or []:
-            dv_tbl = pq.read_table(os.path.join(root, "_dv", dv_rel))
-            for r in dv_tbl.to_pylist():
-                if r["__file"] == spec["file"]:
-                    dead.add(r["__pos"])
         ct, v = spec["change_type"], spec["version"]
 
         def _val(r: dict, name: str):
@@ -355,11 +329,7 @@ class _VTableChangesStreamReader(DataSourceStreamReader):
             return None  # schema-evolved column absent from this file
 
         names = [n for n, _ in spec["fields"]]
-        return iter(
-            tuple(_val(r, n) for n in names) + (ct, v)
-            for i, r in enumerate(rows)
-            if i not in dead
-        )
+        return iter(tuple(_val(r, n) for n in names) + (ct, v) for r in rows)
 
 
 class VTableChangesDataSource(DataSource):

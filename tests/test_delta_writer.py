@@ -166,13 +166,15 @@ def test_checkpoint_and_log_cleanup(spark, tmp_path):
 
 
 def test_export_preserve_dvs_roundtrip(spark, tmp_path):
-    """Zero-rewrite export: byte-copied data files + native Delta
-    deletion vectors, read back identically by the independent reader;
-    protocol gates to (3,7) iff a DV exists."""
+    """Export picks its path from the manifest: a table without a
+    column mapping is exported by byte-copying its live data files; a
+    column-mapped one (physical names differ from the logical schema)
+    is re-written through ``write_delta``. Both read back row-equal by
+    the independent reader, on protocol (1,2)."""
+    import filecmp
     import json
 
     from pyspark.sql import functions as F
-    from pyspark.sql import types as T
 
     from delta_lake_pyspark_scd2_spark.sources.delta_reader import (
         DeltaTableReader,
@@ -184,45 +186,50 @@ def test_export_preserve_dvs_roundtrip(spark, tmp_path):
         VersionedParquetTable,
     )
 
-    p = str(tmp_path / "t")
+    def protocol(dest):
+        log = (tmp_path / dest / "_delta_log" / f"{0:020d}.json").read_text()
+        prot = next(
+            json.loads(l)["protocol"] for l in log.splitlines() if "protocol" in l
+        )
+        return prot["minReaderVersion"], prot["minWriterVersion"]
+
     df = spark.range(0, 20).select(
         F.col("id").alias("k"),
         (F.col("id") % 3).cast("string").alias("part"),
         (F.col("id") * 2).alias("v"),
     )
-    VersionedParquetTable.create(spark, df, p, partition_cols=["part"])
-    t = VersionedParquetTable(spark, p)
-    m = t._current()
-    full = t._scan(
-        m["files"],
-        T.StructType.fromJson(json.loads(m["schema"])),
-        with_position=True,
-    )
-    t.remove_rows(full.filter(F.col("k") % 4 == 0).select("__file", "__pos"))
 
-    dest = str(tmp_path / "delta_dv")
-    export_vtable_as_delta(t, dest, preserve_dvs=True)
+    # no column mapping: the live files are copied byte for byte
+    t = VersionedParquetTable.create(
+        spark, df, str(tmp_path / "t"), partition_cols=["part"]
+    )
+    t.delete([("k", "<", 4)])
+    dest = str(tmp_path / "delta_copy")
+    export_vtable_as_delta(t, dest)
     got = DeltaTableReader(spark, dest).read()
     want = sorted(tuple(r) for r in t.read().select("k", "part", "v").collect())
     assert sorted(tuple(r) for r in got.select("k", "part", "v").collect()) == want
+    for f in t._current()["files"]:
+        assert filecmp.cmp(
+            str(tmp_path / "t" / "data" / f["path"]),
+            str(tmp_path / "delta_copy" / f["path"]),
+            shallow=False,
+        )
+    assert protocol("delta_copy") == (1, 2)
 
-    log = (tmp_path / "delta_dv" / "_delta_log" / f"{0:020d}.json").read_text()
-    prot = next(
-        json.loads(l)["protocol"] for l in log.splitlines() if "protocol" in l
+    # column mapping: the export re-writes under the logical names
+    t2 = VersionedParquetTable.create(
+        spark, df, str(tmp_path / "t2"), partition_cols=["part"]
     )
-    assert prot["minReaderVersion"] == 3
-    assert "deletionVectors" in prot["readerFeatures"]
-
-    # a DV-free table exports on the widest-compat protocol
-    p2 = str(tmp_path / "t2")
-    VersionedParquetTable.create(spark, df, p2, partition_cols=["part"])
-    dest2 = str(tmp_path / "delta_plain")
-    export_vtable_as_delta(
-        VersionedParquetTable(spark, p2), dest2, preserve_dvs=True
+    t2.rename_column("v", "value")
+    dest2 = str(tmp_path / "delta_mapped")
+    export_vtable_as_delta(t2, dest2)
+    got2 = DeltaTableReader(spark, dest2).read()
+    want2 = sorted(
+        tuple(r) for r in t2.read().select("k", "part", "value").collect()
     )
-    log2 = (tmp_path / "delta_plain" / "_delta_log" / f"{0:020d}.json").read_text()
-    prot2 = next(
-        json.loads(l)["protocol"] for l in log2.splitlines() if "protocol" in l
-    )
-    assert (prot2["minReaderVersion"], prot2["minWriterVersion"]) == (1, 2)
-    assert DeltaTableReader(spark, dest2).read().count() == 20
+    assert sorted(
+        tuple(r) for r in got2.select("k", "part", "value").collect()
+    ) == want2
+    assert len(want2) == 20
+    assert protocol("delta_mapped") == (1, 2)

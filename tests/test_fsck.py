@@ -1,6 +1,6 @@
 """fsck: read-only integrity audit — clean tables pass, missing data
-files / DV sidecars and corrupted footers are reported, and the CLI
-exits 1 on a broken table."""
+files and corrupted footers are reported, and the CLI exits 1 on a
+broken table."""
 
 from __future__ import annotations
 
@@ -60,31 +60,6 @@ def test_fsck_deep_detects_corrupt_footer(spark, tmp_path):
     assert t.fsck()["ok"]  # existence-only check can't see it
     rep = t.fsck(deep=True)
     assert not rep["ok"] and len(rep["row_mismatches"]) == 1
-
-
-def test_fsck_detects_missing_dv_sidecar(spark, tmp_path):
-    t = _table(spark, str(tmp_path / "t"))
-    dead = (
-        t.read_partitions(t.partitions_of(), with_position=True)
-        .filter("id < 5")
-        .select("__file", "__pos")
-    )
-    t.remove_rows(dead)
-    # remove a dv path the manifest actually references (the write job
-    # also leaves unreferenced empty parts + _SUCCESS markers behind)
-    m = t._load_manifest(t.latest_version())
-    referenced = sorted(
-        p
-        for f in m["files"]
-        for p in (f.get("dv") or {}).get("paths", [])
-    )
-    assert referenced, "remove_rows should have attached dv sidecars"
-    import shutil
-
-    shutil.rmtree(str(tmp_path / "t" / "_dv" / referenced[0]))
-    rep = t.fsck()
-    assert not rep["ok"] and len(rep["missing_dvs"]) >= 1
-    assert rep["missing_dvs"][0]["path"] == referenced[0]
 
 
 def test_fsck_cli_exit_codes(spark, tmp_path):

@@ -103,11 +103,11 @@ def test_identity_rename_drop_guards(spark, tmp_path):
         t.drop_column("rid")
 
 
-def test_identity_semantics_through_dv_upsert(spark, tmp_path):
+def test_identity_semantics_through_upsert(spark, tmp_path):
     """With the identity column omitted, an upsert's MATCHED key keeps
     its existing id (Delta's BY DEFAULT merge semantics — no silent
-    surrogate-key churn), and a ``remove_rows`` commit that appends a
-    NEW key gives it a fresh id and advances the watermark past it."""
+    surrogate-key churn), and an upsert that deletes a key and inserts
+    a NEW one gives it a fresh id and advances the watermark past it."""
     t = VersionedParquetTable.create(
         spark, _rows(spark, 0, 3), str(tmp_path / "t"),
         identity_cols={"rid": {"start": 1, "step": 1}},
@@ -118,14 +118,12 @@ def test_identity_semantics_through_dv_upsert(spark, tmp_path):
     after = {r["k"]: r["rid"] for r in t.read().collect()}
     assert after[0] == before[0]
     assert len(set(after.values())) == 3  # still unique
-    # DV key 1's row and append a new key, rid omitted -> fresh id,
+    # delete key 1 and insert a new key, rid omitted -> fresh id,
     # watermark past it
-    pos = t.read_partitions(t.partitions_of(), with_position=True)
-    t.remove_rows(
-        pos.filter(F.col("k") == 1).select("__file", "__pos"),
-        adds=spark.createDataFrame([(77,)], "k long"),
+    t.upsert(
+        spark.createDataFrame([(77,)], "k long"), ["k"],
+        deletes=spark.createDataFrame([(1,)], "k long"),
     )
-    assert any(f.get("dv") for f in t._current()["files"])
     got = {r["k"]: r["rid"] for r in t.read().collect()}
     assert sorted(got) == [0, 2, 77]
     assert got[77] is not None and got[77] not in before.values()

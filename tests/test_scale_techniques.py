@@ -3,7 +3,6 @@
 
 from __future__ import annotations
 
-import pytest
 from pyspark.sql import functions as F
 
 from delta_lake_pyspark_scd2_spark.operators.skew import salted_join
@@ -181,8 +180,7 @@ def test_dynamic_partition_pruning(spark, tmp_path):
     assert files and all("o_orderpriority=1-URGENT" in f for f in files)
 
 
-@pytest.mark.parametrize("mode", ["rewrite", "dv"])
-def test_upsert_hot_key_target_matches_dict_replay(spark, tmp_path, mode):
+def test_upsert_hot_key_target_matches_dict_replay(spark, tmp_path):
     """``upsert`` on a target with one hot key (600 rows) and 50
     uniform keys (3 rows each): an update + delete batch must leave the
     table a Python dict replay predicts — every row of an updated key
@@ -200,12 +198,12 @@ def test_upsert_hot_key_target_matches_dict_replay(spark, tmp_path, mode):
     upd = [("HOT", -1, "upd"), ("K3", -1, "upd"), ("NEW", -1, "ins")]
     schema = "k string, seq int, val string"
     t = VersionedParquetTable.create(
-        spark, spark.createDataFrame(target, schema), str(tmp_path / mode),
+        spark, spark.createDataFrame(target, schema), str(tmp_path / "t"),
         properties={"enableChangeDataFeed": "true"},
     )
     m = t.upsert(
         spark.createDataFrame(upd, schema), ["k"],
-        deletes=spark.createDataFrame([("K7",)], "k string"), mode=mode,
+        deletes=spark.createDataFrame([("K7",)], "k string"),
     )
 
     replay: dict = {}

@@ -10,22 +10,18 @@ from __future__ import annotations
 import pytest
 from hypothesis import HealthCheck, Phase, example, given, settings
 from hypothesis import strategies as st
-from pyspark.sql import functions as F
 
 from delta_lake_pyspark_scd2_spark.sources.vtable import VersionedParquetTable
 
 # ops: ("append", [ids]) ("upsert", [ids]) ("delete", threshold)
-#      ("compact",) ("restore", back_k) ("dv_remove", [ids])
-#      ("update", threshold)
+#      ("compact",) ("restore", back_k) ("update", threshold)
+#      ("purge", threshold)
 _OP = st.one_of(
     st.tuples(st.just("append"), st.lists(st.integers(0, 30), min_size=1, max_size=4)),
     st.tuples(st.just("upsert"), st.lists(st.integers(0, 30), min_size=1, max_size=4)),
     st.tuples(st.just("delete"), st.integers(0, 300)),
     st.tuples(st.just("compact")),
     st.tuples(st.just("restore"), st.integers(1, 3)),
-    st.tuples(
-        st.just("dv_remove"), st.lists(st.integers(0, 30), min_size=1, max_size=3)
-    ),
     st.tuples(st.just("update"), st.integers(0, 300)),
     st.tuples(st.just("purge"), st.integers(0, 300)),
 )
@@ -54,11 +50,11 @@ def test_random_op_sequences_match_model(spark, tmp_path_factory, ops, data):
 
 # Default-tier smoke variant: pinned sequences only, together covering
 # every op — upserts over ids that appends duplicated, a restore to a
-# version before a deletion vector, and a purge.
+# version before a delete, and a purge.
 @settings(deadline=None, phases=[Phase.explicit], suppress_health_check=list(HealthCheck))
 @example(
-    ops=[("append", [1, 4]), ("upsert", [1, 2, 7]), ("dv_remove", [4]),
-         ("delete", 2), ("restore", 2), ("compact",)],
+    ops=[("append", [1, 4]), ("upsert", [1, 2, 7]), ("delete", 2),
+         ("restore", 2), ("compact",)],
     seq=1000,
 )
 @example(ops=[("append", [3]), ("update", 2), ("purge", 1)], seq=77)
@@ -115,16 +111,7 @@ def _check_ops_match_model(spark, tmp_path_factory, ops, seq):
         elif op[0] == "purge":
             # history-rewriting erasure: matching rows vanish from the
             # LIVE table (one DELETE commit) AND from every recorded
-            # snapshot. Skipped when any retained version carries a
-            # deletion vector (purge refuses DV-covered candidates;
-            # whether the refusal fires depends on file stats, which
-            # the model does not track).
-            if any(
-                f.get("dv")
-                for v_ in t.versions()
-                for f in t._snapshot_files(v_)
-            ):
-                continue
+            # snapshot
             thr = seq + (op[1] % 10)
             t.purge([("val", ">=", thr)])
             for mk in [mk for mk, mv in model.items() if mv[2] >= thr]:
@@ -139,19 +126,6 @@ def _check_ops_match_model(spark, tmp_path_factory, ops, seq):
             # compact may be a no-op (no crowded partition -> same version)
             for _ in range(v_after - v_before):
                 history.append(snap())
-        elif op[0] == "dv_remove":
-            # deletion-vector removal of every row of the chosen ids:
-            # zero rewrite, must be indistinguishable from a real delete
-            # in every snapshot read
-            ids = sorted(set(op[1]))
-            cur = t.read_partitions(t.partitions_of(), with_position=True)
-            dead = cur.filter(F.col("id").isin(ids)).select("__file", "__pos")
-            if dead.isEmpty():
-                continue  # no commit happens for an empty DV
-            t.remove_rows(dead)
-            for mk in [mk for mk, mv in model.items() if mv[0] in ids]:
-                model.pop(mk)
-            history.append(snap())
         elif op[0] == "restore":
             back = min(op[1], t.latest_version())
             target = t.latest_version() - back
@@ -172,7 +146,7 @@ def _check_ops_match_model(spark, tmp_path_factory, ops, seq):
     if d["num_rows"] is not None:
         assert d["num_rows"] == len(model)
     # 4. no op sequence may leave storage inconsistent: every retained
-    # version's data files + DV sidecars present, every live file's
+    # version's data files present, every live file's
     # footer row count matching its manifest stats
     rep = t.fsck(deep=True)
     assert rep["ok"], rep

@@ -5,8 +5,6 @@ from __future__ import annotations
 
 import pytest
 
-from pyspark.sql import functions as F
-
 from delta_lake_pyspark_scd2_spark.sources.vtable import VersionedParquetTable
 from delta_lake_pyspark_scd2_spark.sources.vtable_stream import (
     VTableChangesDataSource,
@@ -171,10 +169,9 @@ def test_bootstrap_and_guard_survive_compact_first_version(spark, tmp_path):
         reader.partitions({"version": 2}, {"version": 4})
 
 
-def test_stream_skips_compaction_and_applies_dv(spark, tmp_path):
+def test_stream_skips_compaction_and_serves_deletes(spark, tmp_path):
     """data_change=false commits (COMPACT) never enter the feed, and a
-    snapshot replay applies deletion vectors (dead rows are not
-    'inserts')."""
+    delete arrives as its change records."""
     from delta_lake_pyspark_scd2_spark.sources.vtable_stream import (
         _VTableChangesStreamReader,
         _changes_schema,
@@ -186,13 +183,8 @@ def test_stream_skips_compaction_and_applies_dv(spark, tmp_path):
     t = VersionedParquetTable.create(
         spark, df, path, properties={"enableChangeDataFeed": "true"}
     )
-    dead = (
-        t._scan(t._current()["files"], t.read().schema, with_position=True)
-        .filter(F.col("id") < 3)
-        .select("__file", "__pos")
-    )
-    t.remove_rows(dead)        # v1: DV + change files
-    t.compact()                # v2: data_change=false
+    t.delete([("id", "<", 3)])  # v1: rewrite + change files
+    t.compact()                 # v2: data_change=false
     reader = _VTableChangesStreamReader(_changes_schema(path), {"path": path})
     parts = reader.partitions({"version": -1}, {"version": 2})
     assert not [p for p in parts if p.spec["version"] == 2]  # compaction skipped
@@ -200,14 +192,21 @@ def test_stream_skips_compaction_and_applies_dv(spark, tmp_path):
     assert sorted((r[0], r[-2]) for r in v1) == [
         (0, "delete"), (1, "delete"), (2, "delete")
     ]
-    # fresh consumer starting AFTER the DV commit: snapshot read of the
-    # post-compaction state must not resurrect dead rows
+    # fresh consumer starting AFTER the delete: the compaction alone
+    # feeds nothing
     reader2 = _VTableChangesStreamReader(_changes_schema(path), {"path": path})
     parts2 = reader2.partitions({"version": 1}, {"version": 2})
     assert [p.spec["kind"] for p in parts2] == ["empty"]
 
 
 def test_stream_without_cdf_rejects_inplace_dv_commits(spark, tmp_path):
+    """A commit that re-lists a live file with a deletion vector (how
+    earlier releases wrote a row delete without change-data files) is
+    refused by the stream, naming the table, not fed as if every row
+    of the file were still live."""
+    import json
+    import re
+
     from delta_lake_pyspark_scd2_spark.sources.vtable_stream import (
         _VTableChangesStreamReader,
         _changes_schema,
@@ -218,14 +217,13 @@ def test_stream_without_cdf_rejects_inplace_dv_commits(spark, tmp_path):
         spark.createDataFrame([(i, "v") for i in range(10)], "id long, s string"),
         path,
     )
-    dead = (
-        t._scan(t._current()["files"], t.read().schema, with_position=True)
-        .filter(F.col("id") < 3)
-        .select("__file", "__pos")
-    )
-    t.remove_rows(dead)  # DV mutation, no change files (CDF off)
+    v0 = t._load_commit(0)
+    dv = {"paths": ["dv-0"], "count": 3}
+    with open(t._manifest_path(1), "w") as fh:
+        json.dump({**v0, "version": 1, "operation": "DELETE_ROWS",
+                   "add": [{**f, "dv": dv} for f in v0["add"]], "remove": []}, fh)
     reader = _VTableChangesStreamReader(_changes_schema(path), {"path": path})
-    with pytest.raises(ValueError, match="enableChangeDataFeed"):
+    with pytest.raises(ValueError, match=re.escape(path) + " v1: .* deletion vector"):
         reader.partitions({"version": 0}, {"version": 1})
 
 
